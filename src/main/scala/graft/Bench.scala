@@ -59,8 +59,10 @@ object Bench {
     val loadAt = scala.collection.mutable.Map.empty[String, List[String]]
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       System.err.println(s"BENCH-START $name")
+      // a non-numeric reading (unreadable /proc/loadavg) is recorded as
+      // JSON null, so one failed read cannot break the artifact
       loadAt(name) = loadAt.getOrElse(name, Nil) :+
-        loadavg().split(",").head
+        Some(loadavg().split(",").head).filter(_.matches("""\d+(\.\d+)?""")).getOrElse("null")
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
         case t: Throwable =>

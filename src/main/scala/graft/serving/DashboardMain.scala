@@ -33,26 +33,28 @@ object DashboardMain {
     }
     val eventsPerSec = 200
 
-    val spark = SparkSession.builder()
+    val spark = graft.EngineSession.withEngineConf(SparkSession.builder()
       .master("local[4]")
       .appName("graft-dashboard")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "4"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val input = MemoryStream[LogEvent]
+    // wire JSON enters the stream as-is and is parsed in-stream by the
+    // same P1 path the batch queries use — no driver-side collect
+    val input = MemoryStream[String]
+    val events = Tables.parseJsonEvents(input.toDF())
+      .withColumnRenamed(LogEvent.ExperimentId, "experimentId").as[LogEvent]
     val memStore = new MetricsStore
     val sink: graft.streaming.KeyValueMetricsSink = redis.getOrElse(memStore)
     val reader: graft.streaming.MetricsReader = redis.getOrElse(memStore)
-    // the five reference branches + (in-memory mode) the theta-sketch
-    // overlap twin, so the page's variantsOverlapApprox panel is live
-    val queries = StreamingMetrics.startPipeline(input.toDS(), sink) ++
+    // the reference fan-out + (in-memory mode) the theta-sketch overlap
+    // twin, so the page's variantsOverlapApprox panel is live
+    val queries = StreamingMetrics.startPipeline(events, sink) ++
       (if (redis.isEmpty)
-        Seq(StreamingMetrics.startVariantSketches(input.toDS(), memStore,
+        Seq(StreamingMetrics.startVariantSketches(events, memStore,
           "theta_variants"))
       else Nil)
     val server = new DashboardServer(reader, port).start()
@@ -72,15 +74,10 @@ object DashboardMain {
           if (batch == 0) (eventsPerSec * 180 / 10,
             System.currentTimeMillis() / 1000L - 180L, eventsPerSec / 10)
           else (eventsPerSec, System.currentTimeMillis() / 1000L, eventsPerSec)
-        val msgs = Loggen.wireMessages(n,
+        input.addData(Loggen.wireMessages(n,
           seed = batch.toLong, // fresh draw per batch
           startEpochSec = startSec,
-          eventsPerSec = rate)
-        val events = Tables.parseJsonEvents(msgs.toDF("value"))
-          .collect()
-          .map(r => LogEvent(r.getString(0), r.getString(1), r.getString(2),
-            java.sql.Timestamp.from(r.getTimestamp(3).toInstant)))
-        input.addData(events.toSeq)
+          eventsPerSec = rate))
         queries.foreach(_.processAllAvailable())
         batch += 1
         val elapsed = (System.currentTimeMillis() - t0) / 1000L

@@ -42,7 +42,10 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
   private val MinuteKeyFmt = DateTimeFormatter.ofPattern("yyyy_MM_dd'T'HH_mm")
   private val IsoFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:00'Z'")
 
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = {
+    DashboardServer.enableNoDelay()
+    HttpServer.create(new InetSocketAddress(port), 0)
+  }
 
   /** now-1 … now-N floored to the minute, recent-first
     * (controller `timePatternForLastMinutes`, :144-152). */
@@ -51,11 +54,17 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
     (1 to lastMinutes).map(nowM.minusMinutes(_))
   }
 
+  /** `lastMinutes`, 10 when absent. Each minute costs one store read, so
+    * a value that is not an integer in 1..[[DashboardServer.MaxLastMinutes]]
+    * is refused with 400 before any read. */
   private def lastMinutesParam(ex: HttpExchange): Int = {
     val q = Option(ex.getRequestURI.getQuery).getOrElse("")
     q.split("&").collectFirst {
       case p if p.startsWith("lastMinutes=") =>
-        p.stripPrefix("lastMinutes=").toInt
+        val v = p.stripPrefix("lastMinutes=")
+        v.toIntOption.filter(n => n >= 1 && n <= DashboardServer.MaxLastMinutes)
+          .getOrElse(throw new BadRequest(
+            s"lastMinutes must be an integer in 1..${DashboardServer.MaxLastMinutes}"))
     }.getOrElse(10)
   }
 
@@ -77,8 +86,10 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
   private def route(path: String)(handler: HttpExchange => String): Unit =
     server.createContext(path, (ex: HttpExchange) =>
       try respond(ex, handler(ex))
-      catch { case t: Throwable =>
-        respond(ex, s"""{"error":"${t.getClass.getSimpleName}"}""", 500)
+      catch {
+        case BadRequest(msg) => respond(ex, s"""{"error":"$msg"}""", 400)
+        case t: Throwable =>
+          respond(ex, s"""{"error":"${t.getClass.getSimpleName}"}""", 500)
       })
 
   route("/metrics/timeseries/visits") { ex =>
@@ -132,3 +143,21 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
   /** Bound port (useful with port=0 for tests). */
   def boundPort: Int = server.getAddress.getPort
 }
+
+object DashboardServer {
+  /** Upper bound of `lastMinutes`: one day of minutes. */
+  val MaxLastMinutes = 1440
+
+  /** Turns on TCP_NODELAY for the JDK HTTP server's connections, unless
+    * `sun.net.httpserver.nodelay` is already set. Without it, Nagle's
+    * algorithm holds the reply to a request that follows another on a
+    * keep-alive connection until the client's delayed ACK (~40 ms), so
+    * every panel after the first of a dashboard refresh stalls. The JDK
+    * reads the property once, when its first server is created. */
+  private def enableNoDelay(): Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
+}
+
+/** A request the server refuses with 400. */
+private final case class BadRequest(msg: String) extends Exception(msg)

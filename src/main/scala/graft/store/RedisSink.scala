@@ -133,8 +133,10 @@ final class RespClient(host: String, port: Int, timeoutMs: Int = 5000) {
   * Serializable by construction: only (host, port) are captured by the
   * foreachBatch closure; the socket is rebuilt lazily per JVM after
   * deserialization. Methods synchronize on the connection because one
-  * sink instance serves several concurrent streaming queries (the
-  * reference pipeline fans out to five).
+  * sink instance serves concurrent callers: the pipeline's fan-out
+  * query writes its per-batch INCRBYs through it while the dashboard
+  * reads through it. The members themselves bypass this connection —
+  * they ship from the partition tasks ([[partitionWriter]]).
   *
   * Scale: per-verb calls are one round trip each; [[writeBatch]] is the
   * micro-batch verb — the whole batch's key set in ONE pipelined flush.

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.LogEvent
@@ -86,15 +87,15 @@ trait KeyValueMetricsSink extends Serializable {
     * sink can only merge driver-side (an in-memory store: executor
     * copies of its maps would be lost with the task JVM... and in
     * local mode closures are still serialized per task). When Some,
-    * the pipeline's set/HLL branches ship members worker→store via
-    * `foreachPartition` — the reference's RedisIO shape
-    * (MetricsCalculationPipeline.java:54-57), with NO driver hop: at
-    * 100 TB the driver never materializes a member list. */
+    * the pipeline's fan-out pass ships its SADD/PFADD members
+    * worker→store from each partition task — the reference's RedisIO
+    * shape (MetricsCalculationPipeline.java:54-57), with NO driver hop:
+    * at 100 TB the driver never materializes a member list. */
   def partitionWriter: Option[PartitionWriterFactory] = None
 }
 
-/** Serializable factory captured by `foreachPartition` closures; opens
-  * one writer per partition task on the executor. */
+/** Serializable factory captured by the fan-out pass's partition tasks;
+  * opens one writer per task on the executor. */
 trait PartitionWriterFactory extends Serializable {
   def open(): PartitionMetricsWriter
 }
@@ -216,17 +217,21 @@ class MetricsStore extends KeyValueMetricsSink with MetricsReader {
 
 /** Structured Streaming assembly of the reference pipeline
   * (MetricsCalculationPipeline.java:45-193): one unbounded LogEvent
-  * stream fanned out into metric branches.
+  * stream, read and parsed once per micro-batch and multiplexed into its
+  * metric branches, as the reference's one Dataflow job multiplexes it.
   *
   * Architecture mapping:
-  *  - stateless branches (visits counter, per-dimension member sets)
-  *    mirror the reference exactly: a projection per branch, with the
-  *    mergeable store applying INCRBY/SADD per micro-batch;
+  *  - the stateless branches (visits counter, per-dimension member sets
+  *    and, on a partition-capable store, the PFADD members) are ONE
+  *    streaming query whose micro-batch is a single pass over its
+  *    partitions: one Spark job, no shuffle ([[startPipeline]]);
   *  - the exact distinct-users branch is the idiomatic-Spark
   *    alternative: `flatMapGroupsWithState` holding the member set in
   *    Spark's own state store, emitting updated cardinalities;
-  *  - the approx branch uses `approx_count_distinct` (HLL++) in an
-  *    update-mode aggregate — Spark's native PFADD/PFCOUNT.
+  *  - on a driver-merged store the approx branch uses
+  *    `approx_count_distinct` (HLL++) in an update-mode aggregate —
+  *    Spark's native PFADD/PFCOUNT, and the pipeline's only stateful
+  *    query.
   *
   * No watermark by default: the reference accepts late data forever
   * (no Beam windowing/triggers — SURVEY.md §2.3), and every merge is
@@ -239,135 +244,151 @@ object StreamingMetrics {
   private def minuteKey(prefix: String) =
     concat_ws("_", lit(prefix), Windows.minuteKey(col(LogEvent.Ts)))
 
-  /** Executor-side member shipping: fold this partition task's
-    * (key, member) rows into bounded per-key buffers, emitting a
-    * command whenever a buffer fills (so a hot key never accumulates
-    * unboundedly), then flush everything in the writer's single
-    * pipelined close. Key cardinality per partition is minutes ×
-    * dimensions — small; the MEMBER stream is what's big, and it never
-    * exists anywhere but this iterator and the wire. */
-  private def shipMembers(rows: Iterator[org.apache.spark.sql.Row],
-      factory: PartitionWriterFactory, approx: Boolean,
-      flushAt: Int = 512): Unit = {
-    val w = factory.open()
-    try {
-      val buf = scala.collection.mutable.Map
-        .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-      def emit(k: String, b: scala.collection.mutable.ArrayBuffer[String]): Unit =
-        if (b.nonEmpty) { if (approx) w.pfadd(k, b.toSeq) else w.sadd(k, b.toSeq) }
-      rows.foreach { r =>
-        val k = r.getString(0)
-        val b = buf.getOrElseUpdate(k,
-          new scala.collection.mutable.ArrayBuffer[String](16))
-        b += r.getString(1)
-        if (b.length >= flushAt) { emit(k, b); b.clear() }
-      }
-      buf.foreach { case (k, b) => emit(k, b) }
-    } finally w.close()
+  /** Name of the fused stateless query: its checkpoint subdirectory
+    * under `checkpointRoot` and its INCRBY ledger id. */
+  val FanOutQuery = "metrics_fanout"
+  /** Name of the update-mode HLL query of driver-merged stores. */
+  val HllQuery = "hll_users_minute"
+  /** Checkpoint subdirectories of the earlier one-query-per-branch
+    * layout, which the fused query cannot resume. */
+  private val LegacyBranches =
+    Seq("visits_counter", "set_users_minute", "set_users_variant", "set_experiments_minute")
+
+  /** `concat_ws("_", prefix, part)`, the pipeline's key language: a null
+    * part leaves the bare prefix. */
+  private def storeKey(prefix: String, part: String): String =
+    if (part == null) prefix else prefix + "_" + part
+
+  /** One minute's keys in a partition task, built once per task, and its
+    * visit count there. */
+  private final class MinuteSlot(minute: String) {
+    val visits = storeKey("visitCounter", minute)
+    val users = storeKey("set_dthr", minute)
+    val experiments = storeKey("set_experiments", minute)
+    val hll = storeKey("hll_dthr", minute)
+    var count = 0L
   }
 
-  /** Stateless branch projections (P2–P8) + store merges, one streaming
-    * query per reference pipeline branch family. Returns the started
-    * queries; callers own their lifecycle. With `checkpointRoot` each
-    * branch checkpoints under its own subdirectory — the restartable
-    * production form of the WHOLE fan-out (each branch recovers its
-    * committed offsets and, for the update-mode approx branch, its
-    * state store, independently). Restart safety per branch: INCRBY
-    * rides the `writeBatchOnce` (queryName, batchId) ledger; SADD/
-    * PFADD/puts are idempotent — so an abrupt kill mid-batch
-    * re-delivers but never double-counts (`StreamingSpec` soak). */
+  /** Members per SADD/PFADD command a partition task ships at most. */
+  private val FlushAt = 512
+
+  /** Per-key member sets of one partition task, deduplicated locally.
+    * With `ship`, a set goes out whenever it holds [[FlushAt]] members
+    * (so a hot key never buffers unboundedly) and on [[drain]]; without
+    * it the sets stay whole for the driver. */
+  private final class MemberSets(ship: Option[(String, Iterable[String]) => Unit]) {
+    val byKey = mutable.HashMap.empty[String, mutable.HashSet[String]]
+    def add(key: String, member: String): Unit = if (member != null) {
+      val s = byKey.getOrElseUpdate(key, mutable.HashSet.empty[String])
+      if (s.add(member) && s.size >= FlushAt) ship.foreach { f => f(key, s.toSeq); s.clear() }
+    }
+    def drain(): Unit = ship.foreach { f =>
+      byKey.foreach { case (k, s) => if (s.nonEmpty) f(k, s.toSeq) }
+      byKey.clear()
+    }
+    def result: Map[String, Set[String]] = byKey.iterator.map { case (k, s) => k -> s.toSet }.toMap
+  }
+
+  /** The fan-out pass over one partition of a micro-batch (rows: minute,
+    * uid, variant, experiment id). Every row bumps its minute's visit
+    * count and adds its members to the SADD families' sets, and with a
+    * partition writer also to the PFADD family's. With a writer the sets
+    * ship from this task (no member reaches the driver) and only the
+    * visit counts return; without one the SADD sets return too. SADD and
+    * PFADD are idempotent, so a member sent by several tasks or flushes
+    * needs no global `distinct`. */
+  private def fanOutPartition(rows: Iterator[Row], factory: Option[PartitionWriterFactory])
+      : (Map[String, Long], Map[String, Set[String]]) = {
+    val writer = factory.map(_.open())
+    try {
+      val minutes = mutable.HashMap.empty[String, MinuteSlot]
+      val variants = mutable.HashMap.empty[String, String]
+      val sets = new MemberSets(writer.map(w => w.sadd _))
+      val hlls = new MemberSets(writer.map(w => w.pfadd _))
+      rows.foreach { r =>
+        val minute = r.getString(0)
+        val uid = r.getString(1)
+        val slot = minutes.getOrElseUpdate(minute, new MinuteSlot(minute))
+        slot.count += 1
+        sets.add(slot.users, uid)
+        sets.add(variants.getOrElseUpdate(r.getString(2), storeKey("set_var", r.getString(2))), uid)
+        sets.add(slot.experiments, r.getString(3))
+        if (writer.isDefined) hlls.add(slot.hll, uid)
+      }
+      sets.drain(); hlls.drain()
+      (minutes.valuesIterator.map(s => s.visits -> s.count).toMap, sets.result)
+    } finally writer.foreach(_.close())
+  }
+
+  /** The reference's fan-out (P2–P8) and its store merges. The
+    * stateless branches — INCRBY visit counters, SADD `set_dthr` /
+    * `set_var` / `set_experiments` and, on a partition-capable store,
+    * PFADD `hll_dthr` — run as ONE streaming query, [[FanOutQuery]], that
+    * reads and parses each event once. Its micro-batch is one Spark job:
+    * each partition task makes a single pass ([[fanOutPartition]]),
+    * ships its SADD/PFADD members worker→store through
+    * `store.partitionWriter` (the reference's RedisIO shape,
+    * MetricsCalculationPipeline.java:54-57) and returns its per-minute
+    * visit counts, which the driver sums and applies through
+    * `writeBatchOnce` under the (FanOutQuery, batchId) ledger — so a
+    * re-delivered micro-batch is skipped, not double-counted. A store
+    * without a partition writer gets its member sets from the same pass
+    * and merges them in that one `writeBatchOnce` call; its HLL branch
+    * is Spark's update-mode `approx_count_distinct` aggregate,
+    * [[HllQuery]], the only second query.
+    *
+    * Returns the started queries; callers own their lifecycle. With
+    * `checkpointRoot` each query checkpoints under `checkpointRoot/<name>`
+    * — the restartable production form: an abrupt kill re-delivers at
+    * most the in-flight batch, which the ledger (INCRBY) and idempotence
+    * (SADD, PFADD, puts) absorb. A `checkpointRoot` written by the
+    * earlier one-query-per-branch layout (`visits_counter`,
+    * `set_users_minute`, … subdirectories) cannot be resumed and is
+    * refused. */
   def startPipeline(events: Dataset[LogEvent], store: KeyValueMetricsSink,
       watermark: Option[String] = None,
       checkpointRoot: Option[String] = None): Seq[StreamingQuery] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+    checkpointRoot.foreach { r =>
+      val root = new org.apache.hadoop.fs.Path(r)
+      val fs = root.getFileSystem(events.sparkSession.sparkContext.hadoopConfiguration)
+      def exists(name: String) = fs.exists(new org.apache.hadoop.fs.Path(root, name))
+      val legacy = LegacyBranches.filter(exists)
+      require(legacy.isEmpty || exists(FanOutQuery),
+        s"checkpoint root $r holds per-branch checkpoints (${legacy.mkString(", ")}) of " +
+          s"the earlier one-query-per-branch pipeline, which the fused '$FanOutQuery' " +
+          "query cannot resume; start it on a fresh checkpoint root")
+    }
     def withCk[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T],
         name: String): org.apache.spark.sql.streaming.DataStreamWriter[T] =
       checkpointRoot.fold(w)(r => w.option("checkpointLocation", s"$r/$name"))
     val ev0 = events.toDF()
       .withColumnRenamed("experimentId", LogEvent.ExperimentId)
     val ev = watermark.fold(ev0)(w => ev0.withWatermark(LogEvent.Ts, w))
+    val factory = store.partitionWriter
 
-    // visitCounter branch (A1): per-batch partial count → INCRBY,
-    // applied under the (queryName, batchId) ledger so a re-delivered
-    // micro-batch (foreachBatch is at-least-once under mid-batch crash)
-    // is skipped, not double-counted. The collect here is the
-    // POST-aggregation per-minute counts — bounded by key cardinality,
-    // not data volume — which is why the driver hop is acceptable on
-    // this branch and only this branch.
-    val visits = withCk(ev
-      .select(minuteKey("visitCounter").as("k"))
+    val fanOut = withCk(ev
+      .select(Windows.minuteKey(col(LogEvent.Ts)), col(LogEvent.Uid),
+        col(LogEvent.Variant), col(LogEvent.ExperimentId))
       .writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val _ = store.writeBatchOnce("visits_counter", batchId,
-          incrs = batch.groupBy("k").count().collect()
-            .toSeq.map(r => r.getString(0) -> r.getLong(1)))
-      }, "visits_counter")
-      .queryName("visits_counter").start()
+        val shares = batch.rdd
+          .mapPartitions(rows => Iterator.single(fanOutPartition(rows, factory)))
+          .collect().toSeq
+        val _ = store.writeBatchOnce(FanOutQuery, batchId,
+          incrs = shares.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _).toSeq,
+          sadds = shares.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ ++ _).toSeq)
+      }, FanOutQuery).queryName(FanOutQuery).start()
 
-    // set branches (A3/A5/A7 exact families): distinct members → SADD.
-    // With a partition-capable store the members ship worker→store
-    // directly (the reference's RedisIO shape: every executor writes
-    // its partitions, MetricsCalculationPipeline.java:54-57) — the
-    // driver NEVER materializes a member list, which is the only shape
-    // that survives a hot minute at 100 TB. SADD is idempotent and
-    // commutative, so partitions of the same key union server-side and
-    // at-least-once redelivery is safe without a ledger. In-memory
-    // stores (no partitionWriter) merge driver-side as before.
-    def setBranch(name: String, keyCol: org.apache.spark.sql.Column,
-        memberCol: org.apache.spark.sql.Column): StreamingQuery = {
-      val proj = ev.select(keyCol.as("k"), memberCol.as("m"))
-      withCk(store.partitionWriter match {
-        case Some(factory) =>
-          proj.writeStream.outputMode("append")
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.distinct().foreachPartition(
-                (rows: Iterator[org.apache.spark.sql.Row]) =>
-                  shipMembers(rows, factory, approx = false))
-            }
-        case None =>
-          proj.writeStream.outputMode("append")
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              store.writeBatch(sadds = batch.distinct().collect()
-                .groupBy(_.getString(0)).toSeq
-                .map { case (k, rows) => k -> rows.toSeq.map(_.getString(1)) })
-            }
-      }, name).queryName(name).start()
-    }
+    val approxUsers = if (factory.isDefined) Nil else Seq(withCk(ev
+      .groupBy(minuteKey("hll_dthr").as("k"))
+      .agg(approx_count_distinct(col(LogEvent.Uid)).as("v"))
+      .writeStream.outputMode("update")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        store.writeBatch(puts = batch.collect().toSeq
+          .map(r => r.getString(0) -> r.getLong(1)))
+      }, HllQuery).queryName(HllQuery).start())
 
-    val usersPerMinute = setBranch("set_users_minute",
-      minuteKey("set_dthr"), col(LogEvent.Uid))
-    val usersPerVariant = setBranch("set_users_variant",
-      concat_ws("_", lit("set_var"), col(LogEvent.Variant)), col(LogEvent.Uid))
-    val experimentsPerMinute = setBranch("set_experiments_minute",
-      minuteKey("set_experiments"), col(LogEvent.ExperimentId))
-
-    // approx distinct branch (A2). Partition-capable store: the
-    // reference shape VERBATIM — raw members ship worker→store as
-    // PFADD and the store's sketches merge server-side across writers
-    // and batches (MetricsCalculationPipeline.java:73-87); idempotent,
-    // so no ledger. In-memory store: Spark's own HLL aggregate
-    // (update mode) holds the merged sketch and upserts the estimate.
-    val approxUsers = withCk(store.partitionWriter match {
-      case Some(factory) =>
-        ev.select(minuteKey("hll_dthr").as("k"), col(LogEvent.Uid).as("m"))
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.distinct().foreachPartition(
-              (rows: Iterator[org.apache.spark.sql.Row]) =>
-                shipMembers(rows, factory, approx = true))
-          }
-      case None =>
-        ev.groupBy(minuteKey("hll_dthr").as("k"))
-          .agg(approx_count_distinct(col(LogEvent.Uid)).as("v"))
-          .writeStream.outputMode("update")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            store.writeBatch(puts = batch.collect().toSeq
-              .map(r => r.getString(0) -> r.getLong(1)))
-          }
-    }, "hll_users_minute").queryName("hll_users_minute").start()
-
-    Seq(visits, usersPerMinute, usersPerVariant, experimentsPerMinute, approxUsers)
+    fanOut +: approxUsers
   }
 
   /** The visits branch with a checkpoint location — the restartable

@@ -11,12 +11,13 @@ import graft.streaming.MetricsStore
   * (nil→0 zero-fill, recent-first times, pairwise overlap). */
 class DashboardServerSpec extends AnyFunSuite {
 
-  private def get(port: Int, path: String): String = {
+  private def fetch(port: Int, path: String): HttpResponse[String] = {
     val client = HttpClient.newHttpClient()
     client.send(
       HttpRequest.newBuilder(URI.create(s"http://localhost:$port$path")).GET().build(),
-      HttpResponse.BodyHandlers.ofString()).body()
+      HttpResponse.BodyHandlers.ofString())
   }
+  private def get(port: Int, path: String): String = fetch(port, path).body()
 
   test("all five endpoints serve the store with reference semantics") {
     val store = new MetricsStore
@@ -64,6 +65,23 @@ class DashboardServerSpec extends AnyFunSuite {
       // malformed query param: a JSON error payload, not a hung socket
       val bad = get(port, "/metrics/timeseries/visits?lastMinutes=abc")
       assert(bad.contains("\"error\""), s"expected error payload, got: $bad")
+      // ...refused as the client's error (400), as is a window outside
+      // 1..MaxLastMinutes: one request cannot ask for unbounded reads
+      for {
+        e <- Seq("visits", "users", "experiments", "times")
+        v <- Seq("abc", "2.5", "", "0", "-3", "1441", "99999999999")
+      } {
+        val r = fetch(port, s"/metrics/timeseries/$e?lastMinutes=$v")
+        assert(r.statusCode === 400, s"$e?lastMinutes=$v -> ${r.statusCode} ${r.body}")
+        assert(r.body.contains("\"error\""), r.body)
+      }
+      assert(DashboardServer.MaxLastMinutes === 1440)
+      val widest = fetch(port, "/metrics/timeseries/times?lastMinutes=1440")
+      assert(widest.statusCode === 200)
+      assert(widest.body.split(",").length === 1440)
+      assert(fetch(port, "/metrics/timeseries/visits?lastMinutes=1").statusCode === 200)
+      // replies go out without Nagle's delay (TCP_NODELAY on the server)
+      assert(System.getProperty("sun.net.httpserver.nodelay") === "true")
       // the browser face: self-contained page wired to every endpoint
       val page = get(port, "/")
       assert(page.startsWith("<!DOCTYPE html>"))

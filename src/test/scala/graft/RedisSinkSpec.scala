@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.store.{RedisMetricsSink, RespClient, RespReply}
 import graft.streaming.StreamingMetrics
@@ -203,14 +207,15 @@ class RedisSinkSpec extends AnyFunSuite {
     import spark.implicits._
     def ev(uid: String, exp: String, variant: String, ts: String) =
       LogEvent(uid, exp, variant, java.sql.Timestamp.valueOf(ts))
-    // enough events to spread across many shuffle partitions
+    // a four-partition source: the fan-out pass has no shuffle, so its
+    // partition tasks are the source's partitions
     val events = (1 to 400).map { i =>
       ev(s"u${i % 50}", s"e${i % 5}", (i % 4).toString,
         f"2026-08-12 10:${15 + i % 3}%02d:${i % 60}%02d")
     }
     withServer { (srv, sink) =>
       assert(sink.partitionWriter.isDefined)
-      val input = MemoryStream[LogEvent]
+      val input = MemoryStream[LogEvent](4)
       val queries = StreamingMetrics.startPipeline(input.toDS(), sink)
       try {
         input.addData(events)
@@ -245,5 +250,168 @@ class RedisSinkSpec extends AnyFunSuite {
       assert(srv.connectionsAccepted > 2,
         s"expected parallel partition connections, saw ${srv.connectionsAccepted}")
     }
+  }
+
+  private def ev(uid: String, exp: String, variant: String, ts: String) =
+    LogEvent(uid, exp, variant, java.sql.Timestamp.valueOf(ts))
+
+  test("the fan-out is one streaming query running one shuffle-free job per micro-batch") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    def cycle(c: Int) = (1 to 300).map { i =>
+      ev(s"u${i % 40}", s"e${i % 3}", (i % 4).toString,
+        f"2026-08-12 10:${15 + c}%02d:${i % 60}%02d")
+    }
+    withServer { (srv, sink) =>
+      val input = MemoryStream[LogEvent](4)
+      val queries = StreamingMetrics.startPipeline(input.toDS(), sink)
+      val queryId = queries.head.id.toString
+      // the engine's own counters, for this query's jobs only
+      val stageJob = new ConcurrentHashMap[Int, Int]
+      val jobsStarted, jobsEnded, stagesDone = new AtomicInteger
+      val shuffleBytes = new AtomicLong
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("sql.streaming.queryId") == queryId)) {
+            jobsStarted.incrementAndGet()
+            e.stageIds.foreach(stageJob.put(_, e.jobId))
+          }
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          if (stageJob.containsKey(e.stageInfo.stageId)) {
+            stagesDone.incrementAndGet()
+            val m = e.stageInfo.taskMetrics
+            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
+          }
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          if (stageJob.containsValue(e.jobId)) jobsEnded.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        assert(queries.map(_.name) === Seq(StreamingMetrics.FanOutQuery))
+        (1 to 2).foreach { c =>
+          input.addData(cycle(c))
+          queries.head.processAllAvailable()
+        }
+        // the listener bus is asynchronous: wait until it delivered every
+        // started job's end, then a little longer for stragglers
+        val deadline = System.nanoTime() + 10000000000L
+        while ((jobsEnded.get < 2 || jobsEnded.get < jobsStarted.get) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        Thread.sleep(300)
+        val batches = queries.head.recentProgress.count(_.numInputRows > 0)
+        assert(batches === 2)
+        assert(jobsStarted.get === batches, "one Spark job per micro-batch")
+        assert(jobsEnded.get === batches)
+        assert(stagesDone.get === batches, "one stage per job: nothing shuffles")
+        assert(shuffleBytes.get === 0L)
+        // and the pass wrote every branch
+        (1 to 2).foreach { c =>
+          val mk = f"2026_08_12T10_${15 + c}%02d"
+          assert(sink.counter(s"visitCounter_$mk") === 300L)
+          assert(sink.scard(s"set_dthr_$mk") === 40L)
+          assert(sink.scard(s"set_experiments_$mk") === 3L)
+          assert(srv.hlls(s"hll_dthr_$mk").size === 40)
+        }
+        (0 until 4).foreach(v => assert(sink.scard(s"set_var_$v") === 10L))
+      } finally {
+        queries.foreach(_.stop())
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+  }
+
+  test("checkpointed fan-out on Redis: a crash inside and after a batch's write and a " +
+    "kill mid-stream leave every counter exact") {
+    import spark.implicits._
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_redis_src")
+    val root = java.nio.file.Files.createTempDirectory("graft_redis_ck").toString
+    def wire(i: Int): String = {
+      val iso = f"2026-08-12T10:${15 + i / 40}%02d:${i % 60}%02dZ"
+      s"""{"uid":"u${i % 23}","experiment_id":"e${i % 4}","variant":"${i % 3}","timestamp":"$iso"}"""
+    }
+    val perSlice = 10
+    def writeSlice(b: Int): Unit = {
+      val tmp = java.nio.file.Files.createTempFile("graft_redis_stage", ".json")
+      java.nio.file.Files.write(tmp, (0 until perSlice).map(i => wire(b * perSlice + i))
+        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.move(tmp, srcDir.resolve(f"slice$b%03d.json"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    def fileEvents = graft.sources.Tables.parseJsonEvents(
+        spark.readStream.option("maxFilesPerTrigger", 1).text(srcDir.toString))
+      .withColumnRenamed(LogEvent.ExperimentId, "experimentId").as[LogEvent]
+    val srv = new RespTestServer
+    val sink = new CrashAfterWriteSink(srv.port)
+    def start() = StreamingMetrics.startPipeline(fileEvents, sink, checkpointRoot = Some(root))
+    var queries = start()
+    /** Drains the source; true if the query died doing so (and was restarted). */
+    def drain(): Boolean =
+      try { queries.foreach(_.processAllAvailable()); false }
+      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException =>
+        queries.foreach(q => if (q.isActive) q.stop())
+        queries = start()
+        true
+      }
+    val nSlices = 16
+    try {
+      (0 until 4).foreach { b => writeSlice(b); assert(!drain()) }
+      // crash AFTER the INCRBY transaction committed, before the batch's
+      // commit log: the batch is redelivered and the ledger must skip it
+      sink.crashAfter = Set(4L)
+      writeSlice(4)
+      assert(drain(), "the injected crash after the write did not fire")
+      assert(!drain())
+      // crash INSIDE the write: the server drops the connection at EXEC,
+      // nothing of the transaction applies, and the redelivery must apply it
+      srv.crashOnExec = true
+      writeSlice(5)
+      assert(drain(), "the injected crash at EXEC did not fire")
+      srv.crashOnExec = false
+      assert(!drain())
+      (6 until 9).foreach { b => writeSlice(b); assert(!drain()) }
+      // abrupt kill: slices land but are not drained before stop
+      (9 until 12).foreach(writeSlice)
+      queries.foreach(_.stop())
+      queries = start()
+      (12 until nSlices).foreach { b => writeSlice(b); assert(!drain()) }
+      assert(!drain())
+    } finally {
+      queries.foreach(q => if (q.isActive) q.stop())
+      sink.close(); srv.close()
+    }
+    assert(sink.crashAfter.isEmpty)
+    val all = (0 until nSlices * perSlice).map { i =>
+      (f"2026_08_12T10_${15 + i / 40}%02d", s"u${i % 23}", s"e${i % 4}", s"${i % 3}")
+    }
+    all.groupBy(_._1).foreach { case (mk, evs) =>
+      assert(srv.strings.get(s"visitCounter_$mk").map(_.toLong) === Some(evs.size.toLong),
+        s"visits at $mk: no double INCRBY, no lost batch")
+      assert(srv.sets(s"set_dthr_$mk") === evs.map(_._2).toSet)
+      assert(srv.sets(s"set_experiments_$mk") === evs.map(_._3).toSet)
+      assert(srv.hlls(s"hll_dthr_$mk") === evs.map(_._2).toSet)
+    }
+    all.groupBy(_._4).foreach { case (v, evs) =>
+      assert(srv.sets(s"set_var_$v") === evs.map(_._2).toSet)
+    }
+    assert(srv.strings.keys.count(_.startsWith(
+      s"graft_batch_ledger:${StreamingMetrics.FanOutQuery}:")) >= nSlices)
+  }
+}
+
+/** A Redis sink that, once for each batch id in [[crashAfter]], fails
+  * right after the batch's ledgered write committed — a driver crash
+  * between the store write and the streaming commit log. */
+private class CrashAfterWriteSink(port: Int) extends RedisMetricsSink("127.0.0.1", port) {
+  @volatile var crashAfter = Set.empty[Long]
+  override def writeBatchOnce(queryId: String, batchId: Long,
+      incrs: Seq[(String, Long)], puts: Seq[(String, Long)],
+      sadds: Seq[(String, Iterable[String])],
+      pfadds: Seq[(String, Iterable[String])]): Boolean = {
+    val applied = super.writeBatchOnce(queryId, batchId, incrs, puts, sadds, pfadds)
+    if (crashAfter(batchId)) {
+      crashAfter -= batchId
+      throw new java.io.IOException(s"injected crash after batch $batchId was written")
+    }
+    applied
   }
 }

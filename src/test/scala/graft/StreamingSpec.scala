@@ -90,6 +90,60 @@ class StreamingSpec extends AnyFunSuite {
     } finally queries.foreach(_.stop())
   }
 
+  test("in-memory store: the fused fan-out query plus the stateful HLL query, " +
+    "one ledgered store write per micro-batch") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    // records each ledgered write: the whole batch's INCRBYs and SADDs
+    // must arrive in ONE call, keyed by the fused query's name
+    class LedgerSink extends MetricsStore {
+      val onceCalls = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Int, Int)]
+      override def writeBatchOnce(queryId: String, batchId: Long,
+          incrs: Seq[(String, Long)], puts: Seq[(String, Long)],
+          sadds: Seq[(String, Iterable[String])],
+          pfadds: Seq[(String, Iterable[String])]): Boolean = {
+        onceCalls.add((queryId, batchId, incrs.size, sadds.size))
+        super.writeBatchOnce(queryId, batchId, incrs, puts, sadds, pfadds)
+      }
+    }
+    val input = MemoryStream[LogEvent](3)
+    val store = new LedgerSink
+    val queries = StreamingMetrics.startPipeline(input.toDS(), store)
+    try {
+      assert(queries.map(_.name) === Seq(StreamingMetrics.FanOutQuery, StreamingMetrics.HllQuery))
+      input.addData(
+        ev("u1", "e1", "1", "2026-08-12 10:15:03"),
+        ev("u2", "e1", "2", "2026-08-12 10:15:30"),
+        ev("u1", "e2", "1", "2026-08-12 10:16:01"),
+        ev("u3", null, "1", "2026-08-12 10:16:09"))
+      queries.foreach(_.processAllAvailable())
+      import scala.jdk.CollectionConverters._
+      // 2 minutes → 2 INCRBYs; SADD keys: 2 set_dthr + 2 set_var + 2 set_experiments
+      assert(store.onceCalls.asScala.toSeq === Seq((StreamingMetrics.FanOutQuery, 0L, 2, 6)))
+      assert(store.counter("visitCounter_2026_08_12T10_16") === 2L)
+      // members from different partitions union into one set
+      assert(store.sets("set_dthr_2026_08_12T10_16") === Set("u1", "u3"))
+      assert(store.sets("set_var_1") === Set("u1", "u3"))
+      // a null member has nothing to add: the key holds only real members
+      assert(store.sets("set_experiments_2026_08_12T10_16") === Set("e2"))
+      assert(store.counter("hll_dthr_2026_08_12T10_16") === 2L)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("a checkpoint root in the earlier per-branch layout is refused, not resumed") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_legacy_ck")
+    java.nio.file.Files.createDirectories(root.resolve("visits_counter").resolve("offsets"))
+    val input = MemoryStream[LogEvent]
+    val err = intercept[IllegalArgumentException] {
+      StreamingMetrics.startPipeline(input.toDS(), new MetricsStore,
+        checkpointRoot = Some(root.toString))
+    }
+    assert(err.getMessage.contains("visits_counter"))
+    assert(spark.streams.active.forall(_.name != StreamingMetrics.FanOutQuery))
+  }
+
   test("watermarked variant (documented deviation) still folds in-window late data") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -1294,12 +1348,13 @@ class StreamingSpec extends AnyFunSuite {
   test("soak: O(100) micro-batches through the checkpointed 5-branch fan-out " +
     "with an abrupt mid-run kill/restart — store ≡ batch twin") {
     import spark.implicits._
-    // file source, not MemoryStream: the fan-out is FIVE independently
-    // checkpointed queries over one source, and MemoryStream keeps a
-    // single global commit pointer (restarting queries at diverged
-    // offsets trips its out-of-order commit check) — a real source
-    // (files, Kafka, Pub/Sub) has per-consumer progress, which is
-    // exactly what each branch's checkpoint records
+    // file source, not MemoryStream: on the in-memory store the fan-out
+    // is TWO independently checkpointed queries over one source (the
+    // fused stateless query and the update-mode HLL aggregate), and
+    // MemoryStream keeps a single global commit pointer (restarting
+    // queries at diverged offsets trips its out-of-order commit check)
+    // — a real source (files, Kafka, Pub/Sub) has per-consumer progress,
+    // which is exactly what each query's checkpoint records
     val srcDir = java.nio.file.Files.createTempDirectory("graft_soak_src")
     val root = java.nio.file.Files.createTempDirectory("graft_soak_ck").toString
     val store = new MetricsStore
@@ -1318,7 +1373,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     def fileEvents = {
       // maxFilesPerTrigger=1 pins one file per micro-batch, so 50
-      // slices drive ~50 batches PER branch (~250 across the fan-out)
+      // slices drive ~50 batches PER query (~100 across the fan-out)
       val raw = spark.readStream.option("maxFilesPerTrigger", 1)
         .text(srcDir.toString)
       graft.sources.Tables.parseJsonEvents(raw)
