@@ -28,7 +28,7 @@ object EngineSession {
       // crosses immediately, putting every k-means iteration on the
       // serialize-and-sort path at ANY corpus scale. The engine's
       // typed aggregates all carry size-BOUNDED buffers (vec_sum:
-      // dim+1 doubles; bounded_collect: ≤ cap longs), so 4096
+      // dim+1 doubles; topk_sketch: ≤ capacity entries), so 4096
       // in-memory keys is ≤ ~32 MB/task worst case — a justified
       // production value, not a local-mode tune (at 100 TB the group
       // counts of these aggregates are unchanged; only row counts

@@ -72,9 +72,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "vec_sum(vec) - element-wise sum aggregate of float arrays: struct(sum, n)") {
       exprs => VecSumAgg(exprs(0))
     }
-    fn(ext, "bounded_collect_long",
-      "bounded_collect_long(col, limit) - collect_list bounded at limit, NULL on overflow")(
-      BoundedCollectFunctions.builder)
     fn(ext, "zvalue",
       "zvalue(bits, c1, c2, ...) - Morton (Z-order) bit-interleave of integer codes")(
       ZValue.builder)

@@ -49,7 +49,6 @@ object Registry {
       PolyHash62.register(spark)
       TopKSketchFunctions.register(spark)
       NgramStats.register(spark)
-      BoundedCollectFunctions.register(spark)
       ZValue.register(spark)
       CharNgrams.register(spark)
       BloomFunctions.register(spark)

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, LongType}
 
 /** Codegen'd dot product of two float-array columns, accumulated in
@@ -126,9 +125,4 @@ object VectorFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "vec_dot_i8", exprs => Int8VecDot(exprs(0), exprs(1)), "built-in")
   }
-
-  /** Cosine similarity via `vec_dot`; prefer precomputing norms per
-    * side when scoring many pairs (see Similarity). */
-  def cosineCol(a: String, b: String): Column =
-    expr(s"vec_dot($a, $b) / (sqrt(vec_dot($a, $a)) * sqrt(vec_dot($b, $b)))")
 }

@@ -19,10 +19,7 @@ import org.apache.spark.sql.functions._
 object Analytics {
 
   // ---- shared SQL fragments (Spark expr + DuckDB agree verbatim) ----
-  // package-visible: StreamingMetrics.startVariantLift folds the SAME
-  // fragments so the streamed arm state is definitionally the batch
-  // aggregate (the spec keeps an independent inline copy as the
-  // drift tripwire)
+  // package-visible for the DuckDB replays and Preference's moments
   private[graft] val SumValue =
     "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)"
   // value*value is a deterministic per-row IEEE double product; the
@@ -204,10 +201,12 @@ object Analytics {
     * in one action).
     *
     * REQUIREMENTS: the sort must be total (pass tiebreaker columns),
-    * `df` deterministic (same rows at construction and action — every
-    * catalog caller already needs this for oracle exactness), and the
-    * sort columns non-null: a null in any collected min tuple falls
-    * back to [[rankByRangeCheckpointed]], whose window handles nulls.
+    * `df` must yield the same rows at construction and action, and the
+    * sort columns must be non-null. Two of these are guarded: a `df`
+    * whose analyzed plan is non-deterministic (`rand()`, say) and a
+    * null in any collected min tuple both fall back to
+    * [[rankByRangeCheckpointed]], which materializes `df` once and
+    * whose window handles nulls.
     *
     * `eager = true` routes to [[rankByRangeCheckpointed]] outright —
     * the right mode for CHAINED ranks (rank k's input contains rank
@@ -217,7 +216,8 @@ object Analytics {
     * link once) and for upstreams too expensive to re-derive. */
   def rankByRange(df: DataFrame, sortCols: Seq[String],
       partitions: Int = 32, eager: Boolean = false): (DataFrame, Long) = {
-    if (eager) return rankByRangeCheckpointed(df, sortCols, partitions)
+    if (eager || !df.queryExecution.analyzed.deterministic)
+      return rankByRangeCheckpointed(df, sortCols, partitions)
     val cols = sortCols.map(col)
     val keyed = df.select(cols: _*)
     val keyTypes = keyed.schema.fields.map(_.dataType)
@@ -261,9 +261,10 @@ object Analytics {
   }
 
   /** The pre-r19 [[rankByRange]] implementation — retained as the
-    * null-sort-key fallback (the literal-bounds CASE cannot express
-    * NULLS FIRST without null-safe comparators; no catalog caller
-    * ranks nullable keys, so this path is cold). */
+    * eager mode and as the fallback for a null sort key (the
+    * literal-bounds CASE cannot express NULLS FIRST without null-safe
+    * comparators) or a non-deterministic `df`; no catalog caller ranks
+    * nullable keys or a non-deterministic frame lazily. */
   private[operators] def rankByRangeCheckpointed(df: DataFrame,
       sortCols: Seq[String], partitions: Int = 32): (DataFrame, Long) = {
     // stamp the range-partition id ONCE and localCheckpoint: the count
@@ -1404,7 +1405,7 @@ object Analytics {
     * narrow the monitored time range; under ANSI mode an overflow
     * errors rather than wrapping, and DuckDB's silent HUGEINT widening
     * would otherwise break the hash-exact twin contract. The streaming
-    * face ([[graft.streaming.StreamingMetrics.startVisitsCusum]])
+    * monitor ([[graft.streaming.StreamingMetrics.startVisitsCusum]])
     * has no such bound — its state folds one minute at a time against
     * a fixed target, never a whole-series prefix. */
   def visitsCusum(events: DataFrame, alarmMult: Int = 4): DataFrame = {
@@ -1510,21 +1511,26 @@ object Analytics {
     * degenerate-group guards (NULL when either arm has n ≤ 1 or the
     * variance argument cancels to ≤ 0). */
   def variantLift(events: DataFrame): DataFrame =
-    liftFromArms(armEvents(events)
+    liftFromArms(liftArms(events))
+
+  /** [[variantLift]]'s grain: per-(experiment, variant) count and
+    * DECIMAL moment sums `(n, s1, s2)` — algebraic, so over a stream it
+    * equals this batch aggregate under any micro-batch slicing. */
+  private[graft] def liftArms(events: DataFrame): DataFrame =
+    armEvents(events)
       .groupBy(col("experiment_id"), col("variant"))
       .agg(count(lit(1)).as("n"),
         expr(s"$SumValue").as("s1"),
-        expr(s"$SumValueSq").as("s2")))
+        expr(s"$SumValueSq").as("s2"))
 
   /** The derivation TAIL of [[variantLift]] — from a bounded arm table
     * `(experiment_id, variant, n, s1, s2)` (decimal moment sums) to
     * per-arm mean/lift/Welch-t vs the experiment's control arm. Split
-    * out so the streaming face
-    * ([[graft.streaming.StreamingMetrics.startVariantLiftT]]) replays
-    * the IDENTICAL scalar chain per micro-batch over its running arm
-    * state: decimal sums are algebraic, so the streamed readout after
-    * any batch slicing is bit-equal to the batch face over the same
-    * events (asserted in `StreamingSpec`). Input is arm-table-sized
+    * out so a stream of [[liftArms]] replays the IDENTICAL scalar chain
+    * per micro-batch ([[graft.streaming.StreamingMetrics.startReadout]]):
+    * decimal sums are algebraic, so the streamed readout after any
+    * batch slicing is bit-equal to the batch face over the same events
+    * (asserted in `StreamingSpec`). Input is arm-table-sized
     * (hundreds of rows at any corpus scale); the control arm is folded
     * in by a per-experiment window (first value over the unbounded
     * frame ordered by variant — identical to a min-variant self-join,
@@ -1587,12 +1593,8 @@ object Analytics {
     * Output: (experiment_id, variant, n, conv, rate, control_variant,
     * rate_ctl, chi2) ordered by (experiment_id, variant). */
   def variantConversion(events: DataFrame,
-      threshold: Double = 100.0): DataFrame = {
-    val arms = armEvents(events)
-      .groupBy(col("experiment_id"), col("variant"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("value") > threshold, 1L).otherwise(0L)).as("conv"))
-    arms
+      threshold: Double = 100.0): DataFrame =
+    conversionArms(events, threshold)
       .withColumn("control_variant",
         first(col("variant")).over(ArmControlWindow))
       .withColumn("n_ctl", first(col("n")).over(ArmControlWindow))
@@ -1603,7 +1605,16 @@ object Analytics {
         expr(ConvRate("conv_ctl", "n_ctl")).as("rate_ctl"),
         expr(ConvChi2).as("chi2"))
       .orderBy("experiment_id", "variant")
-  }
+
+  /** [[variantConversion]]'s grain: per-(experiment, variant) count and
+    * conversions `(n, conv)`, conversion = value > `threshold`. The
+    * keyed SPRT monitor reads the same grain ([[sprtFromArms]]). */
+  private[graft] def conversionArms(events: DataFrame,
+      threshold: Double = 100.0): DataFrame =
+    armEvents(events)
+      .groupBy(col("experiment_id"), col("variant"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("value") > threshold, 1L).otherwise(0L)).as("conv"))
 
   // conversion-rate scalar chains, shared verbatim with the oracle:
   // a = conv, b = n−conv, c = conv_ctl, d = n_ctl−conv_ctl
@@ -1668,20 +1679,32 @@ object Analytics {
     * quantized DECIMAL(18,9) scalars inside the expression (engines
     * agree on the quantized constant), and the LLR is two
     * integer×constant products and one subtraction, quantized — so
-    * the whole trajectory is hash-exact. The streaming face
-    * ([[graft.streaming.StreamingMetrics.startSprtConversion]]) folds
-    * the identical chain over running totals.
+    * the whole trajectory is hash-exact. Split into [[sprtMinutes]]
+    * (the grain, counts only) and [[sprtFromMinutes]] (the readout), so
+    * a stream of the grain replays the identical trajectory per
+    * micro-batch ([[graft.streaming.StreamingMetrics.startReadout]]).
     *
     * Output per minute: (minute_key, n, conv, n_cum, conv_cum, llr,
     * decision ∈ {accept_h1, accept_h0, continue}). */
   def sprtConversion(events: DataFrame, threshold: Double = 100.0,
       p0: Double = 0.10, p1: Double = 0.15,
-      alpha: Double = 0.05, beta: Double = 0.05): DataFrame = {
-    val perMin = events
+      alpha: Double = 0.05, beta: Double = 0.05): DataFrame =
+    sprtFromMinutes(sprtMinutes(events, threshold), p0, p1, alpha, beta)
+
+  /** [[sprtConversion]]'s grain: per-minute count and conversions. */
+  private[graft] def sprtMinutes(events: DataFrame,
+      threshold: Double = 100.0): DataFrame =
+    events
       .groupBy(date_format(date_trunc("minute", col("ts")),
         "yyyy_MM_dd'T'HH_mm").as("minute_key"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("value") > threshold, 1L).otherwise(0L)).as("conv"))
+
+  /** [[sprtConversion]]'s readout: running totals over the minute
+    * series, then the LLR and decision chains. */
+  private[graft] def sprtFromMinutes(perMin: DataFrame, p0: Double = 0.10,
+      p1: Double = 0.15, alpha: Double = 0.05,
+      beta: Double = 0.05): DataFrame = {
     val wRun = Window.orderBy(col("minute_key"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     perMin
@@ -1693,6 +1716,19 @@ object Analytics {
         expr(sprtDecisionExpr(alpha, beta)).as("decision"))
       .orderBy("minute_key")
   }
+
+  /** One Wald monitor per (experiment, variant) arm over
+    * [[conversionArms]]: each arm's totals through the same LLR and
+    * decision chains as [[sprtConversion]]. Output: (experiment_id,
+    * variant, n_cum, conv_cum, llr, decision). */
+  private[graft] def sprtFromArms(arms: DataFrame, p0: Double = 0.10,
+      p1: Double = 0.15, alpha: Double = 0.05,
+      beta: Double = 0.05): DataFrame =
+    arms
+      .select(col("experiment_id"), col("variant"), col("n").as("n_cum"),
+        col("conv").as("conv_cum"))
+      .withColumn("llr", expr(sprtLlrExpr(p0, p1)))
+      .withColumn("decision", expr(sprtDecisionExpr(alpha, beta)))
 
   // the LLR and decision chains, shared verbatim with the oracle and
   // the streaming face; the ln factors quantize to engine-agreeing
@@ -2142,21 +2178,27 @@ object Analytics {
     * tiebreak). */
   def fdrExperiments(events: DataFrame, alpha: Double = 0.05,
       threshold: Double = 100.0): DataFrame =
-    fdrFromArms(armEvents(events)
+    fdrFromArms(batteryArms(events, threshold), alpha)
+
+  /** The experiment battery's grain, shared by [[fdrExperiments]] and
+    * [[holmExperiments]]: per-(experiment, variant) `(n, s1, s2, conv)`
+    * — the [[liftArms]] moments plus the [[conversionArms]] count, all
+    * algebraic. */
+  private[graft] def batteryArms(events: DataFrame,
+      threshold: Double = 100.0): DataFrame =
+    armEvents(events)
       .groupBy(col("experiment_id"), col("variant"))
       .agg(count(lit(1)).as("n"),
         expr(s"$SumValue").as("s1"),
         expr(s"$SumValueSq").as("s2"),
-        sum(when(col("value") > threshold, 1L).otherwise(0L)).as("conv")),
-      alpha)
+        sum(when(col("value") > threshold, 1L).otherwise(0L)).as("conv"))
 
   /** The derivation TAIL of [[fdrExperiments]] — from a bounded arm
     * table `(experiment_id, variant, n, s1, s2, conv)` to the
     * BH-adjusted battery. Split out (the [[liftFromArms]] pattern) so
-    * the streaming face
-    * ([[graft.streaming.StreamingMetrics.startFdrExperiments]])
-    * replays the IDENTICAL chain over its running arm state: the arm
-    * sums are algebraic, so the streamed battery after any micro-batch
+    * a stream of [[batteryArms]] replays the IDENTICAL chain
+    * ([[graft.streaming.StreamingMetrics.startReadout]]): the arm sums
+    * are algebraic, so the streamed battery after any micro-batch
     * slicing is bit-equal to the batch face over the same events
     * (asserted in `StreamingSpec`). */
   private[graft] def fdrFromArms(armsIn: DataFrame,
@@ -2241,13 +2283,7 @@ object Analytics {
     * p_adj, reject) ordered by rank. */
   def holmExperiments(events: DataFrame, alpha: Double = 0.05,
       threshold: Double = 100.0): DataFrame =
-    holmAdjust(experimentBattery(armEvents(events)
-      .groupBy(col("experiment_id"), col("variant"))
-      .agg(count(lit(1)).as("n"),
-        expr(s"$SumValue").as("s1"),
-        expr(s"$SumValueSq").as("s2"),
-        sum(when(col("value") > threshold, 1L).otherwise(0L)).as("conv"))),
-      alpha)
+    holmAdjust(experimentBattery(batteryArms(events, threshold)), alpha)
 
   /** The Holm step-down tail over an arbitrary battery frame (the
     * [[bhAdjust]] fixture pattern). */
@@ -2483,7 +2519,7 @@ object Analytics {
     * rank readout. Split out (the [[experimentBattery]] pattern) so
     * fixtures can assert U / p against hand-computed tables and so
     * [[holmAdjust]] could consume the identical battery. */
-  private[graft] def mwuBattery(events: DataFrame): DataFrame = {
+  private[graft] def mwuBattery(events: DataFrame): DataFrame =
     // ONE events scan: the tie-group grain feeds four downstream
     // consumers (control pick, merged value grain, control constants,
     // treated rows) — without the cache boundary each re-derives it
@@ -2492,30 +2528,31 @@ object Analytics {
     // 2-decimal values × variants), so the cache is small at any
     // corpus size; ContextCleaner releases it when the caller drops
     // the frame (the btStrength convention).
-    val grain = armEvents(events)
-      // NULL values are not rankable observations: without this
-      // filter control rows with NULL value would count into n_c/tie
-      // while the (experiment, value) equi-join silently dropped
-      // NULL treated rows from U — and the cumulative window would
-      // diverge cross-engine (Spark sorts NULLS FIRST, DuckDB NULLS
-      // LAST). The valueBootstrapCi convention.
+    mwuBatteryFromGrain(rankGrain(events).persist())
+
+  /** The rank tests' grain, shared by [[mwuExperiments]] and
+    * [[kruskalExperiments]]: one COUNT per (experiment, value, variant)
+    * tie group — algebraic, and bounded by the experiment × 2-decimal
+    * value × variant domain. NULL values are not rankable observations:
+    * without the filter control rows with NULL value would count into
+    * n_c/tie while the (experiment, value) equi-join silently dropped
+    * NULL treated rows from U — and the cumulative window would diverge
+    * cross-engine (Spark sorts NULLS FIRST, DuckDB NULLS LAST). The
+    * valueBootstrapCi convention. */
+  private[graft] def rankGrain(events: DataFrame): DataFrame =
+    armEvents(events)
       .where(col("value").isNotNull)
       .groupBy(col("experiment_id"), col("value"), col("variant"))
       .agg(count(lit(1)).as("cnt"))
-      .persist()
-    mwuBatteryFromGrain(grain)
-  }
 
   /** The derivation TAIL of [[mwuExperiments]]'s battery — from the
     * bounded tie-group grain `(experiment_id, value, variant, cnt)`
     * to the (test, experiment_id, variant, stat, p_value) rows. Split
-    * out (the [[fdrFromArms]] pattern) so the streaming face
-    * ([[graft.streaming.StreamingMetrics.startMwuExperiments]])
-    * replays the IDENTICAL chain over its running grain state: the
-    * counts are algebraic, so the streamed battery after any
-    * micro-batch slicing is bit-equal to the batch face over the
-    * same events. The streaming caller passes its own (unpersisted,
-    * state-snapshot-backed) grain; only the batch face caches. */
+    * out (the [[fdrFromArms]] pattern) so a stream of [[rankGrain]]
+    * replays the IDENTICAL chain
+    * ([[graft.streaming.StreamingMetrics.startReadout]]): the counts
+    * are algebraic, so the streamed battery after any micro-batch
+    * slicing is bit-equal to the batch face over the same events. */
   private[graft] def mwuBatteryFromGrain(grain: DataFrame): DataFrame = {
     val ctl = grain
       .groupBy(col("experiment_id"))
@@ -2635,17 +2672,23 @@ object Analytics {
       .agg(min(col("us")).as("lo"), max(col("us")).as("hi"))
       .select(col("experiment_id"),
         expr("lo + (hi - lo) div 2").as("mid"))
-    // ONE scan to the (experiment, user, variant, period) grain; the
-    // value sum stays RAW DECIMAL here (a double→DECIMAL re-cast at
-    // the next rollup would hit the §8 portability hazard)
-    cupedFromG1(base.join(broadcast(bounds), Seq("experiment_id"))
+    cupedFromG1(cupedUnits(base, bounds))
+  }
+
+  /** [[cupedLift]]'s grain: ONE scan of [[cupedBase]] rows to the
+    * (experiment, user, variant, period) grain `(n, s)`, the period
+    * split at each experiment's `mid` (integer microseconds) from
+    * `mids` (experiment_id, mid). The value sum stays RAW DECIMAL here
+    * (a double→DECIMAL re-cast at the next rollup would hit the §8
+    * portability hazard); n and s are algebraic. */
+  private[graft] def cupedUnits(base: DataFrame, mids: DataFrame): DataFrame =
+    base.join(broadcast(mids), Seq("experiment_id"))
       .groupBy(col("experiment_id"), col("user_id"), col("variant"),
         (col("us") <= col("mid")).as("pre"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("s")))
-  }
+        sum(col("value").cast("decimal(18,2)")).as("s"))
 
-  // the event projection [[cupedLift]] and its streaming face share:
+  // the event projection [[cupedLift]] and a stream of [[cupedUnits]] share:
   // value IS NOT NULL keeps n and the moment sums over the SAME rows
   // (count(lit(1)) would count NULL-value rows the decimal sum skips,
   // silently skewing the per-unit means and θ)
@@ -2660,12 +2703,14 @@ object Analytics {
   /** The derivation TAIL of [[cupedLift]] — from the per-unit period
     * grain `(experiment_id, user_id, variant, pre, n, s)` to the
     * adjusted-mean readout. Split out (the [[mwuFromGrain]] pattern)
-    * so the streaming face
-    * ([[graft.streaming.StreamingMetrics.startCupedLift]]) replays
-    * the IDENTICAL chain over its running per-unit moments: n and the
+    * so a stream of [[cupedUnits]] replays the IDENTICAL chain
+    * ([[graft.streaming.StreamingMetrics.startReadout]]): n and the
     * raw-DECIMAL s are algebraic, so the streamed readout after any
     * micro-batch slicing is bit-equal to a batch run at the same
-    * period split. */
+    * period split. A stream declares its split up front — a
+    * data-derived midpoint moves with every arriving event, and a
+    * CUPED pre-period is declared before launch anyway (Deng et al.
+    * WSDM'13 §3). */
   private[graft] def cupedFromG1(g1: DataFrame): DataFrame = {
     // covariate: the user's pre-period mean over ALL variants,
     // quantized to the 1e-6 integer lattice
@@ -2855,24 +2900,16 @@ object Analytics {
     * ordered by experiment_id; h_stat is the tie-corrected H'. */
   def kruskalExperiments(events: DataFrame): DataFrame =
     // ONE events scan to the cached domain-bounded tie-group grain
-    // (the [[mwuBattery]] convention — it feeds three consumers);
-    // NULL values drop for the same cross-engine-rank reason.
-    kruskalFromGrain(armEvents(events)
-      .where(col("value").isNotNull)
-      .groupBy(col("experiment_id"), col("value"), col("variant"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist())
+    // (the [[mwuBattery]] convention — it feeds three consumers)
+    kruskalFromGrain(rankGrain(events).persist())
 
   /** The derivation TAIL of [[kruskalExperiments]] — from the bounded
     * tie-group grain `(experiment_id, value, variant, cnt)` to the
     * per-experiment H′ readout. Split out (the [[mwuFromGrain]]
-    * pattern) so the streaming face
-    * ([[graft.streaming.StreamingMetrics.startKruskalExperiments]])
-    * replays the IDENTICAL chain over its running grain state: the
-    * counts are algebraic, so the streamed readout after any
-    * micro-batch slicing is bit-equal to the batch face over the same
-    * events. The streaming caller passes its own (unpersisted,
-    * state-snapshot-backed) grain; only the batch face caches. */
+    * pattern) so a stream of [[rankGrain]] replays the IDENTICAL chain
+    * ([[graft.streaming.StreamingMetrics.startReadout]]): the counts
+    * are algebraic, so the streamed readout after any micro-batch
+    * slicing is bit-equal to the batch face over the same events. */
   private[graft] def kruskalFromGrain(grain: DataFrame): DataFrame = {
     val vg = grain
       .groupBy(col("experiment_id"), col("value"))

@@ -99,7 +99,7 @@ object Changes {
     *
     * One shuffle: the keep-last row_number and the per-key op count
     * share the `key` partitioning. This is the bounded-state batch twin
-    * of streaming `dedupExactStream`/`snapshot_upsert` — at scale the
+    * of a streaming dedup/`snapshot_upsert` — at scale the
     * changelog is the small delta and the snapshot join (see
     * [[Maintenance.upsert]]) is the expensive half; here we exercise
     * the keep-last collapse itself.

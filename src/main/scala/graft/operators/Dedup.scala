@@ -48,7 +48,7 @@ object Dedup {
     * pair branches.
     *
     * This replaces the round-≤17 bounded-postings formulation
-    * (`bounded_collect_long` into arrays + double explode): the
+    * (a capped collect of doc ids into arrays + double explode): the
     * collect is a TypedImperativeAggregate, which runs on
     * ObjectHashAggregate — and ObjectHashAggregate falls back to
     * SORT-BASED aggregation at 128 distinct keys per task

@@ -64,8 +64,17 @@ object Metrics {
     * one partial-aggregated shuffle — row growth is ×`minutes`, so
     * keep spans small relative to slide at scale. */
   def visitsSliding(ev: DataFrame, minutes: Int = 5): DataFrame =
+    slidingFromWindows(slidingWindows(ev, minutes))
+
+  /** [[visitsSliding]]'s grain: visits per covering window `w`. A count,
+    * so over a stream it equals the batch grain under any slicing. */
+  private[graft] def slidingWindows(ev: DataFrame, minutes: Int = 5): DataFrame =
     ev.groupBy(window(col(Ts), s"$minutes minutes", "1 minute").as("w"))
       .agg(count(lit(1)).as("visits"))
+
+  /** [[visitsSliding]]'s readout over its grain. */
+  private[graft] def slidingFromWindows(windows: DataFrame): DataFrame =
+    windows
       .select(date_format(col("w.start"), Windows.MinuteKeyFormat)
         .as("window_start"), col("visits"))
       .orderBy("window_start")
@@ -82,8 +91,20 @@ object Metrics {
     * `approx_count_distinct` for sketch-sized state at real DAU/WAU
     * spans). */
   def rollingActiveUsers(ev: DataFrame, minutes: Int = 5): DataFrame =
-    ev.groupBy(window(col(Ts), s"$minutes minutes", "1 minute").as("w"))
-      .agg(countDistinct(col(Uid)).as("active_users"))
+    activesFromUnits(activeUnits(ev, minutes))
+
+  /** [[rollingActiveUsers]]'s grain: one row per (covering window `w`,
+    * uid) — the (window, uid) dedup a count-distinct plans anyway, made
+    * explicit so a stream can keep it (streaming aggregation has no
+    * distinct aggregates). */
+  private[graft] def activeUnits(ev: DataFrame, minutes: Int = 5): DataFrame =
+    ev.groupBy(window(col(Ts), s"$minutes minutes", "1 minute").as("w"), col(Uid))
+      .agg(count(lit(1)).as("events"))
+
+  /** [[rollingActiveUsers]]'s readout: distinct users per window. */
+  private[graft] def activesFromUnits(units: DataFrame): DataFrame =
+    units.groupBy(col("w"))
+      .agg(count(lit(1)).as("active_users"))
       .select(date_format(col("w.start"), Windows.MinuteKeyFormat)
         .as("window_start"), col("active_users"))
       .orderBy("window_start")
@@ -133,14 +154,6 @@ object Metrics {
     ev.groupBy(
         col(ExperimentId), col(Variant), minuteStart(col(Ts)).as("m"))
       .agg(countDistinct(col(Uid)).as("unique_users"))
-      .select(col(ExperimentId), col(Variant),
-        minuteKey(col("m")).as("minute_key"), col("unique_users"))
-      .orderBy(ExperimentId, Variant, "minute_key")
-
-  def usersPerExperimentVariantMinuteApprox(ev: DataFrame): DataFrame =
-    ev.groupBy(
-        col(ExperimentId), col(Variant), minuteStart(col(Ts)).as("m"))
-      .agg(approx_count_distinct(col(Uid)).as("unique_users"))
       .select(col(ExperimentId), col(Variant),
         minuteKey(col("m")).as("minute_key"), col("unique_users"))
       .orderBy(ExperimentId, Variant, "minute_key")
@@ -321,7 +334,8 @@ object Metrics {
     * same semantics as [[userSessions]] (and the same oracle), but
     * expressed as a session-window aggregate, which also runs
     * incrementally on a stream with a watermark (see
-    * [[graft.streaming.StreamingMetrics.startSessionization]]).
+    * [[graft.streaming.StreamingMetrics.startSessionization]], which
+    * keeps its own fold over the stream's `uid`/`timestamp` columns).
     *
     * Boundary alignment with the lag formulation: [[userSessions]]
     * splits when `floor(epoch(b)) - floor(epoch(a)) > gap`. Events are

@@ -267,12 +267,13 @@ object Preference {
     winrateFromComps(comps, replicates, kernel)
   }
 
-  /** The (experiment, user, item) exact-DECIMAL value-total grain —
-    * [[winrateBootstrapCi]]'s running state. Decimal sums are exact
-    * and associative, so a streaming complete-mode aggregate over any
-    * slicing of the events equals this batch grain bit-for-bit — the
-    * property [[graft.streaming.StreamingMetrics.startWinrateBootstrapCi]]
-    * relies on (the mwu/kruskal grain convention, at the judge grain). */
+  /** The (experiment, user, item) exact-DECIMAL value-total grain of
+    * [[winrateBootstrapCi]]. Decimal sums are exact and associative, so
+    * a streaming complete-mode aggregate over any slicing of the events
+    * equals this batch grain bit-for-bit, and
+    * [[graft.streaming.StreamingMetrics.startReadout]] over it with
+    * [[winrateComps]] then [[winrateFromComps]] reproduces the batch
+    * face (the mwu/kruskal grain convention, at the judge grain). */
   private[graft] def winrateUt(events: DataFrame): DataFrame = events
     .where(col("user_id").isNotNull)
     .select(get_json_object(col("props"), "$.k").as("experiment_id"),
@@ -297,8 +298,8 @@ object Preference {
 
   /** Point estimate + Poisson-bootstrap CI from the expanded
     * comparisons — a pure function of the comps frame, shared verbatim
-    * by the batch face and the streaming twin so the draw seeds, the
-    * order-statistic picks and the outer-join surfacing can never
+    * by the batch face and a stream of [[winrateUt]] so the draw seeds,
+    * the order-statistic picks and the outer-join surfacing can never
     * drift between the two. Caller owns comps' caching (it is read
     * twice: point estimate and the ×B resample). */
   private[graft] def winrateFromComps(comps: DataFrame,
@@ -758,12 +759,23 @@ object Preference {
     *
     * Output: (user_id, n, c, pass_at_k) ordered by user_id. */
   def passAtK(events: DataFrame, k: Int = 4,
-      threshold: Double = 100.0): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
+      threshold: Double = 100.0): DataFrame =
+    passAtKFromTasks(passAtKTasks(events, threshold), k)
+
+  /** [[passAtK]]'s grain: per-task sample and pass counts `(n, c)` —
+    * algebraic, so over a stream it equals the batch grain under any
+    * micro-batch slicing. */
+  private[graft] def passAtKTasks(events: DataFrame,
+      threshold: Double = 100.0): DataFrame =
     events
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("value") > threshold, 1L).otherwise(0L)).as("c"))
+
+  /** [[passAtK]]'s readout: the estimator over tasks with n >= k. */
+  private[graft] def passAtKFromTasks(tasks: DataFrame, k: Int = 4): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    tasks
       .where(col("n") >= k)
       .select(col("user_id"), col("n"), col("c"),
         expr(passAtKExpr(k)).as("pass_at_k"))

@@ -17,7 +17,7 @@ import graft.streaming.MetricsReader
   *  - `GET /metrics/timeseries/visits?lastMinutes=N` — MGET over
   *    visitCounter keys, nil→0 (controller :45-67)
   *  - `GET /metrics/timeseries/users?lastMinutes=N` — PFCOUNT face
-  *    (:69-86; the pipeline upserts the materialized HLL count)
+  *    over hll_dthr keys (:69-86)
   *  - `GET /metrics/timeseries/experiments?lastMinutes=N` — SCARD face
   *    (:88-107)
   *  - `GET /metrics/timeseries/variantsOverlap` — pairwise
@@ -25,7 +25,9 @@ import graft.streaming.MetricsReader
   *  - `GET /metrics/timeseries/times?lastMinutes=N` — the closed-minute
   *    spine (:138-152)
   *
-  * Times are RECENT-FIRST (now-1 … now-N), matching the controller's
+  * The three timeseries panels read through
+  * [[graft.streaming.MetricsReader.timeseries]]. Times are RECENT-FIRST
+  * (now-1 … now-N), matching the controller's
   * `timePatternForLastMinutes`; `lastMinutes` defaults to 10. JSON is
   * rendered by hand — the payloads are flat arrays of
   * `{"timestamp": …, "metric": …}` / `{"dimensions": […], "metric": …}`
@@ -39,19 +41,11 @@ import graft.streaming.MetricsReader
 class DashboardServer(store: MetricsReader, port: Int = 0,
     clock: () => LocalDateTime = () => LocalDateTime.now(java.time.ZoneOffset.UTC)) {
 
-  private val MinuteKeyFmt = DateTimeFormatter.ofPattern("yyyy_MM_dd'T'HH_mm")
   private val IsoFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:00'Z'")
 
   private val server = {
     DashboardServer.enableNoDelay()
     HttpServer.create(new InetSocketAddress(port), 0)
-  }
-
-  /** now-1 … now-N floored to the minute, recent-first
-    * (controller `timePatternForLastMinutes`, :144-152). */
-  private def closedMinutes(lastMinutes: Int): Seq[LocalDateTime] = {
-    val nowM = clock().truncatedTo(java.time.temporal.ChronoUnit.MINUTES)
-    (1 to lastMinutes).map(nowM.minusMinutes(_))
   }
 
   /** `lastMinutes`, 10 when absent. Each minute costs one store read, so
@@ -68,10 +62,12 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
     }.getOrElse(10)
   }
 
-  private def timeseriesJson(minutes: Seq[LocalDateTime],
-      metric: LocalDateTime => Long): String =
-    minutes.map { m =>
-      s"""{"timestamp":"${IsoFmt.format(m)}","metric":${metric(m)}}"""
+  /** One timeseries panel: `prefix`'s closed minutes, each read with
+    * `read`. */
+  private def timeseriesJson(ex: HttpExchange, prefix: String)(
+      read: String => Long): String =
+    store.timeseries(prefix, clock(), lastMinutesParam(ex))(read).map { case (m, v) =>
+      s"""{"timestamp":"${IsoFmt.format(m)}","metric":$v}"""
     }.mkString("[", ",", "]")
 
   private def respond(ex: HttpExchange, body: String, status: Int = 200,
@@ -93,16 +89,13 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
       })
 
   route("/metrics/timeseries/visits") { ex =>
-    timeseriesJson(closedMinutes(lastMinutesParam(ex)),
-      m => store.counter(s"visitCounter_${MinuteKeyFmt.format(m)}"))
+    timeseriesJson(ex, "visitCounter")(store.counter)
   }
   route("/metrics/timeseries/users") { ex =>
-    timeseriesJson(closedMinutes(lastMinutesParam(ex)),
-      m => store.hllCount(s"hll_dthr_${MinuteKeyFmt.format(m)}"))
+    timeseriesJson(ex, "hll_dthr")(store.hllCount)
   }
   route("/metrics/timeseries/experiments") { ex =>
-    timeseriesJson(closedMinutes(lastMinutesParam(ex)),
-      m => store.scard(s"set_experiments_${MinuteKeyFmt.format(m)}"))
+    timeseriesJson(ex, "set_experiments")(store.scard)
   }
   route("/metrics/timeseries/variantsOverlap") { _ =>
     store.overlap("set_var_").map { case (a, b, n) =>
@@ -118,7 +111,7 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
     }.mkString("[", ",", "]")
   }
   route("/metrics/timeseries/times") { ex =>
-    closedMinutes(lastMinutesParam(ex))
+    MetricsReader.closedMinutes(clock(), lastMinutesParam(ex))
       .map(m => s""""${IsoFmt.format(m)}"""").mkString("[", ",", "]")
   }
 

@@ -27,7 +27,7 @@ object RespReply {
   * propagates; the next call reconnects. No silent auto-retry — a
   * blind resend of a non-idempotent verb (INCRBY) after a mid-flight
   * failure could double-apply; redelivery safety belongs to the batch
-  * ledger (see [[RedisMetricsSink.applyBatchOnce]]), not the socket.
+  * ledger (see [[RedisMetricsSink.writeBatchOnce]]), not the socket.
   */
 final class RespClient(host: String, port: Int, timeoutMs: Int = 5000) {
   private var socket: Socket = _
@@ -233,8 +233,8 @@ class RedisMetricsSink(host: String, port: Int)
 
   /** The effectively-once batch write against a real store: body AND
     * ledger marker commit in ONE `MULTI…EXEC` transaction on the
-    * pipelined connection, closing the crash window the plain SET-NX
-    * ledger left open — a crash anywhere before EXEC applies NOTHING
+    * pipelined connection, so there is no crash window between the
+    * two — a crash anywhere before EXEC applies NOTHING
     * (marker unset → the re-delivered batch retries in full), a crash
     * after EXEC applied EVERYTHING (marker set → the redelivery is
     * skipped). No double-INCRBY, no lost batch.
@@ -271,19 +271,6 @@ class RedisMetricsSink(host: String, port: Int)
           case _ =>
         }
         true
-    }
-  }
-
-  /** Legacy SET-NX ledger (non-transactional; see [[writeBatchOnce]]
-    * for the closed-window form): claims the marker, runs `body`,
-    * deletes the marker if the body fails so the batch retries. */
-  def applyBatchOnce(queryId: String, batchId: Long)(body: => Unit): Boolean = {
-    val marker = s"graft_batch_ledger:$queryId:$batchId"
-    run("SET", marker, "1", "NX") match {
-      case RespReply.Bulk(None) => false // already applied
-      case _ =>
-        try { body; true }
-        catch { case t: Throwable => run("DEL", marker); throw t }
     }
   }
 

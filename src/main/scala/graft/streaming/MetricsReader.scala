@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.time.LocalDateTime
+import java.time.format.DateTimeFormatter
+import java.time.temporal.ChronoUnit
+
 /** The dashboard's READ face — the five query shapes the reference's
   * controller issues against Redis (MGET / PFCOUNT / SCARD /
   * SINTERSTORE+SCARD, dashboard/.../TimeseriesMetricsController.java:45-136),
@@ -27,17 +31,26 @@ trait MetricsReader {
     * stays KB-sized at 100 TB of distinct users. Default: none kept. */
   def overlapApprox(prefix: String): Seq[(String, String, Long)] = Nil
 
-  /** Q1–Q3 read shape: last N closed minutes before `nowMinute`
-    * (exclusive), zero-filled — derived entirely from [[counter]] /
-    * [[scard]], so every store serves it
-    * (TimeseriesMetricsController.java:144-152). */
-  def timeseries(prefix: String, nowMinute: java.time.LocalDateTime,
-      lastMinutes: Int, fromSets: Boolean = false): Seq[(String, Long)] = {
-    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy_MM_dd'T'HH_mm")
-    (lastMinutes to 1 by -1).map { back =>
-      val m = nowMinute.minusMinutes(back).format(fmt)
-      val key = s"${prefix}_$m"
-      m -> (if (fromSets) scard(key) else counter(key))
+  /** Q1–Q3 read shape: the `lastMinutes` closed minutes before
+    * `nowMinute`, recent-first, each read from `{prefix}_{minute key}`
+    * with `read` — [[counter]] (GET), [[scard]] (SCARD) or [[hllCount]]
+    * (PFCOUNT), one store call per minute; an absent key reads 0
+    * (TimeseriesMetricsController.java:45-107). */
+  def timeseries(prefix: String, nowMinute: LocalDateTime, lastMinutes: Int)(
+      read: String => Long): Seq[(LocalDateTime, Long)] =
+    MetricsReader.closedMinutes(nowMinute, lastMinutes).map { m =>
+      m -> read(s"${prefix}_${MetricsReader.MinuteKeyFmt.format(m)}")
     }
+}
+
+object MetricsReader {
+  /** The minute part of a store key. */
+  val MinuteKeyFmt: DateTimeFormatter = DateTimeFormatter.ofPattern("yyyy_MM_dd'T'HH_mm")
+
+  /** now-1 … now-N floored to the minute, recent-first (controller
+    * `timePatternForLastMinutes`, :144-152). */
+  def closedMinutes(now: LocalDateTime, lastMinutes: Int): Seq[LocalDateTime] = {
+    val nowM = now.truncatedTo(ChronoUnit.MINUTES)
+    (1 to lastMinutes).map(nowM.minusMinutes(_))
   }
 }

@@ -8,25 +8,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.LogEvent
 import graft.operators.Windows
 
-/** The pluggable sink boundary of the streaming pipeline: the three
-  * write verbs the reference issues against Redis
+/** The pluggable sink boundary of the streaming pipeline: the write
+  * verbs the reference issues against Redis
   * (`RedisIO.write().withMethod(Method.X)`,
   * MetricsCalculationPipeline.java:54-57), as a trait a real client
-  * drops into. The pipeline only ever WRITES through this interface —
-  * reads (timeseries/overlap, the dashboard face) live on the concrete
-  * store, exactly as the reference's dashboard reads Redis directly.
+  * drops into. The pipeline only ever WRITES through this interface;
+  * the dashboard reads through [[MetricsReader]], which both shipped
+  * stores also implement.
   *
   * Mapping to the reference's sink methods:
-  *  - `incrBy`  ↔ `Method.INCRBY` (visit counters; the pipeline sends
-  *    per-batch PARTIAL counts, so the sink-side merge is commutative
-  *    addition — at-least-once delivery under mid-batch crash, same
-  *    contract as RedisIO)
-  *  - `sadd`    ↔ `Method.SADD` (exact member sets; idempotent)
-  *  - `put`     ↔ `Method.PFADD`'s rollup face: Spark's HLL aggregate
-  *    already holds the merged sketch per key, so the sink receives
-  *    the materialized PFCOUNT as an upsert (last-write-wins), rather
-  *    than raw members. A Redis impl would PFADD members instead and
-  *    let Redis merge — both are order-insensitive.
+  *  - `incrBy` ↔ `Method.INCRBY` (visit counters; the pipeline sends
+  *    per-batch PARTIAL counts under the [[writeBatchOnce]] ledger)
+  *  - `sadd`   ↔ `Method.SADD` (exact member sets; idempotent)
+  *  - `pfadd`  ↔ `Method.PFADD` (members folded into a sketch by the
+  *    store; a partition-capable store receives them worker-side)
+  *  - `put`    — an upsert of a materialized aggregate: a store without
+  *    a partition writer gets the per-minute HLL count from Spark's own
+  *    update-mode `approx_count_distinct` state this way.
   *
   * Implementations must be Serializable: the sink is captured by
   * `foreachBatch` closures (driver-side execution, but Spark
@@ -178,30 +176,24 @@ class MetricsStore extends KeyValueMetricsSink with MetricsReader {
 
   private val appliedBatches = TrieMap.empty[(String, Long), Unit]
 
-  /** Exactly-once guard for non-idempotent merges (INCRBY) under
-    * foreachBatch's at-least-once redelivery: runs `body` only if
-    * (queryId, batchId) was not applied yet, marking it applied on
-    * success — the batchId ledger a real store would keep, where
-    * marker + writes commit as ONE transaction (e.g. Redis MULTI /
-    * a WHERE-guarded SQL upsert). In this in-memory sim the body is
-    * not atomic with the marker; the marker is removed on failure so
-    * a crashed batch retries. Returns whether the body ran. */
-  def applyBatchOnce(queryId: String, batchId: Long)(body: => Unit): Boolean =
-    if (appliedBatches.putIfAbsent((queryId, batchId), ()).isEmpty) {
-      try { body; true }
-      catch {
-        case t: Throwable =>
-          appliedBatches.remove((queryId, batchId)); throw t
-      }
-    } else false
-
-  /** The ledgered batch write: marker + body under [[applyBatchOnce]]. */
+  /** The ledgered batch write: applies the batch only if (queryId,
+    * batchId) was not applied yet, marking it applied on success — the
+    * batchId ledger that makes INCRBY effectively-once under
+    * foreachBatch's at-least-once redelivery. Here the writes are not
+    * atomic with the marker (Redis commits both in one MULTI/EXEC), so
+    * the marker is removed on failure and a crashed batch retries. */
   override def writeBatchOnce(queryId: String, batchId: Long,
       incrs: Seq[(String, Long)] = Nil,
       puts: Seq[(String, Long)] = Nil,
       sadds: Seq[(String, Iterable[String])] = Nil,
       pfadds: Seq[(String, Iterable[String])] = Nil): Boolean =
-    applyBatchOnce(queryId, batchId) { writeBatch(incrs, puts, sadds, pfadds) }
+    if (appliedBatches.putIfAbsent((queryId, batchId), ()).isEmpty) {
+      try { writeBatch(incrs, puts, sadds, pfadds); true }
+      catch {
+        case t: Throwable =>
+          appliedBatches.remove((queryId, batchId)); throw t
+      }
+    } else false
 
   /** Q4 read shape: pairwise set intersection over a key family —
     * SINTERSTORE/SCARD (TimeseriesMetricsController.java:109-136), all
@@ -225,13 +217,16 @@ class MetricsStore extends KeyValueMetricsSink with MetricsReader {
   *    and, on a partition-capable store, the PFADD members) are ONE
   *    streaming query whose micro-batch is a single pass over its
   *    partitions: one Spark job, no shuffle ([[startPipeline]]);
-  *  - the exact distinct-users branch is the idiomatic-Spark
-  *    alternative: `flatMapGroupsWithState` holding the member set in
-  *    Spark's own state store, emitting updated cardinalities;
   *  - on a driver-merged store the approx branch uses
   *    `approx_count_distinct` (HLL++) in an update-mode aggregate —
   *    Spark's native PFADD/PFCOUNT, and the pipeline's only stateful
   *    query.
+  *
+  * Beyond the pipeline, an algebraic batch metric (counts and exact
+  * decimal sums over a bounded grain) has no streaming twin: its
+  * streaming face is the batch operator's own grain over a stream plus
+  * the batch readout, run by [[startReadout]]. The starters left here
+  * are the served ones and the state folds that are not algebraic.
   *
   * No watermark by default: the reference accepts late data forever
   * (no Beam windowing/triggers — SURVEY.md §2.3), and every merge is
@@ -344,7 +339,7 @@ object StreamingMetrics {
     * (SADD, PFADD, puts) absorb. A `checkpointRoot` written by the
     * earlier one-query-per-branch layout (`visits_counter`,
     * `set_users_minute`, … subdirectories) cannot be resumed and is
-    * refused. */
+    * refused. Kept: the served pipeline, which `DashboardMain` runs. */
   def startPipeline(events: Dataset[LogEvent], store: KeyValueMetricsSink,
       watermark: Option[String] = None,
       checkpointRoot: Option[String] = None): Seq[StreamingQuery] = {
@@ -391,154 +386,35 @@ object StreamingMetrics {
     fanOut +: approxUsers
   }
 
-  /** The visits branch with a checkpoint location — the restartable
-    * production form. On restart from the same checkpoint the query
-    * resumes from committed offsets, so cleanly-stopped batches are
-    * never re-delivered to the store (`StreamingSpec` asserts no
-    * double-count across a stop/start). foreachBatch is at-least-once
-    * under mid-batch crashes; the reference's INCRBY sink has the same
-    * contract, and the batchId parameter is the dedup key an idempotent
-    * store would use. */
-  def startVisitsCheckpointed(events: Dataset[LogEvent], store: KeyValueMetricsSink,
-      checkpointDir: String, queryName: String): StreamingQuery =
-    events.toDF()
-      .select(minuteKey("visitCounter").as("k"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointDir)
+  /** The streaming face of an algebraic batch metric: `grain` is the
+    * batch operator's own grain aggregate over a stream, which Spark
+    * keeps in complete mode, and every micro-batch applies the batch
+    * `readout` to it and publishes the collected result as the temp
+    * view `view`. The grain is algebraic (counts, exact decimal sums),
+    * so after any micro-batch slicing the view equals the batch face
+    * `readout(grain(events so far))`; it is bounded by its key domain,
+    * so the per-batch readout never rescans events. The query is named
+    * `view`. */
+  def startReadout(grain: DataFrame, view: String)(
+      readout: DataFrame => DataFrame): StreamingQuery = {
+    // foreachBatch hands its frame a per-batch cloned session whose temp
+    // catalog the caller never sees: the view goes on the stream's own
+    val session = grain.sparkSession
+    grain.writeStream.outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.groupBy("k").count().collect()
-          .foreach(r => store.incrBy(r.getString(0), r.getLong(1)))
+        // a readout may read the grain more than once; the cache is
+        // released per batch so a long-running stream never piles them up
+        val g = batch.persist()
+        try {
+          // materialized before it is published: a lazy view over the
+          // batch frame would dangle once its state snapshot is released
+          val out = readout(g)
+          val rows = out.collect()
+          session.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+            .createOrReplaceTempView(view)
+        } finally g.unpersist()
       }
-      .queryName(queryName).start()
-
-  /** [[startVisitsCheckpointed]] with the redelivery gap closed: each
-    * micro-batch's INCRBY merges run under
-    * [[MetricsStore.applyBatchOnce]], so a batch re-delivered after a
-    * mid-batch crash (foreachBatch is at-least-once) is skipped instead
-    * of double-counted — effectively-once INCRBY, the property the
-    * reference's Redis sink lacks (SURVEY.md §7.3). */
-  def startVisitsIdempotent(events: Dataset[LogEvent], store: MetricsStore,
-      checkpointDir: String, queryName: String): StreamingQuery =
-    events.toDF()
-      .select(minuteKey("visitCounter").as("k"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val _ = store.applyBatchOnce(queryName, batchId) {
-          batch.groupBy("k").count().collect()
-            .foreach(r => store.incrBy(r.getString(0), r.getLong(1)))
-        }
-      }
-      .queryName(queryName).start()
-
-  /** Idiomatic-Spark exact distinct: the member set lives in Spark's
-    * state store per group key, updated incrementally — the engine-side
-    * equivalent of the reference's Redis SADD+SCARD pair, usable with
-    * checkpointing/recovery. Update output mode. */
-  def distinctMembersPerKey(kv: Dataset[(String, String)]): Dataset[(String, Long)] = {
-    import kv.sparkSession.implicits._
-    kv.groupByKey(_._1)
-      .flatMapGroupsWithState[Set[String], (String, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, String)], state: GroupState[Set[String]]) =>
-          val next = state.getOption.getOrElse(Set.empty) ++ rows.map(_._2)
-          state.update(next)
-          Iterator((key, next.size.toLong))
-      }
-  }
-
-  /** Streaming exact dedup: drop events whose key columns were already
-    * seen, keeping per-key state only as long as the watermark allows —
-    * the streaming face of the batch `dedup_exact` pass (a training
-    * pipeline dedups its ingest stream the same way its batch store is
-    * deduped). Without a watermark the state grows unboundedly, exactly
-    * like the reference's forever-retained Redis sets; pass one for
-    * bounded state. */
-  def dedupExactStream(df: DataFrame, keys: Seq[String],
-      watermark: Option[(String, String)] = None): DataFrame = {
-    val wm = watermark.fold(df) { case (c, w) => df.withWatermark(c, w) }
-    if (watermark.isDefined) wm.dropDuplicatesWithinWatermark(keys)
-    else wm.dropDuplicates(keys)
-  }
-
-  /** Stream-static enrichment: join a stream against a batch dimension
-    * table — Spark plans the static side as a broadcast per micro-batch,
-    * so the stream is never shuffled. The standard shape for decorating
-    * events with slowly-changing reference data (user → segment,
-    * experiment → owner) on the way into the metric branches. */
-  def enrichStream(stream: DataFrame, dim: DataFrame,
-      keys: Seq[String]): DataFrame =
-    stream.join(org.apache.spark.sql.functions.broadcast(dim), keys, "left")
-
-  /** Stream-stream attribution: every (purchase, prior click) pair of
-    * the same user within `horizon` — Spark's watermarked interval join,
-    * which bounds both sides' state to the horizon. The batch as-of join
-    * ([[graft.operators.AsOf]]) keeps only the LATEST prior click;
-    * stream-stream joins cannot express "latest" directly (a later
-    * click may still arrive), so the streaming shape emits all matches
-    * within the horizon and callers post-aggregate if they need the
-    * most recent.
-    *
-    * Inputs carry (user_id, event_id, ts); output one row per
-    * (purchase, click) match. */
-  def attributionStream(clicks: DataFrame, purchases: DataFrame,
-      horizon: String = "1 hour"): DataFrame = {
-    val c = clicks
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", horizon)
-    val p = purchases
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", horizon)
-    p.join(c,
-      col("user_id") === col("c_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr(s"INTERVAL $horizon"))
-      .select(col("purchase_id"), col("user_id"), col("click_id"),
-        col("click_ts"), col("purchase_ts"))
-  }
-
-  /** Streaming sessionization via `session_window` + watermark: session
-    * aggregates are emitted once their window closes (watermark passes
-    * the gap), the streaming twin of
-    * [[graft.operators.Metrics.userSessionsViaSessionWindow]]. Append
-    * mode: each session row is final when emitted. */
-  /** Sliding-window visits as an update-mode stream — the streaming
-    * face of [[graft.operators.Metrics.visitsSliding]]: the same
-    * grouping core (each event updates `minutes` overlapping window
-    * rows per micro-batch), minus the presentation sort (sorting an
-    * unbounded stream is undefined; the reader orders). Without a
-    * watermark the per-window state is kept forever, matching the
-    * reference's accept-late-data-forever stance; pass one to bound
-    * state. */
-  def slidingVisitsStream(events: Dataset[LogEvent], minutes: Int = 5,
-      watermark: Option[String] = None): DataFrame = {
-    val base = events.toDF()
-    val wm = watermark.fold(base)(w => base.withWatermark(LogEvent.Ts, w))
-    wm.groupBy(window(col(LogEvent.Ts), s"$minutes minutes", "1 minute"))
-      .agg(count(lit(1)).as("visits"))
-      .select(date_format(col("window.start"),
-        graft.operators.Windows.MinuteKeyFormat).as("window_start"),
-        col("visits"))
-  }
-
-  /** Rolling distinct actives as an update-mode stream — the streaming
-    * face of [[graft.operators.Metrics.rollingActiveUsers]], with
-    * `approx_count_distinct` instead of exact distinct: per-window
-    * state is then one HLL sketch (KB-sized) rather than a uid set,
-    * which is what makes real DAU/WAU spans (days of minutes × millions
-    * of uids) streamable — the same sketch-for-state trade the
-    * reference makes with PFADD (README.md:22-30). */
-  def rollingActivesStream(events: Dataset[LogEvent], minutes: Int = 5,
-      rsd: Double = 0.05, watermark: Option[String] = None): DataFrame = {
-    val base = events.toDF()
-    val wm = watermark.fold(base)(w => base.withWatermark(LogEvent.Ts, w))
-    wm.groupBy(window(col(LogEvent.Ts), s"$minutes minutes", "1 minute"))
-      .agg(approx_count_distinct(col(LogEvent.Uid), rsd).as("active_users"))
-      .select(date_format(col("window.start"),
-        graft.operators.Windows.MinuteKeyFormat).as("window_start"),
-        col("active_users"))
+      .queryName(view).start()
   }
 
   /** A5's sketch face as a stream: all-time per-variant theta sketches
@@ -546,7 +422,8 @@ object StreamingMetrics {
     * micro-batch. Spark's own sketch state is the mergeable half
     * (PFADD analog); [[MetricsStore.overlapApprox]] is the read half
     * (SINTERSTORE analog) — together the scale path for the overlap
-    * endpoint, whose exact-set twin keeps raw uid sets. */
+    * endpoint, whose exact-set twin keeps raw uid sets. Kept: the
+    * dashboard's `/variantsOverlapApprox` serves its sketches. */
   def startVariantSketches(events: Dataset[LogEvent],
       store: MetricsStore, queryName: String): StreamingQuery =
     events.toDF()
@@ -556,104 +433,6 @@ object StreamingMetrics {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.collect().foreach(r =>
           store.putSketch(r.getString(0), r.getAs[Array[Byte]](1)))
-      }
-      .queryName(queryName).start()
-
-  /** Streaming materialization of the BATCH store: every micro-batch
-    * folds into the running [[graft.store.MetricsTables]] snapshot via
-    * its PFMERGE/INCRBY merge — so the streaming face and the batch
-    * face are literally the same table (the merge law tested in
-    * `StoreSpec` makes the fold value-identical to one-shot
-    * materialization of everything seen). The snapshot is
-    * key-domain-sized; `localCheckpoint` truncates the per-batch fold
-    * lineage exactly as the iterative operators do. In production the
-    * fold writes a new versioned snapshot directory per batch (or
-    * interval) and flips the reader pointer. */
-  class StoreMaterializer {
-    @volatile private var snap: Option[DataFrame] = None
-    def fold(batchEvents: DataFrame): Unit = synchronized {
-      val next = snap match {
-        case None => graft.store.MetricsTables.materialize(batchEvents)
-        case Some(s) => graft.store.MetricsTables.update(s, batchEvents)
-      }
-      snap = Some(next.localCheckpoint())
-    }
-    /** The current snapshot (empty option before the first batch). */
-    def snapshot: Option[DataFrame] = snap
-  }
-
-  /** Wire a LogEvent stream into a [[StoreMaterializer]]. */
-  def startStoreMaterialization(events: Dataset[LogEvent],
-      mat: StoreMaterializer, queryName: String): StreamingQuery =
-    events.toDF()
-      .withColumnRenamed("experimentId", LogEvent.ExperimentId)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mat.fold(batch)
-      }
-      .queryName(queryName).start()
-
-  /** Streaming incremental dedup's index state: MinHash band postings
-    * plus the signature of every ACCEPTED (non-dup) document, and the
-    * dup verdicts. In production these are bucketed tables appended
-    * per micro-batch (the batch face, [[graft.operators.Dedup
-    * .incrementalLshPairs]], shows that join shape); a TrieMap keeps
-    * the streaming unit self-contained with identical semantics, the
-    * same trade [[MetricsStore]] makes for Redis. */
-  class DedupIndexStore extends Serializable {
-    /** band_hash → accepted doc ids posting list. */
-    val bands = TrieMap.empty[Long, List[Long]]
-    /** accepted doc_id → MinHash signature (for candidate verification). */
-    val sigs = TrieMap.empty[Long, Array[Long]]
-    /** rejected doc_id → the accepted doc it duplicates. */
-    val dups = TrieMap.empty[Long, Long]
-  }
-
-  /** Streaming incremental dedup — the ingest-time face of
-    * [[graft.operators.Dedup.incrementalLshPairs]]: each arriving
-    * document is signed once (the codegen'd `minhash_sig` kernel runs
-    * distributed, per-row), probed against the accumulated band index,
-    * and either REJECTED (recorded in `dups`, index untouched) or
-    * ACCEPTED (bands + signature appended) — so the index only ever
-    * holds the deduplicated corpus, exactly like a production ingest
-    * gate. Candidates are verified by signature agreement, the
-    * unbiased MinHash estimate of Jaccard (E[matching positions / k]
-    * = J) — the standard streaming verification, since the corpus
-    * texts are not retained. Docs are processed in doc_id order within
-    * a batch so keep-first is deterministic.
-    *
-    * The per-batch index walk runs driver-side over the COLLECTED
-    * micro-batch (like every foreachBatch branch above); at scale the
-    * probe becomes the batch operator's band equi-join against the
-    * index table, run per micro-batch from foreachBatch. */
-  def startIncrementalDedup(docs: DataFrame, store: DedupIndexStore,
-      queryName: String, k: Int = 4, numPerm: Int = 64, nBands: Int = 16,
-      threshold: Double = 0.5): StreamingQuery =
-    docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sigRows = graft.operators.Dedup.minhashSignatures(batch, k, numPerm)
-          .select(col("doc_id"), col("sig"),
-            expr(s"minhash_bands(sig, $nBands)").as("bands"))
-          .collect()
-        sigRows.sortBy(_.getLong(0)).foreach { r =>
-          val id = r.getLong(0)
-          val sig = r.getSeq[Long](1).toArray
-          val bhs = r.getSeq[Long](2)
-          val cands = bhs.flatMap(store.bands.get).flatten.distinct
-          val best = cands.iterator.map { c =>
-            val cs = store.sigs(c)
-            val agree = sig.indices.count(i => sig(i) == cs(i))
-            (c, agree.toDouble / sig.length)
-          }.filter(_._2 >= threshold).toSeq
-            .sortBy { case (cid, est) => (-est, cid) }.headOption
-          best match {
-            case Some((matchId, _)) => store.dups.put(id, matchId)
-            case None =>
-              store.sigs.put(id, sig)
-              bhs.foreach(bh => store.bands.updateWith(bh)(
-                p => Some(id :: p.getOrElse(Nil))))
-          }
-        }
       }
       .queryName(queryName).start()
 
@@ -675,7 +454,8 @@ object StreamingMetrics {
     * [[graft.operators.Classifier.qualityScorePinned]] deployment
     * scoring (broadcast pinned-weight literal, admit `predicted = 1`)
     * — streamed scores ≡ the batch face, asserted in
-    * `StreamingSpec`. */
+    * `StreamingSpec`. Kept as a fold: the first-seen representative
+    * per fingerprint is not an algebraic grain. */
   def startCorpusIngest(docs: DataFrame, store: KeyValueMetricsSink,
       queryName: String, minTokens: Int = 32, maxDupFrac: Double = 0.2,
       valPct: Int = 10, modelGate: Boolean = false,
@@ -732,6 +512,13 @@ object StreamingMetrics {
       .queryName(queryName).start()
   }
 
+  /** Streaming sessionization via `session_window` + watermark: session
+    * aggregates are emitted once their window closes (watermark passes
+    * the gap), the streaming twin of
+    * [[graft.operators.Metrics.userSessionsViaSessionWindow]]. Append
+    * mode: each session row is final when emitted. Kept as a fold: a
+    * later event can merge two sessions, so a session's count is not
+    * an algebraic grain until the watermark closes it. */
   def startSessionization(events: Dataset[LogEvent], queryName: String,
       gapSeconds: Long = 1800, watermark: String = "1 hour"): StreamingQuery =
     events.toDF()
@@ -746,9 +533,6 @@ object StreamingMetrics {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** The stateful exact-uniques branch wired to a memory sink through
-    * update mode; returns the started query. Results are read with
-    * `spark.table(queryName)`. */
   /** Streaming trailing z-score anomaly detection — the stateful face
     * of [[graft.operators.Analytics.visitsZscore]]: watermarked
     * tumbling-minute counts close in append mode, and a
@@ -760,7 +544,8 @@ object StreamingMetrics {
     * hundred bytes regardless of stream volume; the single grouping
     * key is fine because its input is the minute-level AGGREGATE, not
     * raw events. Emits `(minute_key, visits, z)` per closed minute
-    * into the `queryName` memory table. */
+    * into the `queryName` memory table. Kept as a fold: z reads a
+    * lookback window over the closed-minute series. */
   def startVisitsAnomaly(events: Dataset[LogEvent], queryName: String,
       watermark: String = "2 minutes", lookback: Int = 10,
       minN: Int = 5): StreamingQuery = {
@@ -827,7 +612,8 @@ object StreamingMetrics {
     * the orthogonal guard for that.) State is three longs per monitor
     * key — O(1) forever, no window history. Emits (minute_key,
     * visits, cusum_pos, cusum_neg, alarm) per closed OR gap minute;
-    * alarm at S > 2·h. */
+    * alarm at S > 2·h. Kept as a fold: S⁺/S⁻ are a sequential clamped
+    * recurrence, not an algebraic grain. */
   def startVisitsCusum(events: Dataset[LogEvent], queryName: String,
       targetPerMin: Long, watermark: String = "2 minutes",
       slackHalf: Long = 1, alarmVisits: Long = 8): StreamingQuery = {
@@ -906,7 +692,8 @@ object StreamingMetrics {
     * target table (SLOs differ per experiment) would ride in as a
     * broadcast map lookup in the key extractor without changing the
     * state shape. Emits (experiment_id, variant, minute_key, visits,
-    * cusum_pos, cusum_neg, alarm) per closed or gap minute. */
+    * cusum_pos, cusum_neg, alarm) per closed or gap minute. Kept as a
+    * fold, for the reason [[startVisitsCusum]] is. */
   def startKeyedCusum(events: Dataset[LogEvent], queryName: String,
       targetPerMin: Long, watermark: String = "2 minutes",
       slackHalf: Long = 1, alarmVisits: Long = 8): StreamingQuery = {
@@ -953,7 +740,8 @@ object StreamingMetrics {
     * (asserted bit-exact in `StreamingSpec`). State is (2 doubles +
     * 2 longs + 1 bool) PER GROUP forever — bounded by live groups,
     * never by event volume — and emits each touched group's current
-    * selection per micro-batch (update mode). */
+    * selection per micro-batch (update mode). Kept as a fold: the
+    * tie-ordered top-2 is no count or sum the batch face aggregates. */
   def startBestOfN(events: DataFrame, queryName: String): StreamingQuery = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -988,364 +776,4 @@ object StreamingMetrics {
       .writeStream.outputMode("update")
       .format("memory").queryName(queryName)
       .start()
-  }
-
-  /** Streaming pass@k — the ingest-time face of
-    * [[graft.operators.Preference.passAtK]]: per-task running
-    * (n, c) counts are ALGEBRAIC (order- and slicing-independent),
-    * and the estimator is the SAME fixed-order product chain as the
-    * batch face (`Preference.passAtKExpr`), so the streamed readout
-    * after any micro-batch cut is bit-identical to the batch query
-    * over the same events (asserted in `StreamingSpec`). State is two
-    * longs per live task; complete-mode output is task-grain. */
-  def startPassAtK(events: DataFrame, queryName: String, k: Int = 4,
-      threshold: Double = 100.0): StreamingQuery =
-    events
-      .select(col("user_id"), col("value"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("value") > threshold, 1L).otherwise(0L)).as("c"))
-      .where(col("n") >= k)
-      .select(col("user_id"), col("n"), col("c"),
-        expr(graft.operators.Preference.passAtKExpr(k)).as("pass_at_k"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .start()
-
-  /** Streaming Wald SPRT monitor — the ingest-time face of
-    * [[graft.operators.Analytics.sprtConversion]]'s FINAL row: the
-    * running (n, c) conversion totals are algebraic, and the LLR and
-    * decision are the SAME quantized chains as the batch face
-    * (`Analytics.sprtLlrExpr`/`sprtDecisionExpr`), so the streamed
-    * verdict after any micro-batch slicing is bit-identical to the
-    * batch trajectory's last row over the same events (asserted in
-    * `StreamingSpec`). Two longs of state total — the sequential test
-    * a production gate actually polls. */
-  def startSprtConversion(events: DataFrame, queryName: String,
-      threshold: Double = 100.0, p0: Double = 0.10, p1: Double = 0.15,
-      alpha: Double = 0.05, beta: Double = 0.05): StreamingQuery =
-    events
-      .select(col("value"))
-      .agg(count(lit(1)).as("n_cum"),
-        sum(when(col("value") > threshold, 1L).otherwise(0L))
-          .as("conv_cum"))
-      .withColumn("llr",
-        expr(graft.operators.Analytics.sprtLlrExpr(p0, p1)))
-      .select(col("n_cum"), col("conv_cum"), col("llr"),
-        expr(graft.operators.Analytics.sprtDecisionExpr(alpha, beta))
-          .as("decision"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .start()
-
-  /** KEYED streaming SPRT — one independent Wald monitor per
-    * (experiment, variant) arm, the multi-tenant production shape of
-    * [[startSprtConversion]] (which runs one global monitor; the
-    * [[startKeyedCusum]] relationship). State is TWO LONGS per arm
-    * (n, conversions) folded in `flatMapGroupsWithState`; the LLR and
-    * decision are computed DOWNSTREAM of the state fold by the SAME
-    * shared SQL chains as the batch face
-    * (`Analytics.sprtLlrExpr`/`sprtDecisionExpr` over the emitted
-    * running totals), so each arm's verdict after any micro-batch
-    * slicing is bit-identical to the batch chain over that arm's
-    * events (asserted in `StreamingSpec`). Emits each touched arm's
-    * current (n_cum, conv_cum, llr, decision) per micro-batch. */
-  def startKeyedSprt(events: DataFrame, queryName: String,
-      threshold: Double = 100.0, p0: Double = 0.10, p1: Double = 0.15,
-      alpha: Double = 0.05, beta: Double = 0.05): StreamingQuery = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(get_json_object(col("props"), "$.k").as("experiment_id"),
-        col("event_type").as("variant"), col("value"))
-      .where(col("experiment_id").isNotNull)
-      .as[(String, String, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState[(Long, Long),
-        (String, String, Long, Long)](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: (String, String), rows: Iterator[(String, String, Double)],
-            state: GroupState[(Long, Long)]) =>
-          var (n, c) = state.getOption.getOrElse((0L, 0L))
-          rows.foreach { r =>
-            n += 1; if (r._3 > threshold) c += 1
-          }
-          state.update((n, c))
-          Iterator((key._1, key._2, n, c))
-      }
-      .toDF("experiment_id", "variant", "n_cum", "conv_cum")
-      .select(col("experiment_id"), col("variant"), col("n_cum"),
-        col("conv_cum"),
-        expr(graft.operators.Analytics.sprtLlrExpr(p0, p1)).as("llr"))
-      .select(col("experiment_id"), col("variant"), col("n_cum"),
-        col("conv_cum"), col("llr"),
-        expr(graft.operators.Analytics.sprtDecisionExpr(alpha, beta))
-          .as("decision"))
-      .writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .start()
-  }
-
-  /** Streaming A/B arm statistics — the ingest-time face of
-    * [[graft.operators.Analytics.variantLift]]: per-(experiment,
-    * variant) running moments (n, Σv, Σv²) as DECIMAL sums, which are
-    * ALGEBRAIC (order- and batch-slicing-independent), so the streamed
-    * state after any micro-batch cut is bit-identical to the one-shot
-    * batch aggregate — the same fold-merge law visits_incremental
-    * pins for counters, extended to second moments. The serving layer
-    * derives mean/lift/Welch-t from the state exactly like the batch
-    * face; the state itself is bounded by the arm table (experiments ×
-    * variants), so complete-mode output stays driver-sized. */
-  def startVariantLift(events: DataFrame, queryName: String): StreamingQuery =
-    events
-      .select(get_json_object(col("props"), "$.k").as("experiment_id"),
-        col("event_type").as("variant"), col("value"))
-      .where(col("experiment_id").isNotNull)
-      .groupBy(col("experiment_id"), col("variant"))
-      .agg(count(lit(1)).as("n"),
-        expr(graft.operators.Analytics.SumValue).as("s1"),
-        expr(graft.operators.Analytics.SumValueSq).as("s2"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .start()
-
-  /** [[startVariantLift]] completed through to the Welch-t READOUT —
-    * the end-to-end A/B dashboard face: the same running arm moments,
-    * then per micro-batch the IDENTICAL derivation chain as the batch
-    * face (`Analytics.liftFromArms` — control pick, lift, DECIMAL(18,9)-
-    * quantized t), published to a session temp view named `queryName`.
-    * Because the moments are algebraic decimal sums and the derivation
-    * is the shared scalar chain, the streamed readout after ANY
-    * micro-batch slicing is bit-equal to `Analytics.variantLift` over
-    * the same events (asserted in `StreamingSpec`). The derivation
-    * runs inside `foreachBatch` on the complete-mode arm state — a
-    * bounded table (experiments × variants), so the per-batch tail is
-    * broadcast-sized work, never a second event scan. */
-  def startVariantLiftT(events: DataFrame, queryName: String): StreamingQuery = {
-    // the readout view must register on the CALLER's session —
-    // foreachBatch hands its frame a per-batch cloned session whose
-    // temp catalog the caller never sees
-    val session = events.sparkSession
-    events
-      .select(get_json_object(col("props"), "$.k").as("experiment_id"),
-        col("event_type").as("variant"), col("value"))
-      .where(col("experiment_id").isNotNull)
-      .groupBy(col("experiment_id"), col("variant"))
-      .agg(count(lit(1)).as("n"),
-        expr(graft.operators.Analytics.SumValue).as("s1"),
-        expr(graft.operators.Analytics.SumValueSq).as("s2"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (arms: DataFrame, _: Long) =>
-        val out = graft.operators.Analytics.liftFromArms(arms)
-        // materialize the bounded readout, then publish atomically —
-        // a lazy view over the batch frame would dangle once the
-        // micro-batch's state snapshot is released
-        val rows = out.collect()
-        session
-          .createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .createOrReplaceTempView(queryName)
-      }
-      .start()
-  }
-
-  /** Streaming Benjamini–Hochberg FDR over the live experiment
-    * battery — [[startVariantLiftT]]'s correction layer: the same
-    * running per-arm state EXTENDED with the conversion count (all
-    * four sums algebraic — count, two DECIMAL moments, an integer
-    * conversion tally — so the arm state after any micro-batch cut is
-    * bit-identical to the batch aggregate), then per micro-batch the
-    * IDENTICAL battery derivation as the batch face
-    * (`Analytics.fdrFromArms`: shared Welch/χ²/erfc chains, BH rank +
-    * reverse running-min), published to a session temp view. The
-    * streamed q-values and reject set after ANY slicing are bit-equal
-    * to `Analytics.fdrExperiments` over the same events (asserted in
-    * `StreamingSpec`). Per-batch tail cost: the bounded battery
-    * (2 rows per treated arm), never a second event scan. */
-  def startFdrExperiments(events: DataFrame, queryName: String,
-      alpha: Double = 0.05, threshold: Double = 100.0): StreamingQuery = {
-    val session = events.sparkSession
-    events
-      .select(get_json_object(col("props"), "$.k").as("experiment_id"),
-        col("event_type").as("variant"), col("value"))
-      .where(col("experiment_id").isNotNull)
-      .groupBy(col("experiment_id"), col("variant"))
-      .agg(count(lit(1)).as("n"),
-        expr(graft.operators.Analytics.SumValue).as("s1"),
-        expr(graft.operators.Analytics.SumValueSq).as("s2"),
-        sum(when(col("value") > threshold, 1L).otherwise(0L)).as("conv"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (arms: DataFrame, _: Long) =>
-        val out = graft.operators.Analytics.fdrFromArms(arms, alpha)
-        val rows = out.collect()
-        session
-          .createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .createOrReplaceTempView(queryName)
-      }
-      .start()
-  }
-
-  /** Streaming Mann–Whitney U battery — the nonparametric sibling of
-    * [[startFdrExperiments]]: the running state is the tie-group
-    * grain (one COUNT per (experiment, variant, value) — algebraic,
-    * so the grain after any micro-batch cut is bit-identical to the
-    * batch aggregate; bounded by the experiment × 2-decimal-value ×
-    * variant DOMAIN, the same boundedness argument as the batch
-    * face's cached grain), then per micro-batch the IDENTICAL
-    * derivation tail as the batch face (`Analytics.mwuFromGrain`:
-    * running control count, decimal 2U/tie sums, continuity-corrected
-    * z, erfc-lattice p, BH step-up). Streamed q-values and reject set
-    * after ANY slicing are bit-equal to `Analytics.mwuExperiments`
-    * over the same events (asserted in `StreamingSpec`). */
-  def startMwuExperiments(events: DataFrame, queryName: String,
-      alpha: Double = 0.05): StreamingQuery = {
-    val session = events.sparkSession
-    events
-      .select(get_json_object(col("props"), "$.k").as("experiment_id"),
-        col("event_type").as("variant"), col("value"))
-      // NULL values drop BEFORE the running grain, mirroring the
-      // batch face — rank tests have no NULL observation semantics
-      .where(col("experiment_id").isNotNull && col("value").isNotNull)
-      .groupBy(col("experiment_id"), col("value"), col("variant"))
-      .agg(count(lit(1)).as("cnt"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (grain: DataFrame, _: Long) =>
-        val out = graft.operators.Analytics.mwuFromGrain(grain, alpha)
-        val rows = out.collect()
-        session
-          .createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .createOrReplaceTempView(queryName)
-      }
-      .start()
-  }
-
-  /** Streaming Kruskal–Wallis battery — the k-sample completion of
-    * [[startMwuExperiments]], off the SAME running state: both rank
-    * tests derive from the (experiment, value, variant) tie-group
-    * grain (algebraic COUNTs, bounded by the experiment ×
-    * 2-decimal-value × variant DOMAIN), so streaming the k-sample
-    * test costs exactly one more `foreachBatch` tail — per
-    * micro-batch the IDENTICAL derivation as the batch face
-    * (`Analytics.kruskalFromGrain`: cumulative total count, decimal
-    * 2R sums, tie-corrected H′, Wilson–Hilferty χ² tail). Streamed
-    * H′/p after ANY slicing are bit-equal to
-    * `Analytics.kruskalExperiments` over the same events (asserted
-    * in `StreamingSpec`). */
-  def startKruskalExperiments(events: DataFrame,
-      queryName: String): StreamingQuery = {
-    val session = events.sparkSession
-    events
-      .select(get_json_object(col("props"), "$.k").as("experiment_id"),
-        col("event_type").as("variant"), col("value"))
-      .where(col("experiment_id").isNotNull && col("value").isNotNull)
-      .groupBy(col("experiment_id"), col("value"), col("variant"))
-      .agg(count(lit(1)).as("cnt"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (grain: DataFrame, _: Long) =>
-        val out = graft.operators.Analytics.kruskalFromGrain(grain)
-        val rows = out.collect()
-        session
-          .createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .createOrReplaceTempView(queryName)
-      }
-      .start()
-  }
-
-  /** Streaming CUPED readout — running per-unit period moments: the
-    * state is the (experiment, user, variant, pre) grain carrying an
-    * algebraic COUNT and raw-DECIMAL value sum (unit-bounded — never
-    * event-sized), and per micro-batch the IDENTICAL derivation tail
-    * as the batch face (`Analytics.cupedFromG1`: 1e-6 lattice unit
-    * means, exact decimal pooled/arm moments, θ, adjusted means).
-    *
-    * The period split is a PARAMETER here — a static
-    * (experiment_id, mid-in-unix-micros) frame, stream-static
-    * broadcast-joined — where the batch face derives the midpoint
-    * from the observed event-time bounds. That is deliberate, not a
-    * shortcut: a data-derived midpoint is not computable from
-    * bounded streaming state (every arriving event can move max(ts),
-    * re-labeling already-aggregated rows across the pre/post
-    * boundary), and in a real CUPED deployment the pre-experiment
-    * window IS declared before launch (Deng et al. WSDM'13 §3 — the
-    * covariate must predate assignment). Streamed output after ANY
-    * slicing is bit-equal to the batch tail at the same splits
-    * (asserted in `StreamingSpec` against a batch run whose derived
-    * midpoints are fed back in). */
-  def startCupedLift(events: DataFrame, queryName: String,
-      splits: DataFrame): StreamingQuery = {
-    val session = events.sparkSession
-    graft.operators.Analytics.cupedBase(events)
-      .join(broadcast(splits), Seq("experiment_id"))
-      .groupBy(col("experiment_id"), col("user_id"), col("variant"),
-        (col("us") <= col("mid")).as("pre"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("s"))
-      .writeStream.outputMode("complete")
-      .foreachBatch { (g1: DataFrame, _: Long) =>
-        val out = graft.operators.Analytics.cupedFromG1(g1)
-        val rows = out.collect()
-        session
-          .createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-          .createOrReplaceTempView(queryName)
-      }
-      .start()
-  }
-
-  /** Streaming pairwise win-rate with Poisson-bootstrap CI — the
-    * resampling member of the streaming experiment console. Running
-    * state is the (experiment, user, item) exact-DECIMAL value-total
-    * grain (judge-bounded, never event-sized; decimal sums are exact
-    * and associative so the complete-mode aggregate equals the batch
-    * grain under ANY slicing), and per micro-batch the foreachBatch
-    * tail replays the IDENTICAL batch derivation
-    * ([[graft.operators.Preference.winrateFromComps]]: PairExpand
-    * comparisons, ×B Poisson resample, integer-exact order-statistic
-    * CI, full-outer surfacing) — streamed output after every cut is
-    * bit-equal to [[graft.operators.Preference.winrateBootstrapCi]]
-    * over the same events (StreamingSpec asserts at BOTH kernels).
-    *
-    * `kernel` threads [[graft.operators.Analytics.bootstrapU]]'s
-    * draw-kernel flag through the streaming path: `"md5"` (default,
-    * oracle-parity) or `"xxhash64"` (the flag-gated scale kernel,
-    * measured 3.5× on wide-key high-B resamples at 100× — SCALE.md
-    * §7.13) — so a production micro-batch console can run the cheap
-    * kernel while the pinned batch face keeps md5. The ×B explode
-    * happens INSIDE foreachBatch on the judge-bounded grain, so
-    * per-batch resample cost is grain-sized × B regardless of how
-    * many events the micro-batch carried. */
-  def startWinrateBootstrapCi(events: DataFrame, queryName: String,
-      replicates: Int = 200, kernel: String = "md5"): StreamingQuery = {
-    val session = events.sparkSession
-    graft.operators.Preference.winrateUt(events)
-      .writeStream.outputMode("complete")
-      .foreachBatch { (ut: DataFrame, _: Long) =>
-        // comps read twice (point + resample): cache for the batch,
-        // release eagerly — a leaked per-micro-batch cache would grow
-        // without bound over a long-running stream
-        val comps = graft.operators.Preference.winrateComps(ut).persist()
-        try {
-          val out = graft.operators.Preference
-            .winrateFromComps(comps, replicates, kernel)
-          val rows = out.collect()
-          session
-            .createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-            .createOrReplaceTempView(queryName)
-        } finally comps.unpersist()
-      }
-      .start()
-  }
-
-  def startExactUniques(events: Dataset[LogEvent], queryName: String): StreamingQuery = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val kv = events.map(e => (
-      "set_dthr_" + e.timestamp.toInstant.atZone(java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy_MM_dd'T'HH_mm")),
-      e.uid))
-    distinctMembersPerKey(kv)
-      .toDF("minute_key", "unique_users")
-      .writeStream.outputMode("update")
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-}
+  }}

@@ -178,6 +178,20 @@ class AnalyticsSpec extends AnyFunSuite {
       === Map(2L -> 1L, 3L -> 2L, 1L -> 3L))
   }
 
+  test("rankByRange: a non-deterministic frame falls back to the checkpointed rank") {
+    // rand() after a shuffle may draw different values each time the
+    // lazy rank re-derives df; the guard materializes df once instead
+    val df = spark.range(0, 400).repartition(6).withColumn("r", rand())
+    val (ranked, total) = Analytics.rankByRange(df, Seq("r", "id"), partitions = 8)
+    assert(ranked.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
+      "a non-deterministic frame must take the checkpointed path")
+    val got = ranked.select("id", "__rank").as[(Long, Long)].collect()
+    assert(total === 400L)
+    assert(got.length.toLong === total)
+    assert(got.map(_._2).sorted.toSeq === (1L to 400L))
+    assert(got.map(_._1).distinct.length === 400)
+  }
+
   test("ngramRepetition: dup fraction on a repeating doc; short docs excluded") {
     val docs = Seq(
       (1L, "a b a b a b"),   // trigrams: aba,bab,aba,bab → 4 total, 2 distinct

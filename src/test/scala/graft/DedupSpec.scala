@@ -74,26 +74,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got === Set((1L, "a b c d"), (1L, "b c d e")))
   }
 
-  test("bounded_collect_long ≡ collect_list + size filter, overflow yields null") {
-    import org.apache.spark.sql.functions._
-    graft.functions.BoundedCollectFunctions.register(spark)
-    // key "hot" has 5 members (> limit 3) → must come back null; the
-    // others collect normally. This is the stop-shingle memory bound:
-    // hot keys flip to an overflow flag instead of materializing.
-    val d = (1L to 5L).map(i => ("hot", i)) ++ Seq(("a", 10L), ("b", 20L), ("b", 21L))
-    val got = d.toDF("k", "v").groupBy("k")
-      .agg(expr("bounded_collect_long(v, 3)").as("ids"))
-      .as[(String, Option[Seq[Long]])].collect().toMap
-    assert(got("hot").isEmpty)
-    assert(got("a").get.sorted === Seq(10L))
-    assert(got("b").get.sorted === Seq(20L, 21L))
-    // exactly-at-limit does NOT overflow (matches size(ids) <= limit)
-    val atLimit = (1L to 3L).map(i => ("k", i)).toDF("k", "v").groupBy("k")
-      .agg(expr("bounded_collect_long(v, 3)").as("ids"))
-      .as[(String, Option[Seq[Long]])].collect().head._2
-    assert(atLimit.get.sorted === Seq(1L, 2L, 3L))
-  }
-
   test("connected components: path, star, and disjoint components get min-id labels (both paths)") {
     // path 1-2-3-4 (diameter 3: exercises multi-round propagation),
     // star 10-(11,12,13), disjoint pair 20-21

@@ -52,14 +52,11 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT map_keys(topk_sketch(t, 1, 8))[0] AS top FROM VALUES ('a'), ('b'), ('a') AS v(t)")
         .collect()(0).getString(0)
       assert(tk === "a")
-      // round-3 additions: ngram_stats, bounded_collect_long, vec_sum
+      // round-3 additions: ngram_stats, vec_sum
       val ng = s.sql(
         "SELECT ngram_stats(split('a b a b a b', ' '), 3) AS st")
         .collect()(0).getStruct(0)
       assert((ng.getLong(0), ng.getLong(1)) === (4L, 2L))
-      assert(s.sql(
-        "SELECT bounded_collect_long(v, 2) AS l FROM VALUES (1L), (2L), (3L) AS t(v)")
-        .collect()(0).isNullAt(0)) // 3 > limit 2 → overflow → null
       val vsRow = s.sql(
         """SELECT vec_sum(v) AS s FROM VALUES
           |  (array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{Loggen, Tables}
-import graft.streaming.{MetricsStore, StreamingMetrics}
+import graft.streaming.{MetricsReader, MetricsStore, StreamingMetrics}
 import graft.operators.Metrics
 
 /** SURVEY §5.5 parity smoke — the whole reference system in one test:
@@ -49,22 +49,28 @@ class LoggenParitySpec extends AnyFunSuite {
       .atZone(java.time.ZoneOffset.UTC).toLocalDateTime
       .truncatedTo(java.time.temporal.ChronoUnit.MINUTES)
 
+    // store reads come recent-first, keyed by minute; the batch
+    // series are oldest-first
+    def keyed(series: Seq[(java.time.LocalDateTime, Long)]) =
+      series.map { case (m, v) => MetricsReader.MinuteKeyFmt.format(m) -> v }
+
     // Q1 visits: store read vs zero-filled batch series
     val q1Batch = Metrics.visitsTimeseries(ev)
       .as[(String, Long)].collect().toSeq
-    assert(store.timeseries("visitCounter", nowMinute, 10) === q1Batch)
+    assert(keyed(store.timeseries("visitCounter", nowMinute, 10)(store.counter))
+      === q1Batch.reverse)
 
     // Q2 unique users (exact SADD/SCARD face)
     val q2Batch = Metrics.usersTimeseries(ev)
       .as[(String, Long)].collect().toSeq
-    assert(store.timeseries("set_dthr", nowMinute, 10, fromSets = true)
-      === q2Batch)
+    assert(keyed(store.timeseries("set_dthr", nowMinute, 10)(store.scard))
+      === q2Batch.reverse)
 
     // Q3 active experiments
     val q3Batch = Metrics.experimentsTimeseries(ev)
       .as[(String, Long)].collect().toSeq
-    assert(store.timeseries("set_experiments", nowMinute, 10, fromSets = true)
-      === q3Batch)
+    assert(keyed(store.timeseries("set_experiments", nowMinute, 10)(store.scard))
+      === q3Batch.reverse)
 
     // Q4 variant overlap — all-time pairwise set intersections
     val q4Batch = Metrics.variantOverlap(ev)
@@ -79,8 +85,8 @@ class LoggenParitySpec extends AnyFunSuite {
 
     // Q5 times spine: same closed-minute labels from both faces
     val q5Batch = Metrics.timesSpine(ev).as[String].collect().toSeq
-    assert(store.timeseries("visitCounter", nowMinute, 10).map(_._1)
-      === q5Batch)
+    assert(keyed(store.timeseries("visitCounter", nowMinute, 10)(store.counter))
+      .map(_._1) === q5Batch.reverse)
 
     // --- the same replay over a LIVE Redis store: generator → stream →
     // worker-side RESP writes → Redis reads ≡ the same batch twins.
@@ -96,11 +102,12 @@ class LoggenParitySpec extends AnyFunSuite {
         redisInput.addData(batch.toSeq)
         redisQueries.foreach(_.processAllAvailable())
       }
-      assert(sink.timeseries("visitCounter", nowMinute, 10) === q1Batch)
-      assert(sink.timeseries("set_dthr", nowMinute, 10, fromSets = true)
-        === q2Batch)
-      assert(sink.timeseries("set_experiments", nowMinute, 10, fromSets = true)
-        === q3Batch)
+      assert(keyed(sink.timeseries("visitCounter", nowMinute, 10)(sink.counter))
+        === q1Batch.reverse)
+      assert(keyed(sink.timeseries("set_dthr", nowMinute, 10)(sink.scard))
+        === q2Batch.reverse)
+      assert(keyed(sink.timeseries("set_experiments", nowMinute, 10)(sink.scard))
+        === q3Batch.reverse)
       assert(sink.overlap("set_var_") === q4Batch)
       // the PFADD face: estimates equal exact uniques under the test
       // server's exact-count fake — proving the raw members arrived

@@ -130,20 +130,6 @@ class RedisSinkSpec extends AnyFunSuite {
     }
   }
 
-  test("applyBatchOnce: SET NX ledger skips redelivery, clears marker on failure") {
-    withServer { (_, sink) =>
-      var runs = 0
-      assert(sink.applyBatchOnce("q", 0L) { runs += 1 })
-      assert(!sink.applyBatchOnce("q", 0L) { runs += 1 }) // redelivery skipped
-      assert(runs === 1)
-      intercept[RuntimeException] {
-        sink.applyBatchOnce("q", 1L) { throw new RuntimeException("boom") }
-      }
-      assert(sink.applyBatchOnce("q", 1L) { runs += 1 }) // marker was cleared
-      assert(runs === 2)
-    }
-  }
-
   test("sink survives java serialization (foreachBatch closure contract)") {
     withServer { (_, sink) =>
       sink.incrBy("pre", 1)

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.{MetricsStore, StreamingMetrics}
+import graft.operators.{Analytics, Metrics, Preference}
+import graft.streaming.{MetricsReader, MetricsStore, StreamingMetrics}
 
 /** Streaming semantics per SURVEY.md §5.4: update-mode incremental
   * results after each addData+processAllAvailable, including a late
@@ -45,13 +46,13 @@ class StreamingSpec extends AnyFunSuite {
 
       // Q4 read shape over the store: variant overlap via set intersection
       assert(store.overlap("set_var_") === Seq(("1", "2", 1L)))
-      // Q1 read shape: zero-filled closed minutes
+      // Q1 read shape: zero-filled closed minutes, recent-first
       val series = store.timeseries("visitCounter",
-        java.time.LocalDateTime.of(2026, 8, 12, 10, 17), lastMinutes = 3)
-      assert(series === Seq(
-        ("2026_08_12T10_14", 0L),
+        java.time.LocalDateTime.of(2026, 8, 12, 10, 17), lastMinutes = 3)(store.counter)
+      assert(series.map { case (m, v) => MetricsReader.MinuteKeyFmt.format(m) -> v } === Seq(
+        ("2026_08_12T10_16", 2L),
         ("2026_08_12T10_15", 3L),
-        ("2026_08_12T10_16", 2L)))
+        ("2026_08_12T10_14", 0L)))
     } finally queries.foreach(_.stop())
   }
 
@@ -162,27 +163,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally queries.foreach(_.stop())
   }
 
-  test("streaming exact dedup drops repeated keys across micro-batches") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[LogEvent]
-    input.addData(
-      ev("u1", "e1", "1", "2026-08-12 10:15:03"),
-      ev("u1", "e1", "1", "2026-08-12 10:15:03"), // dup in-batch
-      ev("u2", "e1", "2", "2026-08-12 10:16:00"))
-    val deduped = StreamingMetrics.dedupExactStream(
-      input.toDS().toDF(), Seq("uid", "variant"),
-      watermark = Some(("timestamp", "1 hour")))
-    val q = deduped.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_stream_t").start()
-    q.processAllAvailable()
-    input.addData(ev("u1", "e1", "1", "2026-08-12 10:17:00")) // dup across batches
-    q.processAllAvailable()
-    val rows = spark.table("dedup_stream_t").collect()
-    assert(rows.length === 2, rows.mkString("; "))
-    q.stop()
-  }
-
   test("streaming theta sketches serve exact overlap in the raw-hash regime") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -204,80 +184,43 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
   }
 
-  test("streaming store materialization folds micro-batches ≡ one-shot batch store") {
+  test("writeBatchOnce makes INCRBY effectively-once under batch redelivery") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val b1 = Seq(ev("u1", "e1", "1", "2026-08-12 10:15:03"),
-      ev("u2", "e1", "2", "2026-08-12 10:15:30"))
-    val b2 = Seq(ev("u1", "e2", "1", "2026-08-12 10:16:00"),
-      ev("u3", "e1", "1", "2026-08-12 10:15:40"))
-    val input = MemoryStream[LogEvent]
-    val mat = new StreamingMetrics.StoreMaterializer
-    val q = StreamingMetrics.startStoreMaterialization(
-      input.toDS(), mat, "store_mat_t")
-    input.addData(b1: _*); q.processAllAvailable()
-    input.addData(b2: _*); q.processAllAvailable()
-    def values(df: org.apache.spark.sql.DataFrame) = df
-      .select("metric", "dim", "window_minute", "value").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
-      .toMap
-    val streamed = values(mat.snapshot.get)
-    val oneShot = values(graft.store.MetricsTables.materialize(
-      (b1 ++ b2).toDS().toDF()
-        .withColumnRenamed("experimentId", "experiment_id")))
-    assert(streamed === oneShot)
-    q.stop()
-  }
-
-  test("applyBatchOnce makes INCRBY effectively-once under batch redelivery") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val store = new MetricsStore
+    // fails the next batch body once, as a crash inside the write would
+    class FlakyStore extends MetricsStore {
+      @volatile var failNext = false
+      override def writeBatch(incrs: Seq[(String, Long)], puts: Seq[(String, Long)],
+          sadds: Seq[(String, Iterable[String])],
+          pfadds: Seq[(String, Iterable[String])]): Unit = {
+        if (failNext) { failNext = false; throw new RuntimeException("boom") }
+        super.writeBatch(incrs, puts, sadds, pfadds)
+      }
+    }
+    val store = new FlakyStore
     val input = MemoryStream[LogEvent]
     input.addData(ev("u1", "e1", "1", "2026-08-12 10:15:03"),
       ev("u2", "e1", "2", "2026-08-12 10:15:30"))
     val dir = java.nio.file.Files.createTempDirectory("idem_ckpt").toString
-    val q = StreamingMetrics.startVisitsIdempotent(
-      input.toDS(), store, dir, "visits_idem_t")
-    q.processAllAvailable()
-    val key = "visitCounter_2026_08_12T10_15"
-    assert(store.counter(key) === 2L)
-    // simulate at-least-once redelivery of batch 0: the guard must skip
-    val reRan = store.applyBatchOnce("visits_idem_t", 0L) {
-      store.incrBy(key, 2L)
-    }
-    assert(!reRan && store.counter(key) === 2L, "redelivered batch double-counted")
-    // a FAILED batch releases its marker and retries
-    intercept[RuntimeException] {
-      store.applyBatchOnce("visits_idem_t", 99L)(throw new RuntimeException("boom"))
-    }
-    assert(store.applyBatchOnce("visits_idem_t", 99L) { store.incrBy(key, 1L) })
-    assert(store.counter(key) === 3L)
-    q.stop()
-  }
-
-  test("streaming incremental dedup: later near-dups rejected, index holds only accepted docs") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
-    val input = MemoryStream[(Long, String)]
-    val store = new StreamingMetrics.DedupIndexStore
-    val q = StreamingMetrics.startIncrementalDedup(
-      input.toDS().toDF("doc_id", "text"), store, "inc_dedup_t")
-    // batch 1: two distinct originals
-    input.addData((10L, base + "one two three four"),
-      (20L, "un deux trois quatre cinq six sept huit neuf dix " * 5))
-    q.processAllAvailable()
-    assert(store.dups.isEmpty && store.sigs.keySet === Set(10L, 20L))
-    // batch 2: a near-dup of doc 10 (one token changed), plus a novel doc
-    input.addData((30L, base + "one two three FIVE"),
-      (40L, "lorem ipsum dolor sit amet consectetur adipiscing elit sed do " * 5))
-    q.processAllAvailable()
-    assert(store.dups.toMap === Map(30L -> 10L))
-    // the rejected doc never entered the index
-    assert(store.sigs.keySet === Set(10L, 20L, 40L))
-    assert(!store.bands.values.exists(_.contains(30L)))
-    q.stop()
+    val queries = StreamingMetrics.startPipeline(input.toDS(), store,
+      checkpointRoot = Some(dir))
+    try {
+      queries.foreach(_.processAllAvailable())
+      val key = "visitCounter_2026_08_12T10_15"
+      val q = StreamingMetrics.FanOutQuery
+      assert(store.counter(key) === 2L)
+      // simulate at-least-once redelivery of batch 0: the ledger must skip
+      val reRan = store.writeBatchOnce(q, 0L, incrs = Seq(key -> 2L))
+      assert(!reRan && store.counter(key) === 2L, "redelivered batch double-counted")
+      // a FAILED batch releases its marker and retries
+      store.failNext = true
+      intercept[RuntimeException] {
+        store.writeBatchOnce(q, 99L, incrs = Seq(key -> 1L))
+      }
+      assert(store.counter(key) === 2L)
+      assert(store.writeBatchOnce(q, 99L, incrs = Seq(key -> 1L)))
+      assert(store.counter(key) === 3L)
+    } finally queries.foreach(_.stop())
   }
 
   test("streamed MLM examples equal the batch construction under any batch slicing") {
@@ -322,9 +265,9 @@ class StreamingSpec extends AnyFunSuite {
         (i % 7).toDouble + 0.25, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = graft.streaming.StreamingMetrics.startVariantLift(
-      input.toDS().toDF("event_id", "event_type", "value", "props"),
-      "variant_lift_t")
+    val q = StreamingMetrics.startReadout(Analytics.liftArms(
+      input.toDS().toDF("event_id", "event_type", "value", "props")),
+      "variant_lift_t")(identity)
     try {
       // three uneven micro-batch cuts
       input.addData(rows.take(7))
@@ -418,22 +361,25 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[LogEvent]
-    val q = StreamingMetrics.slidingVisitsStream(input.toDS())
-      .writeStream.outputMode("update")
-      .format("memory").queryName("sliding_stream_t").start()
+    val q = StreamingMetrics.startReadout(Metrics.slidingWindows(input.toDS().toDF()),
+      "sliding_stream_t")(Metrics.slidingFromWindows)
+    val events = Seq(ev("u1", "e1", "1", "2026-08-12 10:16:00"),
+      ev("u2", "e1", "1", "2026-08-12 10:16:30"))
     try {
-      input.addData(ev("u1", "e1", "1", "2026-08-12 10:16:00"))
+      input.addData(events.head)
       q.processAllAvailable()
       val first = spark.table("sliding_stream_t")
         .as[(String, Long)].collect().toSet
       // one event → exactly its 5 covering windows, one visit each
       assert(first === (12 to 16).map(m => (f"2026_08_12T10_$m%02d", 1L)).toSet)
-      // a second event in the same minute re-emits all 5 rows updated
-      input.addData(ev("u2", "e1", "1", "2026-08-12 10:16:30"))
+      // a second event in the same minute updates all 5 rows
+      input.addData(events(1))
       q.processAllAvailable()
-      val updated = spark.table("sliding_stream_t")
-        .as[(String, Long)].collect().filter(_._2 == 2L).map(_._1).toSet
+      val streamed = spark.table("sliding_stream_t").as[(String, Long)].collect()
+      val updated = streamed.filter(_._2 == 2L).map(_._1).toSet
       assert(updated === (12 to 16).map(m => f"2026_08_12T10_$m%02d").toSet)
+      assert(streamed.toSeq ===
+        Metrics.visitsSliding(events.toDS().toDF()).as[(String, Long)].collect().toSeq)
     } finally q.stop()
   }
 
@@ -441,22 +387,23 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[LogEvent]
-    val q = StreamingMetrics.rollingActivesStream(input.toDS())
-      .writeStream.outputMode("update")
-      .format("memory").queryName("rolling_stream_t").start()
+    val q = StreamingMetrics.startReadout(Metrics.activeUnits(input.toDS().toDF()),
+      "rolling_stream_t")(Metrics.activesFromUnits)
+    val events = Seq(ev("u1", "e1", "1", "2026-08-12 10:16:00"),
+      ev("u1", "e1", "1", "2026-08-12 10:16:30"))
     try {
-      input.addData(ev("u1", "e1", "1", "2026-08-12 10:16:00"))
+      input.addData(events.head)
       q.processAllAvailable()
       // same user again in a later micro-batch, same minute — the
-      // sketch state must not double-count it
-      input.addData(ev("u1", "e1", "1", "2026-08-12 10:16:30"))
+      // (window, uid) state must not double-count it
+      input.addData(events(1))
       q.processAllAvailable()
-      val latest = spark.table("rolling_stream_t")
-        .groupBy("window_start")
-        .agg(org.apache.spark.sql.functions.max("active_users").as("au"))
-        .as[(String, Long)].collect().toMap
+      val streamed = spark.table("rolling_stream_t").as[(String, Long)].collect()
+      val latest = streamed.toMap
       assert(latest.keySet === (12 to 16).map(m => f"2026_08_12T10_$m%02d").toSet)
       assert(latest.values.forall(_ === 1L), latest.toString)
+      assert(streamed.toSeq ===
+        Metrics.rollingActiveUsers(events.toDS().toDF()).as[(String, Long)].collect().toSeq)
     } finally q.stop()
   }
 
@@ -482,70 +429,28 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
   }
 
-  test("stream-static enrichment decorates events with broadcast dimension data") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[LogEvent]
-    val dim = Seq(("1", "control"), ("2", "treatment")).toDF("variant", "arm")
-    val q = StreamingMetrics.enrichStream(input.toDS().toDF(), dim, Seq("variant"))
-      .select("uid", "variant", "arm")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("enrich_t").start()
-    input.addData(
-      ev("u1", "e1", "1", "2026-08-12 10:15:03"),
-      ev("u2", "e1", "9", "2026-08-12 10:15:04")) // no dim row → null arm
-    q.processAllAvailable()
-    val rows = spark.table("enrich_t").collect()
-      .map(r => (r.getString(0), r.getString(2))).toMap
-    assert(rows === Map("u1" -> "control", "u2" -> null))
-    q.stop()
-  }
-
-  test("stream-stream attribution joins purchases to in-horizon clicks only") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val clicks = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val purchases = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    def ts(t: String) = java.sql.Timestamp.valueOf(t)
-    val joined = StreamingMetrics.attributionStream(
-      clicks.toDS().toDF("user_id", "event_id", "ts"),
-      purchases.toDS().toDF("user_id", "event_id", "ts"),
-      horizon = "30 minutes")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("attrib_t").start()
-    clicks.addData(
-      (1L, 100L, ts("2026-08-12 10:00:00")), // in horizon of purchase @10:20
-      (1L, 101L, ts("2026-08-12 09:30:00")), // too old (50 min before)
-      (2L, 102L, ts("2026-08-12 10:15:00"))) // other user
-    purchases.addData((1L, 900L, ts("2026-08-12 10:20:00")))
-    q.processAllAvailable()
-    val rows = spark.table("attrib_t").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(rows.toSet === Set((900L, 1L, 100L)), rows.mkString("; "))
-    q.stop()
-  }
-
   test("checkpointed restart resumes from committed offsets — no double-counting") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[LogEvent]
     val store = new MetricsStore
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    def run(): Unit = {
+      val qs = StreamingMetrics.startPipeline(input.toDS(), store,
+        checkpointRoot = Some(ckpt))
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    }
     input.addData(
       ev("u1", "e1", "1", "2026-08-12 10:15:03"),
       ev("u2", "e1", "1", "2026-08-12 10:15:40"))
-    val q1 = StreamingMetrics.startVisitsCheckpointed(
-      input.toDS(), store, ckpt, "visits_ckpt_a")
-    q1.processAllAvailable(); q1.stop()
+    run()
     assert(store.counter("visitCounter_2026_08_12T10_15") === 2L)
 
     // restart from the SAME checkpoint with one new event: the first
     // batch's offsets are committed, so only the new event is delivered
     // — a replay would leave the counter at 5, not 3
     input.addData(ev("u3", "e1", "1", "2026-08-12 10:15:55"))
-    val q2 = StreamingMetrics.startVisitsCheckpointed(
-      input.toDS(), store, ckpt, "visits_ckpt_b")
-    q2.processAllAvailable(); q2.stop()
+    run()
     assert(store.counter("visitCounter_2026_08_12T10_15") === 3L)
   }
 
@@ -593,46 +498,19 @@ class StreamingSpec extends AnyFunSuite {
     // committed, so the restarted query delivers ONLY file2 — the
     // INCRBY counter proves no re-delivery (a replay would double it)
     val ckptStore = new MetricsStore
-    val q1 = StreamingMetrics.startVisitsCheckpointed(
-      fileEvents, ckptStore, ckptDir, "file_visits_a")
-    q1.processAllAvailable(); q1.stop()
+    def runCheckpointed(): Unit = {
+      val qs = StreamingMetrics.startPipeline(fileEvents, ckptStore,
+        checkpointRoot = Some(ckptDir))
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    }
+    runCheckpointed()
     assert(ckptStore.counter("visitCounter_2026_08_12T10_15") === 2L)
 
     writeFile("batch2.json", Seq(
       wire("u3", "e1", "1", "2026-08-12T10:15:55Z")))
-    val q2 = StreamingMetrics.startVisitsCheckpointed(
-      fileEvents, ckptStore, ckptDir, "file_visits_b")
-    q2.processAllAvailable(); q2.stop()
+    runCheckpointed()
     assert(ckptStore.counter("visitCounter_2026_08_12T10_15") === 3L)
     assert(ckptStore.counter("visitCounter_2026_08_12T10_16") === 1L)
-  }
-
-  test("flatMapGroupsWithState exact uniques: state accumulates across batches") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[LogEvent]
-    // batch 1: two events, one uid dup within the minute
-    input.addData(
-      ev("u1", "e1", "1", "2026-08-12 10:15:03"),
-      ev("u1", "e1", "1", "2026-08-12 10:15:40"),
-      ev("u2", "e1", "2", "2026-08-12 10:16:01"))
-    val q = StreamingMetrics.startExactUniques(input.toDS(), "exact_uniques_t")
-    q.processAllAvailable()
-    val afterBatch1 = spark.table("exact_uniques_t").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(afterBatch1("set_dthr_2026_08_12T10_15") === 1L)
-    assert(afterBatch1("set_dthr_2026_08_12T10_16") === 1L)
-    q.stop()
-
-    // batch 2 (new query over same stream source continues the state? —
-    // memory sink truncates per run, so re-drive with a fresh late row)
-    input.addData(ev("u9", "e1", "1", "2026-08-12 10:15:55"))
-    val q2 = StreamingMetrics.startExactUniques(input.toDS(), "exact_uniques_t2")
-    q2.processAllAvailable()
-    val after = spark.table("exact_uniques_t2").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(after("set_dthr_2026_08_12T10_15") === 2L)
-    q2.stop()
   }
 
   test("streaming anomaly z ≡ batch visitsZscore on the closed-minute prefix") {
@@ -791,9 +669,9 @@ class StreamingSpec extends AnyFunSuite {
         (i % 7).toDouble + 0.25, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = graft.streaming.StreamingMetrics.startVariantLiftT(
-      input.toDS().toDF("event_id", "event_type", "value", "props"),
-      "variant_lift_t2")
+    val q = StreamingMetrics.startReadout(Analytics.liftArms(
+      input.toDS().toDF("event_id", "event_type", "value", "props")),
+      "variant_lift_t2")(Analytics.liftFromArms)
     implicit val liftEnc: org.apache.spark.sql.Encoder[(String, String,
       Long, Double, String, Double, Double, Option[Double])] =
       org.apache.spark.sql.Encoders.product
@@ -835,9 +713,9 @@ class StreamingSpec extends AnyFunSuite {
         (i % 11).toDouble * 20.0 + 0.25, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = graft.streaming.StreamingMetrics.startFdrExperiments(
-      input.toDS().toDF("event_id", "event_type", "value", "props"),
-      "fdr_stream")
+    val q = StreamingMetrics.startReadout(Analytics.batteryArms(
+      input.toDS().toDF("event_id", "event_type", "value", "props")),
+      "fdr_stream")(Analytics.fdrFromArms(_, 0.05))
     implicit val fdrEnc: org.apache.spark.sql.Encoder[(String, String,
       String, Double, Double, Long, Long, Double, Boolean)] =
       org.apache.spark.sql.Encoders.product
@@ -879,9 +757,9 @@ class StreamingSpec extends AnyFunSuite {
         (i % 7).toDouble * 10.0 + 0.5, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = graft.streaming.StreamingMetrics.startMwuExperiments(
-      input.toDS().toDF("event_id", "event_type", "value", "props"),
-      "mwu_stream")
+    val q = StreamingMetrics.startReadout(Analytics.rankGrain(
+      input.toDS().toDF("event_id", "event_type", "value", "props")),
+      "mwu_stream")(Analytics.mwuFromGrain(_, 0.05))
     implicit val mwuEnc: org.apache.spark.sql.Encoder[(String, String,
       String, Double, Double, Long, Long, Double, Boolean)] =
       org.apache.spark.sql.Encoders.product
@@ -922,9 +800,9 @@ class StreamingSpec extends AnyFunSuite {
         (i % 7).toDouble * 10.0 + 0.5, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = graft.streaming.StreamingMetrics.startKruskalExperiments(
-      input.toDS().toDF("event_id", "event_type", "value", "props"),
-      "kruskal_stream")
+    val q = StreamingMetrics.startReadout(Analytics.rankGrain(
+      input.toDS().toDF("event_id", "event_type", "value", "props")),
+      "kruskal_stream")(Analytics.kruskalFromGrain)
     implicit val kwEnc: org.apache.spark.sql.Encoder[(String, Long,
       Long, Double, Long, Double)] =
       org.apache.spark.sql.Encoders.product
@@ -978,10 +856,10 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy(col("experiment_id"))
       .agg(expr("min(us) + (max(us) - min(us)) div 2").as("mid"))
     val input = MemoryStream[(Long, Long, String, Double, String, Long)]
-    val q = graft.streaming.StreamingMetrics.startCupedLift(
-      withTs(input.toDS().toDF(
-        "event_id", "user_id", "event_type", "value", "props", "us")),
-      "cuped_stream", splits)
+    val q = StreamingMetrics.startReadout(Analytics.cupedUnits(
+      Analytics.cupedBase(withTs(input.toDS().toDF(
+        "event_id", "user_id", "event_type", "value", "props", "us"))), splits),
+      "cuped_stream")(Analytics.cupedFromG1)
     implicit val cuEnc: org.apache.spark.sql.Encoder[(String, String,
       Long, Double, Double, Double, Double)] =
       org.apache.spark.sql.Encoders.product
@@ -990,13 +868,7 @@ class StreamingSpec extends AnyFunSuite {
     // at the SAME declared splits
     def batchAt(rs: Seq[(Long, Long, String, Double, String, Long)])
         : Set[CuRow] =
-      graft.operators.Analytics.cupedFromG1(
-        graft.operators.Analytics.cupedBase(toDf(rs))
-          .join(broadcast(splits), Seq("experiment_id"))
-          .groupBy(col("experiment_id"), col("user_id"), col("variant"),
-            (col("us") <= col("mid")).as("pre"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,2)")).as("s")))
+      Analytics.cupedFromG1(Analytics.cupedUnits(Analytics.cupedBase(toDf(rs)), splits))
         .as[CuRow].collect().toSet
     try {
       input.addData(rows.take(53))
@@ -1040,9 +912,10 @@ class StreamingSpec extends AnyFunSuite {
       df.collect().map(_.toSeq).toSet
     for (kernel <- Seq("md5", "xxhash64")) {
       val input = MemoryStream[(String, String, Double, String)]
-      val q = graft.streaming.StreamingMetrics.startWinrateBootstrapCi(
-        input.toDS().toDF("user_id", "event_type", "value", "props"),
-        s"winrate_stream_$kernel", replicates = 48, kernel = kernel)
+      val q = StreamingMetrics.startReadout(Preference.winrateUt(
+        input.toDS().toDF("user_id", "event_type", "value", "props")),
+        s"winrate_stream_$kernel")(ut =>
+          Preference.winrateFromComps(Preference.winrateComps(ut), 48, kernel))
       def batchAt(rs: Seq[(String, String, Double, String)]) = rowSet(
         graft.operators.Preference.winrateBootstrapCi(
           toDf(rs), replicates = 48, kernel = kernel))
@@ -1116,8 +989,9 @@ class StreamingSpec extends AnyFunSuite {
       (i.toLong, (i % 5).toLong, if (i % 7 < (i % 5)) 200.0 else 1.0)
     }
     val input = MemoryStream[(Long, Long, Double)]
-    val q = graft.streaming.StreamingMetrics.startPassAtK(
-      input.toDS().toDF("event_id", "user_id", "value"), "pass_at_k_s")
+    val q = StreamingMetrics.startReadout(Preference.passAtKTasks(
+      input.toDS().toDF("event_id", "user_id", "value")),
+      "pass_at_k_s")(Preference.passAtKFromTasks(_))
     try {
       input.addData(rows.take(13))
       q.processAllAvailable()
@@ -1143,27 +1017,36 @@ class StreamingSpec extends AnyFunSuite {
       (i.toLong, f"2026-01-01 00:0${i / 60}:${i % 60}%02d",
         if (i % 4 == 0) 200.0 else 1.0)
     }
-    def toEv(rs: Seq[(Long, String, Double)]) =
-      rs.toDF("event_id", "s", "value")
-        .selectExpr("event_id", "CAST(s AS TIMESTAMP) AS ts", "value")
+    def toEv(df: org.apache.spark.sql.DataFrame) =
+      df.selectExpr("event_id", "CAST(s AS TIMESTAMP) AS ts", "value")
+    def batchOver(rs: Seq[(Long, String, Double)]) =
+      Analytics.sprtConversion(toEv(rs.toDF("event_id", "s", "value")))
+    implicit val trajEnc: org.apache.spark.sql.Encoder[(String, Long, Long,
+      Long, Long, Double, String)] = org.apache.spark.sql.Encoders.product
+    type Traj = (String, Long, Long, Long, Long, Double, String)
     val input = MemoryStream[(Long, String, Double)]
-    val q = graft.streaming.StreamingMetrics.startSprtConversion(
-      input.toDS().toDF("event_id", "s", "value"), "sprt_s")
+    val q = StreamingMetrics.startReadout(Analytics.sprtMinutes(
+      toEv(input.toDS().toDF("event_id", "s", "value"))),
+      "sprt_s")(Analytics.sprtFromMinutes(_))
     try {
       input.addData(rows.take(17))
       q.processAllAvailable()
+      // after EVERY cut the published trajectory equals the batch face
+      assert(spark.table("sprt_s").as[Traj].collect().toSeq ===
+        batchOver(rows.take(17)).as[Traj].collect().toSeq)
       input.addData(rows.drop(17))
       q.processAllAvailable()
-      val st = spark.table("sprt_s")
-        .as[(Long, Long, Double, String)].collect()
-      assert(st.length === 1)
-      val batchLast = graft.operators.Analytics.sprtConversion(toEv(rows))
+      val traj = spark.table("sprt_s").as[Traj].collect().toSeq
+      // running counts are algebraic; llr/decision are the SAME chains
+      assert(traj === batchOver(rows).as[Traj].collect().toSeq)
+      assert(traj.length === 2) // one row per minute
+      val batchLast = batchOver(rows)
         .orderBy(org.apache.spark.sql.functions.col("minute_key").desc)
         .limit(1)
         .selectExpr("n_cum", "conv_cum", "llr", "decision")
         .as[(Long, Long, Double, String)].collect()(0)
-      // running counts are algebraic; llr/decision are the SAME chains
-      assert(st(0) === batchLast)
+      val st = traj.last
+      assert((st._4, st._5, st._6, st._7) === batchLast)
     } finally q.stop()
   }
 
@@ -1184,9 +1067,9 @@ class StreamingSpec extends AnyFunSuite {
       (i.toLong, v, value, s"""{"k":"$e"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = graft.streaming.StreamingMetrics.startKeyedSprt(
-      input.toDS().toDF("event_id", "event_type", "value", "props"),
-      "sprt_keyed")
+    val q = StreamingMetrics.startReadout(Analytics.conversionArms(
+      input.toDS().toDF("event_id", "event_type", "value", "props")),
+      "sprt_keyed")(Analytics.sprtFromArms(_))
     try {
       input.addData(rows.take(77))
       q.processAllAvailable()
@@ -1196,9 +1079,7 @@ class StreamingSpec extends AnyFunSuite {
         Long, Long, Double, String)] =
         org.apache.spark.sql.Encoders.product
       type KRow = (String, String, Long, Long, Double, String)
-      // last emission per arm = its max-n row
-      val streamed = spark.table("sprt_keyed").as[KRow].collect()
-        .groupBy(r => (r._1, r._2)).map(_._2.maxBy(_._3)).toSet
+      val streamed = spark.table("sprt_keyed").as[KRow].collect().toSet
       // batch comparator: per-arm counts through the SAME chains
       val batch = rows.toDF("event_id", "event_type", "value", "props")
         .selectExpr("get_json_object(props, '$.k') AS experiment_id",
@@ -1222,8 +1103,9 @@ class StreamingSpec extends AnyFunSuite {
       val verdicts = streamed.map(r => (r._1, r._2) -> r._6).toMap
       assert(verdicts(("e1", "a")) === "accept_h1")
       assert(verdicts(("e1", "b")) === "accept_h0")
+      // the arm aggregate's state holds exactly one row per arm
       val stateRows = q.lastProgress.stateOperators
-        .filter(_.operatorName.contains("flatMapGroupsWithState"))
+        .filter(_.operatorName == "stateStoreSave")
         .map(_.numRowsTotal).sum
       assert(stateRows === 3L, s"state rows $stateRows")
     } finally q.stop()
