@@ -16,28 +16,25 @@ object Bench {
       .format(java.time.Instant.now().truncatedTo(
         java.time.temporal.ChronoUnit.SECONDS))
 
-  def main(args: Array[String]): Unit = {
-    val envStart = (nowIso(), loadavg())
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // engine-contract configs live in ONE place — graft.EngineSession
-    // (timezone, AQE, the justified objectHashAggregate threshold)
-    val spark = EngineSession.local(cpus)
-    // One-time JVM warmup so per-query numbers measure the engine, not
-    // first-use class loading (Jackson for from_json/to_json, Janino
-    // codegen, shuffle machinery). Runs on 2 synthetic rows — no test
-    // data is touched, no query result is precomputed.
+  /** The untimed warmup every timed run starts from (Bench and Prof).
+    * First, one-time JVM warmup so per-query numbers measure the
+    * engine, not first-use class loading (Jackson for from_json/to_json,
+    * Janino codegen, shuffle machinery). Runs on 2 synthetic rows — no
+    * test data is touched, no query result is precomputed.
+    *
+    * Second, one full-column scan of EVERY input table under `sfDir`.
+    * Sorted execution order pins the run's cold start (directory
+    * listing, parquet footer reads, OS page cache, scan codegen) onto
+    * the alphabetically-first queries, permanently taxing the same
+    * ones each round (r11: bm25_search/bpe_encode/dedup_exact).
+    * bit_xor(xxhash64(struct(*))) forces real column decode — a bare
+    * count() is satisfied by parquet row-group metadata and would
+    * leave the data pages cold. A table that fails to scan is skipped
+    * with a `BENCH-WARMUP-SKIP` line on stderr. */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
     spark.range(2).selectExpr(
       "from_json(to_json(named_struct('uid', CAST(id AS STRING))), 'uid STRING').uid AS u")
       .groupBy("u").count().count()
-    // Untimed warmup #2: one full-column scan of EVERY input table.
-    // Sorted execution order pins the run's cold start (directory
-    // listing, parquet footer reads, OS page cache, scan codegen) onto
-    // the alphabetically-first queries, permanently taxing the same
-    // ones each round (r11: bm25_search/bpe_encode/dedup_exact).
-    // bit_xor(xxhash64(struct(*))) forces real column decode — a bare
-    // count() is satisfied by parquet row-group metadata and would
-    // leave the data pages cold.
     Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .foreach { f =>
@@ -49,6 +46,16 @@ object Bench {
           System.err.println(s"BENCH-WARMUP-SKIP ${f.getName}: ${t.getMessage}")
         }
       }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val envStart = (nowIso(), loadavg())
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // engine-contract configs live in ONE place — graft.EngineSession
+    // (timezone, AQE, the justified objectHashAggregate threshold)
+    val spark = EngineSession.local(cpus)
+    warmup(spark, sfDir)
     val envWarm = (nowIso(), loadavg())
     // per-observation 1-min loadavg at query start, recorded into the
     // FULL artifact only (additions-only: the stdout JSON contract and

@@ -12,11 +12,11 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.Prof <query> [reps]"
   *
-  * Per rep it prints: wall seconds, Catalyst phase durations from the
-  * QueryExecution tracker (parsing/analysis/optimization/planning),
-  * and scheduler-side totals from a listener (jobs, stages, tasks,
-  * summed task time, summed shuffle fetch-wait + write time, summed
-  * JVM GC time). Driver-side cost ≈ wall − (task time / cores). */
+  * Per rep it prints: wall seconds, the DataFrame construction share
+  * of them, and scheduler-side totals from a listener (jobs, stages,
+  * tasks, summed task time, summed shuffle fetch-wait + write time,
+  * summed JVM GC time, shuffle bytes); the last rep adds the top
+  * stages by task time. Driver-side cost ≈ wall − (task time / cores). */
 object Prof {
   private class Totals extends SparkListener {
     val jobs = new AtomicInteger(0)
@@ -90,18 +90,7 @@ object Prof {
       System.err.println(s"unknown query: $name")
       spark.stop(); sys.exit(2)
     })
-    // Bench's warmup: JSON/codegen classload + one full-column scan of
-    // every table so rep 1 starts from the same page-cache state.
-    spark.range(2).selectExpr(
-      "from_json(to_json(named_struct('uid', CAST(id AS STRING))), 'uid STRING').uid AS u")
-      .groupBy("u").count().count()
-    Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .foreach { f =>
-        try spark.read.parquet(f.getPath)
-          .selectExpr("bit_xor(xxhash64(struct(*))) AS h").count()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+    Bench.warmup(spark, sfDir)
     val tot = new Totals
     spark.sparkContext.addSparkListener(tot)
     for (r <- 1 to reps) {

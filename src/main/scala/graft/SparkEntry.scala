@@ -601,9 +601,8 @@ object SparkEntry {
       Dedup.exactSubstrSpans(par(Tables.documents(s, d)))),
     // incremental ExactSubstr: a batch's spans against corpus∪batch
     // with the corpus touched only as its (sh, df) aggregate — the
-    // never-re-pair-the-corpus production shape (bucketed-index twin
-    // writeShingleIndex/exactSubstrIndexed plan-asserted in
-    // BucketingSpec); oracle = the full replay filtered to batch docs
+    // never-re-pair-the-corpus production shape; oracle = the full
+    // replay filtered to batch docs
     "dedup_exact_substr_incremental" -> ((s, d) => {
       val docs = par(Tables.documents(s, d))
       Dedup.exactSubstrIncremental(docs.where(col("doc_id") % 5 =!= 0),

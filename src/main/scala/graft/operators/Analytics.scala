@@ -1184,88 +1184,20 @@ object Analytics {
        |SELECT minute_key, visits, ewma FROM f
        |ORDER BY minute_key""".stripMargin
 
-  /** Weighted PageRank (Brin & Page 1998) by distributed power
-    * iteration over an edge list `(src, dst, w)` — the canonical
-    * iterative-graph shape on Spark: rank state is a node-keyed
-    * DataFrame, one iteration = one edge⋈rank join + one dst-keyed
-    * aggregate, and lineage is cut per iteration with
-    * `localCheckpoint` (an unbounded iterative plan otherwise
-    * re-derives every previous round). Dangling mass (nodes with no
-    * out-edges) is redistributed uniformly; the per-iteration dangling
-    * sum is the only driver-side value and it is ONE double — model-
-    * sized state, like [[graft.operators.Similarity.kmeansFit]]'s
-    * centroids. With `tol > 0` the loop stops once the L1 delta
-    * between rounds falls below it (the delta scan runs over two
-    * already-materialized node frames — one cheap job that typically
-    * saves several full iterations). Returns `(node, pr)`, Σpr = 1 up
-    * to float error. */
-  def pagerank(edges: DataFrame, iters: Int = 10,
-      damping: Double = 0.85, tol: Double = 0.0): DataFrame = {
-    // out-weight folds into the edge frame ONCE (the per-round plan
-    // used to re-derive the outW aggregate and join it every round —
-    // two of the four per-round joins were loop-invariant)
-    val e0 = edges.toDF("src", "dst", "w")
-      .groupBy(col("src"), col("dst"))
-      .agg(sum(col("w")).as("w"))
-    val eo = e0
-      .join(e0.groupBy(col("src")).agg(sum(col("w")).as("ow")), "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // dangling-ness is a STATIC node property: flag it once on the
-    // node frame so the per-round dangling mass is a scan-side
-    // filter+sum over pr — no anti-join in the loop
-    val nodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct()
-      .join(eo.select(col("src").as("node")).distinct()
-        .withColumn("has_out", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("has_out"), lit(false)).as("has_out"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = nodes.count().toDouble
-      var pr = nodes.withColumn("pr", lit(1.0 / n))
-      var converged = false
-      for (_ <- 0 until iters if !converged) {
-        val prev = pr
-        val contrib = eo
-          .join(pr.select(col("node").as("src"), col("pr")), "src")
-          .select(col("dst").as("node"),
-            (col("pr") * col("w") / col("ow")).as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("c"))
-        // dangling mass stays IN the plan as a broadcast single-row
-        // aggregate — a driver-side .head here would be a second
-        // action re-deriving pr's lineage every round
-        val dang = pr.where(!col("has_out"))
-          .agg(coalesce(sum(col("pr")), lit(0d)).as("dm"))
-        pr = nodes.join(contrib, Seq("node"), "left")
-          .crossJoin(broadcast(dang))
-          .select(col("node"), col("has_out"),
-            (lit((1 - damping) / n) + lit(damping) *
-              (coalesce(col("c"), lit(0d)) + col("dm") / n))
-              .as("pr"))
-          // one materialization per round (pr feeds BOTH next-round
-          // consumers); unbounded lineage would re-derive every
-          // previous round instead
-          .localCheckpoint()
-        if (tol > 0) {
-          val delta = prev.withColumnRenamed("pr", "p0")
-            .select(col("node"), col("p0"))
-            .join(pr, Seq("node"))
-            .agg(sum(abs(col("pr") - col("p0")))).head.getDouble(0)
-          converged = delta < tol
-        }
-      }
-      pr.select(col("node"), col("pr"))
-    } finally { eo.unpersist(); nodes.unpersist() }
-  }
-
   /** Fixed-point mass unit for [[pagerankExact]]: ranks are integer
     * "micro-mass" counts out of 10^15. */
   val PrScale: Long = 1000000000000000L
 
-  /** PageRank by power iteration in FIXED-POINT INTEGER arithmetic:
-    * same plan shape as [[pagerank]] (edge⋈rank join, dst-keyed
-    * aggregate, broadcast dangling mass, per-round `localCheckpoint`),
-    * but rank mass is an integer number of `1/PrScale` units and every
-    * division is an integer floor-division. Integer adds are exact and
+  /** Weighted PageRank (Brin & Page 1998) by distributed power
+    * iteration over an edge list, in FIXED-POINT INTEGER arithmetic —
+    * the canonical iterative-graph shape on Spark: rank state is a
+    * node-keyed DataFrame, one iteration = one edge⋈rank join + one
+    * dst-keyed aggregate, and lineage is cut per iteration with
+    * `localCheckpoint` (an unbounded iterative plan otherwise
+    * re-derives every previous round). Dangling mass (nodes with no
+    * out-edges) is redistributed uniformly as a broadcast single-row
+    * aggregate. Rank mass is an integer number of `1/PrScale` units and
+    * every division is an integer floor-division. Integer adds are exact and
     * associative, so — unlike a double `sum()`, whose value depends on
     * Spark's partition-merge order — the result is BIT-EXACT across
     * engines and across any partitioning, which is what lets the
@@ -1280,10 +1212,10 @@ object Analytics {
     * double). Returns `(node, pr_i: long)`. */
   def pagerankExact(edges: DataFrame, iters: Int = 10,
       dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
-    // loop-invariant work hoisted exactly as in [[pagerank]]: the
-    // out-weight joins into the edge frame once, dangling-ness flags
-    // the node frame once — the per-round plan is ONE edge⋈rank join,
-    // one dst aggregate, one scan-side dangling sum, one node join
+    // loop-invariant work hoisted: the out-weight joins into the edge
+    // frame once, dangling-ness (a STATIC node property) flags the node
+    // frame once — the per-round plan is ONE edge⋈rank join, one dst
+    // aggregate, one scan-side dangling sum, one node join
     val e0 = edges.toDF("src", "dst", "w")
       .groupBy(col("src"), col("dst"))
       .agg(sum(col("w")).as("w"))
@@ -1322,7 +1254,8 @@ object Analytics {
             expr("(CAST(pr_i AS DECIMAL(38,0)) * w) div ow").as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("c"))
         // dangling mass stays IN the plan as a broadcast single-row
-        // aggregate, exactly like [[pagerank]]
+        // aggregate — a driver-side .head here would be a second
+        // action re-deriving pr's lineage every round
         val dang = pr.where(!col("has_out"))
           .agg(coalesce(sum(col("pr_i")), lit(0L)).as("dm"))
         pr = nodes.join(contrib, Seq("node"), "left")

@@ -195,9 +195,8 @@ object Classifier {
   def qualityScorePinned(documents: DataFrame, dim: Int = 4096): DataFrame =
     qualityScorePinnedStream(documents, dim).orderBy("doc_id")
 
-  /** The streaming face of [[qualityScorePinned]] (the
-    * `mlmMaskingStream` convention): identical per-row projection
-    * minus the batch face's global ORDER BY, so the streamed score
+  /** The streaming face of [[qualityScorePinned]]: identical per-row
+    * projection minus the batch face's global ORDER BY, so the streamed score
     * set over any micro-batch slicing equals the batch output for the
     * same documents (asserted in `StreamingSpec`). */
   def qualityScorePinnedStream(documents: DataFrame,

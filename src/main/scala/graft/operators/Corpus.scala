@@ -397,51 +397,6 @@ object Corpus {
        |    AS BIGINT) AS pos
        |FROM h ORDER BY shard, pos""".stripMargin
 
-  /** Materialize one epoch's shuffled shards to disk and return the
-    * MANIFEST — the missing write half of [[corpusShuffle]]: a
-    * training loader needs (a) the documents physically clustered by
-    * shard so one reader task streams one shard sequentially, and (b)
-    * a small manifest table to schedule/audit against (the lakehouse
-    * snapshot idiom, same family as [[Maintenance.zorderWrite]]).
-    *
-    * Scale shape: the shard assignment is [[corpusShuffle]]'s (hash
-    * shard + per-shard position, no global sort); the write is
-    * `partitionBy(shard)` parquet — one directory per shard, readable
-    * with partition pruning (`WHERE shard = k` touches one shard's
-    * files). The manifest is one shard-keyed aggregate: `(shard,
-    * n_docs, n_tokens, perm_digest)` where `perm_digest` is the
-    * bit_xor of `poly_hash62(pos || ':' || doc_id)` over the shard's
-    * rows — a commutative streaming fold whose aggregation state is
-    * ONE long per shard (an earlier version collected the whole
-    * position-ordered id sequence per shard before hashing, which at
-    * 100 TB is corpus/shards rows of per-group buffer — exactly the
-    * unbounded-state shape the rest of the repo forbids). Position is
-    * baked into each hashed term, so the digest still changes whenever
-    * the permutation changes (w.h.p.; xor-cancellation needs two
-    * identical (pos, doc_id) terms, impossible within a shard where
-    * pos is unique): two manifests agree iff the epoch's permutation
-    * agrees, the cheap cross-run reproducibility check. Determinism:
-    * every column is a pure function of (epoch, doc_id), so re-running
-    * a failed epoch write produces byte-identical shards. */
-  def writeCorpusShards(documents: DataFrame, outPath: String,
-      epoch: Int = 0, shards: Int = 8): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
-    val assigned = corpusShuffle(documents, epoch, shards)
-      .join(documents, Seq("doc_id"))
-    assigned
-      .repartition(col("shard"))
-      .sortWithinPartitions("shard", "pos")
-      .write.mode("overwrite").partitionBy("shard").parquet(outPath)
-    assigned.sparkSession.read.parquet(outPath)
-      .groupBy(col("shard").cast("long").as("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(size(split(col("text"), " "))).cast("long").as("n_tokens"),
-        expr("""bit_xor(poly_hash62(concat(CAST(pos AS STRING), ':',
-               |                           CAST(doc_id AS STRING))))"""
-          .stripMargin).as("perm_digest"))
-      .orderBy("shard")
-  }
-
   /** DSIR-shape importance weighting (Xie et al. 2302.03169): score
     * every raw document by how much more likely its hashed-unigram
     * features are under a TARGET distribution than under the raw-corpus
@@ -1755,8 +1710,46 @@ object Corpus {
     * masked_md5, labels_md5) — counts per branch plus the MD5 of the
     * masked text and of the space-joined label sequence (`md5('')`
     * when nothing selected). NULL-text rows are dropped. */
-  def mlmMasking(documents: DataFrame, maskPct: Int = 15): DataFrame =
-    mlmProject(documents, maskPct).orderBy("doc_id")
+  def mlmMasking(documents: DataFrame, maskPct: Int = 15): DataFrame = {
+    graft.functions.Registry.ensure(documents.sparkSession)
+    documents
+      .where(col("text").isNotNull)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .withColumn("cells", expr(
+        s"""transform(
+           |  transform(sequence(0, size(toks) - 1),
+           |    i -> named_struct('i', i,
+           |      'h', poly_hash62(concat('mlm:', CAST(doc_id AS STRING),
+           |                              ':', CAST(i AS STRING))))),
+           |  s -> named_struct(
+           |    'orig', element_at(toks, s.i + 1),
+           |    'sel', pmod(s.h, 100) < $maskPct,
+           |    'kind', pmod(shiftright(s.h, 7), 10),
+           |    'out', CASE
+           |      WHEN pmod(s.h, 100) >= $maskPct
+           |        THEN element_at(toks, s.i + 1)
+           |      WHEN pmod(shiftright(s.h, 7), 10) <= 7 THEN '[MASK]'
+           |      WHEN pmod(shiftright(s.h, 7), 10) = 8
+           |        THEN element_at(toks,
+           |          CAST(pmod(shiftright(s.h, 13), size(toks)) AS INT) + 1)
+           |      ELSE element_at(toks, s.i + 1) END))""".stripMargin))
+      .select(col("doc_id"),
+        size(col("toks")).cast("long").as("n_tokens"),
+        expr("size(filter(cells, c -> c.sel))").cast("long")
+          .as("n_selected"),
+        expr("size(filter(cells, c -> c.sel AND c.kind <= 7))").cast("long")
+          .as("n_mask"),
+        expr("size(filter(cells, c -> c.sel AND c.kind = 8))").cast("long")
+          .as("n_random"),
+        expr("size(filter(cells, c -> c.sel AND c.kind = 9))").cast("long")
+          .as("n_keep"),
+        md5(expr("array_join(transform(cells, c -> c.out), ' ')"))
+          .as("masked_md5"),
+        md5(expr(
+          "array_join(transform(filter(cells, c -> c.sel), c -> c.orig), ' ')"))
+          .as("labels_md5"))
+      .orderBy("doc_id")
+  }
 
   /** Instruction-tuning (SFT) example construction — the fourth face
     * of the example-construction family ([[mlmMasking]] BERT-MLM,
@@ -1779,16 +1772,24 @@ object Corpus {
     * n_completion, n_total, rendered_md5, mask_md5) where `n_total`
     * counts template tokens too and `mask_md5` hashes the
     * space-joined 0/1 mask sequence. */
-  def sftExamples(documents: DataFrame): DataFrame =
-    sftProject(documents).orderBy("doc_id")
-
-  /** The streaming face of [[sftExamples]] (the [[mlmMaskingStream]]
-    * convention): identical stateless projection minus the batch
-    * face's global ORDER BY — deterministic per row, so the streamed
-    * example set over any micro-batch slicing equals the batch output
-    * for the same documents (asserted in `StreamingSpec`). */
-  def sftExamplesStream(documents: DataFrame): DataFrame =
-    sftProject(documents)
+  def sftExamples(documents: DataFrame): DataFrame = {
+    sftPromptCompletion(documents)
+      .select(col("doc_id"),
+        size(split(col("prompt"), " ")).cast("long").as("n_prompt"),
+        size(split(col("completion"), " ")).cast("long")
+          .as("n_completion"),
+        md5(concat(lit("<|user|> "), col("prompt"),
+          lit(" <|assistant|> "), col("completion"))).as("rendered_md5"))
+      .withColumn("n_total", col("n_prompt") + col("n_completion") + 2L)
+      .withColumn("mask_md5", md5(expr(
+        """array_join(concat(
+          |  transform(sequence(1, CAST(n_prompt AS INT) + 2), x -> '0'),
+          |  transform(sequence(1, CAST(n_completion AS INT)), x -> '1')),
+          |' ')""".stripMargin)))
+      .select(col("doc_id"), col("n_prompt"), col("n_completion"),
+        col("n_total"), col("rendered_md5"), col("mask_md5"))
+      .orderBy("doc_id")
+  }
 
   /** Shared prompt/completion split of the SFT and DPO faces: prompt
     * is the document's first [[Dedup.contentLinesExpr]] line,
@@ -1805,24 +1806,6 @@ object Corpus {
         element_at(col("lines"), 1).as("prompt"),
         expr("array_join(slice(lines, 2, size(lines) - 1), ' ')")
           .as("completion"))
-  }
-
-  private def sftProject(documents: DataFrame): DataFrame = {
-    sftPromptCompletion(documents)
-      .select(col("doc_id"),
-        size(split(col("prompt"), " ")).cast("long").as("n_prompt"),
-        size(split(col("completion"), " ")).cast("long")
-          .as("n_completion"),
-        md5(concat(lit("<|user|> "), col("prompt"),
-          lit(" <|assistant|> "), col("completion"))).as("rendered_md5"))
-      .withColumn("n_total", col("n_prompt") + col("n_completion") + 2L)
-      .withColumn("mask_md5", md5(expr(
-        """array_join(concat(
-          |  transform(sequence(1, CAST(n_prompt AS INT) + 2), x -> '0'),
-          |  transform(sequence(1, CAST(n_completion AS INT)), x -> '1')),
-          |' ')""".stripMargin)))
-      .select(col("doc_id"), col("n_prompt"), col("n_completion"),
-        col("n_total"), col("rendered_md5"), col("mask_md5"))
   }
 
   /** DuckDB replay of [[sftExamples]]: the shared line CTEs, first
@@ -1968,20 +1951,7 @@ object Corpus {
     * views (the anchor overlap a collapse diagnostic watches), and
     * the MD5 of each rendered view (`md5('')` when a view drops
     * everything). */
-  def contrastiveViews(documents: DataFrame, dropPct: Int = 15): DataFrame =
-    contrastiveProject(documents, dropPct).orderBy("doc_id")
-
-  /** The streaming face of [[contrastiveViews]] (the
-    * [[mlmMaskingStream]] convention): identical stateless projection
-    * minus the batch face's global ORDER BY — per-row deterministic,
-    * so the streamed view set over any micro-batch slicing equals the
-    * batch output (asserted in `StreamingSpec`). */
-  def contrastiveViewsStream(documents: DataFrame,
-      dropPct: Int = 15): DataFrame =
-    contrastiveProject(documents, dropPct)
-
-  private def contrastiveProject(documents: DataFrame,
-      dropPct: Int): DataFrame = {
+  def contrastiveViews(documents: DataFrame, dropPct: Int = 15): DataFrame = {
     graft.functions.Registry.ensure(documents.sparkSession)
     documents
       .where(col("text").isNotNull)
@@ -2006,6 +1976,7 @@ object Corpus {
           "c -> c.tok), ' ')")).as("v1_md5"),
         md5(expr("array_join(transform(filter(cells, c -> c.k2), " +
           "c -> c.tok), ' ')")).as("v2_md5"))
+      .orderBy("doc_id")
   }
 
   /** DuckDB replay of [[contrastiveViews]]: the [[mlmMaskingSql]]
@@ -2037,56 +2008,6 @@ object Corpus {
        |  md5(coalesce(string_agg(CASE WHEN k2 THEN tok END,
        |    ' ' ORDER BY pos), '')) AS v2_md5
        |FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** The streaming face of [[mlmMasking]]: the identical stateless
-    * projection without the batch face's global ORDER BY (illegal on a
-    * stream, and meaningless there — examples flow out per
-    * micro-batch). Because every decision is a poly_hash62 of
-    * (doc_id, position), the streamed example set over any batch
-    * slicing is EXACTLY the batch output for the same documents —
-    * asserted in `StreamingSpec`. */
-  def mlmMaskingStream(documents: DataFrame, maskPct: Int = 15): DataFrame =
-    mlmProject(documents, maskPct)
-
-  private def mlmProject(documents: DataFrame, maskPct: Int): DataFrame = {
-    graft.functions.Registry.ensure(documents.sparkSession)
-    documents
-      .where(col("text").isNotNull)
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .withColumn("cells", expr(
-        s"""transform(
-           |  transform(sequence(0, size(toks) - 1),
-           |    i -> named_struct('i', i,
-           |      'h', poly_hash62(concat('mlm:', CAST(doc_id AS STRING),
-           |                              ':', CAST(i AS STRING))))),
-           |  s -> named_struct(
-           |    'orig', element_at(toks, s.i + 1),
-           |    'sel', pmod(s.h, 100) < $maskPct,
-           |    'kind', pmod(shiftright(s.h, 7), 10),
-           |    'out', CASE
-           |      WHEN pmod(s.h, 100) >= $maskPct
-           |        THEN element_at(toks, s.i + 1)
-           |      WHEN pmod(shiftright(s.h, 7), 10) <= 7 THEN '[MASK]'
-           |      WHEN pmod(shiftright(s.h, 7), 10) = 8
-           |        THEN element_at(toks,
-           |          CAST(pmod(shiftright(s.h, 13), size(toks)) AS INT) + 1)
-           |      ELSE element_at(toks, s.i + 1) END))""".stripMargin))
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_tokens"),
-        expr("size(filter(cells, c -> c.sel))").cast("long")
-          .as("n_selected"),
-        expr("size(filter(cells, c -> c.sel AND c.kind <= 7))").cast("long")
-          .as("n_mask"),
-        expr("size(filter(cells, c -> c.sel AND c.kind = 8))").cast("long")
-          .as("n_random"),
-        expr("size(filter(cells, c -> c.sel AND c.kind = 9))").cast("long")
-          .as("n_keep"),
-        md5(expr("array_join(transform(cells, c -> c.out), ' ')"))
-          .as("masked_md5"),
-        md5(expr(
-          "array_join(transform(filter(cells, c -> c.sel), c -> c.orig), ' ')"))
-          .as("labels_md5"))
   }
 
   /** DuckDB replay of [[mlmMasking]]: identical poly_hash62 stream,

@@ -783,23 +783,6 @@ object Dedup {
     result
   }
 
-  /** Materialize a corpus's MinHash band index as a BUCKETED table —
-    * what "the index is pre-materialized" means concretely for
-    * [[incrementalLshPairs]] at 100 TB: the (doc_id, band_hash) rows
-    * are written bucketed on `band_hash`, so probing them with a
-    * batch's band keys shuffles ONLY the batch side (the index scan is
-    * already hash-clustered on the join key — zero index-side
-    * exchange, plan-asserted in `BucketingSpec`). Appending a day's
-    * accepted docs rewrites nothing: new band rows land in the same
-    * bucket scheme. */
-  def writeBandIndex(documents: DataFrame, tableName: String, k: Int = 4,
-      numPerm: Int = 64, bands: Int = 16, buckets: Int = 8): Unit =
-    graft.sources.Tables.writeBucketed(
-      minhashSignatures(documents, k, numPerm)
-        .select(col("doc_id"),
-          explode(expr(s"minhash_bands(sig, $bands)")).as("band_hash")),
-      tableName, "band_hash", buckets)
-
   /** Bloom-probe face of the gate, exposed for composition and tests:
     * every `batch` row tagged `maybe_known` by a corpus-side Bloom
     * filter over `keyCol`. The filter is ONE map-side-combined
@@ -1606,9 +1589,9 @@ object Dedup {
   }
 
   /** Interval-merge of duplicated positions into maximal spans — the
-    * shared tail of every exact-substr face ([[exactSubstrSpans]] /
-    * [[exactSubstrIncremental]] / [[exactSubstrIndexed]] can never
-    * disagree on merge semantics). Doc-partitioned windows only. */
+    * shared tail of every exact-substr face ([[exactSubstrSpans]] and
+    * [[exactSubstrIncremental]] can never disagree on merge
+    * semantics). Doc-partitioned windows only. */
   private def mergeIslands(dup: DataFrame, l: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -1632,10 +1615,8 @@ object Dedup {
   /** Incremental ExactSubstr — the production shape at 100 TB, where
     * the corpus is NEVER re-paired: an arriving batch's duplicated
     * spans against corpus ∪ batch, with the corpus touched only as
-    * its (shingle hash → df) aggregate (the materialized form is
-    * [[writeShingleIndex]]; [[exactSubstrIndexed]] probes it with
-    * zero index-side exchange). A batch shingle is duplicated iff its
-    * batch count plus its corpus df reaches 2 — exactly the df the
+    * its (shingle hash → df) aggregate. A batch shingle is duplicated
+    * iff its batch count plus its corpus df reaches 2 — exactly the df the
     * full-corpus face computes, so the result is VALUE-IDENTICAL to
     * `exactSubstrSpans(corpus ∪ batch)` restricted to batch docs
     * (asserted in DedupSpec; the catalog face's oracle replays the
@@ -1646,42 +1627,15 @@ object Dedup {
       l: Int = 16): DataFrame = {
     val dfC = shinglePositions(corpus, l).groupBy(col("sh"))
       .agg(count(lit(1)).as("df_c"))
-    exactSubstrProbe(dfC, batch, l)
-  }
-
-  /** Probe tail shared by [[exactSubstrIncremental]] (in-memory
-    * corpus aggregate) and [[exactSubstrIndexed]] (bucketed table):
-    * batch positions + batch shingle counts, left join onto the
-    * corpus (sh, df_c) side, keep sh with df_b + df_c ≥ 2. */
-  private def exactSubstrProbe(corpusDf: DataFrame, batch: DataFrame,
-      l: Int): DataFrame = {
+    // batch positions + batch shingle counts, left join onto the
+    // corpus (sh, df_c) side, keep sh with df_b + df_c ≥ 2
     val shB = shinglePositions(batch, l)
     val dupB = shB.groupBy(col("sh")).agg(count(lit(1)).as("df_b"))
-      .join(corpusDf, Seq("sh"), "left")
+      .join(dfC, Seq("sh"), "left")
       .where(col("df_b") + coalesce(col("df_c"), lit(0L)) >= 2)
       .select(col("sh"))
     mergeIslands(shB.join(dupB, Seq("sh")), l)
   }
-
-  /** Materialize a corpus's shingle-df index as a BUCKETED table —
-    * the [[writeBandIndex]] discipline for ExactSubstr: (sh, df_c)
-    * rows bucketed on `sh`, so probing with a batch's shingle counts
-    * shuffles ONLY the batch side (zero index-side exchange,
-    * plan-asserted in `BucketingSpec`). The index is corpus-token-
-    * sized but each row is 16 bytes; df increments for an accepted
-    * batch append in the same bucket scheme. */
-  def writeShingleIndex(corpus: DataFrame, tableName: String,
-      l: Int = 16, buckets: Int = 8): Unit =
-    graft.sources.Tables.writeBucketed(
-      shinglePositions(corpus, l).groupBy(col("sh"))
-        .agg(count(lit(1)).as("df_c")),
-      tableName, "sh", buckets)
-
-  /** [[exactSubstrIncremental]] against a [[writeShingleIndex]]
-    * table: value-identical results, index-side exchange-free plan. */
-  def exactSubstrIndexed(spark: org.apache.spark.sql.SparkSession,
-      tableName: String, batch: DataFrame, l: Int = 16): DataFrame =
-    exactSubstrProbe(spark.table(tableName), batch, l)
 
   /** DuckDB replay of [[exactSubstrSpans]]: per-position shingle
     * strings via `list_slice` + `array_to_string` (splitting on ' '

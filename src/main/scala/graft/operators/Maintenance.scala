@@ -213,19 +213,6 @@ object Maintenance {
       .drop(cols.indices.map(k => s"__code_$k"): _*)
   }
 
-  /** Rewrite `df` as `numFiles` parquet files z-ordered on `cols`:
-    * range-partition by the z-value (sampled boundaries — balanced
-    * files even when z-space is unevenly populated), sort within each
-    * partition, drop the helper column. The table reads back
-    * identically; only file/row-group locality changes. */
-  def zorderWrite(df: DataFrame, cols: Seq[String], outPath: String,
-      numFiles: Int, bits: Int = 16): Unit =
-    zorderLayout(df, cols, bits)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(outPath)
-
   /** Oracle-checked face of the z-value computation over `events`
     * (user_id × value, 16 bits each): scaled codes plus the interleaved
     * z — pins the codegen'd expression and the scaling arithmetic

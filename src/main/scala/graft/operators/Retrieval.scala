@@ -13,10 +13,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale design — corpus-side postings, query-side broadcast:
   *  - term frequencies are one `explode` + one (doc_id, term) groupBy —
-  *    the only corpus-sized shuffle in the plan (the one-shot form
-  *    scans the corpus again for document frequencies and collection
-  *    stats; at 100 TB build the postings ONCE with [[writeBm25Index]]
-  *    and amortize across query batches via [[bm25SearchIndexed]]);
+  *    the only corpus-sized shuffle in the plan;
   *  - document frequencies and collection stats are term-keyed /
   *    single-row aggregates (tiny), joined back by BROADCAST — the
   *    corpus-sized postings stream is never re-shuffled;
@@ -66,41 +63,46 @@ object Retrieval {
       .toDF("qid", "term")
   }
 
-  /** The corpus-wide postings list `(term, doc_id, dl, tf)`: one
-    * `explode` + one groupBy — the only corpus-sized shuffle of the
-    * whole retrieval pipeline (when `onlyTerms` is empty: the index
-    * build and any caller that needs the full vocabulary).
+  /** The postings list `(term, doc_id, dl, tf)` of the literal term set
+    * `onlyTerms`: one `explode` + one groupBy — the only corpus-sized
+    * shuffle of the whole retrieval pipeline.
     *
-    * `onlyTerms` non-empty prunes the exploded token stream to that
-    * literal set BEFORE the groupBy (the [[proximitySearch]] trick:
-    * the downstream query-term joins discard everything else anyway,
-    * but Catalyst cannot push an inner-join filter through the
-    * aggregate, so without this the corpus-wide (doc_id, dl, term)
-    * shuffle builds postings for the whole vocabulary and then drops
-    * all but the handful of probe terms — guide §2.3, shuffle fewer
-    * bytes). Per-term tf/df over the surviving terms are unchanged:
-    * the filter commutes with a groupBy that keys on `term`. */
-  private def postings(documents: DataFrame,
-      onlyTerms: Seq[String] = Nil): DataFrame = {
-    val exploded = documents
+    * The exploded token stream is pruned to `onlyTerms` BEFORE the
+    * groupBy (the [[proximitySearch]] trick: the downstream query-term
+    * joins discard everything else anyway, but Catalyst cannot push an
+    * inner-join filter through the aggregate, so without this the
+    * corpus-wide (doc_id, dl, term) shuffle builds postings for the
+    * whole vocabulary and then drops all but the handful of probe
+    * terms — guide §2.3, shuffle fewer bytes). Per-term tf/df over the
+    * surviving terms are unchanged: the filter commutes with a groupBy
+    * that keys on `term`. */
+  private def postings(documents: DataFrame, onlyTerms: Seq[String]): DataFrame =
+    documents
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       // dl is functionally dependent on doc_id — keying the groupBy with
       // it costs nothing and saves a join back for length normalization
       .select(col("doc_id"), size(col("ts")).cast("double").as("dl"),
         explode(col("ts")).as("term"))
-    val pruned = if (onlyTerms.isEmpty) exploded
-      else exploded.where(col("term").isin(onlyTerms: _*))
-    pruned
+      .where(col("term").isin(onlyTerms: _*))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-  }
 
-  /** Shared scoring tail over a postings list `(term, doc_id, dl,
-    * tf)`: per-term BM25 contributions, per-document decimal-exact
-    * sum, per-query top-k. `dfc` is `(term, df)`; `stats` a single row
-    * `(n, sumdl)`. */
-  private def scoreTopK(tf: DataFrame, dfc: DataFrame, stats: DataFrame,
-      queryTerms: DataFrame, k: Int, k1: Double, b: Double): DataFrame = {
+  /** BM25 top-`k` documents per query: `(qid, bm25_rank, doc_id,
+    * score)`. `k1` saturates term frequency; `b` mixes in document
+    * length normalization (0 = none, 1 = full). */
+  def bm25Search(documents: DataFrame,
+      queries: Seq[(String, String)] = DemoQueries, k: Int = 10,
+      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val toks = documents.select(col("doc_id"), split(col("text"), " ").as("ts"))
+    // query terms are a plan-time literal set: prune the postings
+    // build to them (per-term tf and df are unchanged — see
+    // [[postings]]); only the collection stats still need the full
+    // corpus, and they come from the UN-exploded doc scan below
+    val tf = postings(documents,
+      queries.flatMap(_._2.split(" ")).distinct)
+    val dfc = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val stats = toks.agg(count(lit(1)).as("n"),
+      sum(size(col("ts"))).cast("long").as("sumdl"))
     val avgdl = col("sumdl").cast("double") / col("n").cast("double")
     val idfQ = expr(
       """CAST(CAST(ln((CAST(n AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
@@ -110,7 +112,7 @@ object Retrieval {
       (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl))
 
     val contrib = tf
-      .join(broadcast(queryTerms), Seq("term"))
+      .join(broadcast(queryTermsDf(documents, queries)), Seq("term"))
       .join(broadcast(dfc), Seq("term"))
       .crossJoin(broadcast(stats))
       .select(col("qid"), col("doc_id"),
@@ -131,65 +133,6 @@ object Retrieval {
       .where(col("bm25_rank") <= k)
       .select(col("qid"), col("bm25_rank"), col("doc_id"), col("score"))
       .orderBy("qid", "bm25_rank")
-  }
-
-  /** BM25 top-`k` documents per query: `(qid, bm25_rank, doc_id,
-    * score)`. `k1` saturates term frequency; `b` mixes in document
-    * length normalization (0 = none, 1 = full). */
-  def bm25Search(documents: DataFrame,
-      queries: Seq[(String, String)] = DemoQueries, k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val toks = documents.select(col("doc_id"), split(col("text"), " ").as("ts"))
-    // query terms are a plan-time literal set: prune the postings
-    // build to them (per-term tf and df are unchanged — see
-    // [[postings]]); only the collection stats still need the full
-    // corpus, and they come from the UN-exploded doc scan below
-    val tf = postings(documents,
-      queries.flatMap(_._2.split(" ")).distinct)
-    val dfc = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = toks.agg(count(lit(1)).as("n"),
-      sum(size(col("ts"))).cast("long").as("sumdl"))
-    scoreTopK(tf, dfc, stats, queryTermsDf(documents, queries), k, k1, b)
-  }
-
-  /** Materialize the inverted index: `<name>_postings` bucketed on
-    * `term` (the retrieval counterpart of [[Similarity.writeIvfIndex]]
-    * — at 100 TB the postings are the corpus-sized artifact, so they
-    * are hash-clustered on the probe key at write time) plus the tiny
-    * `<name>_doclen` (one `(doc_id, dl)` row per document, the source
-    * of collection stats). Built once, amortized over every query
-    * batch that follows. */
-  def writeBm25Index(documents: DataFrame, tableName: String,
-      buckets: Int = 8): Unit = {
-    graft.sources.Tables.writeBucketed(postings(documents),
-      s"${tableName}_postings", "term", buckets)
-    documents
-      .select(col("doc_id"), size(split(col("text"), " ")).cast("double").as("dl"))
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tableName}_doclen")
-  }
-
-  /** [[bm25Search]] over a pre-built [[writeBm25Index]]: document
-    * frequencies aggregate on the postings table's OWN bucket
-    * clustering (term-keyed groupBy with zero index-side exchange),
-    * collection stats come from the doc-length table, and the query
-    * terms broadcast to the bucketed scan. Identical output to the
-    * one-shot form at equal parameters. */
-  def bm25SearchIndexed(spark: org.apache.spark.sql.SparkSession,
-      tableName: String, queries: Seq[(String, String)] = DemoQueries,
-      k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // the literal term predicate PUSHES DOWN to the bucketed parquet
-    // scan (PushedFilters: In(term, ...)) — the index is term-bucketed
-    // and term-sorted, so row groups of non-query terms never decode;
-    // per-term df over the surviving rows is unchanged
-    val tf = spark.table(s"${tableName}_postings")
-      .where(col("term").isin(
-        queries.flatMap(_._2.split(" ")).distinct: _*))
-    val doclen = spark.table(s"${tableName}_doclen")
-    val dfc = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = doclen.agg(count(lit(1)).as("n"),
-      sum(col("dl")).cast("long").as("sumdl"))
-    scoreTopK(tf, dfc, stats, queryTermsDf(doclen, queries), k, k1, b)
   }
 
   /** Hybrid lexical→dense retrieval: BM25 recalls `kCand` candidates
@@ -549,40 +492,11 @@ object Retrieval {
     val ctot = documents
       .select(size(split(col("text"), " ")).cast("long").as("dl"))
       .agg(sum(col("dl")).cast("long").as("ctot"))
-    qlScore(postings(documents, queries.flatMap(_._2.split(" ")).distinct),
-      queryTermsDf(documents, queries), k, mu, ctot)
-  }
-
-  /** [[qlDirichletSearch]] over a pre-built [[writeBm25Index]]: the
-    * SAME index artifacts serve both ranker families — postings carry
-    * `(term, doc_id, dl, tf)`, which is the entire sufficient
-    * statistic for Dirichlet QL too (collection frequencies and the
-    * token total re-aggregate on the table's own term buckets with
-    * zero index-side exchange). Identical output to the one-shot form
-    * at equal parameters. */
-  def qlDirichletSearchIndexed(spark: org.apache.spark.sql.SparkSession,
-      tableName: String, queries: Seq[(String, String)] = DemoQueries,
-      k: Int = 10, mu: Double = 300.0): DataFrame = {
-    // term predicate pushes to the bucketed scan ([[bm25SearchIndexed]]
-    // note); the token total comes from the doclen table (Σ dl ≡ Σ tf)
-    val tf = spark.table(s"${tableName}_postings")
-      .where(col("term").isin(
-        queries.flatMap(_._2.split(" ")).distinct: _*))
-    val doclen = spark.table(s"${tableName}_doclen")
-    val ctot = doclen.agg(sum(col("dl")).cast("long").as("ctot"))
-    qlScore(tf, queryTermsDf(doclen, queries), k, mu, ctot)
-  }
-
-  /** Shared QL scoring tail over a postings list `(term, doc_id, dl,
-    * tf)` — the [[scoreTopK]] counterpart for the Dirichlet ranker.
-    * `tf` may arrive pruned to the query-term set; `ctot` (one row,
-    * the collection token total) therefore comes from the caller,
-    * computed over the FULL collection. */
-  private def qlScore(tf: DataFrame, qterms: DataFrame, k: Int,
-      mu: Double, ctot: DataFrame): DataFrame = {
+    val tf = postings(documents, queries.flatMap(_._2.split(" ")).distinct)
+    val qterms = queryTermsDf(documents, queries)
     // collection term frequency, pruned to query terms at the join
     // (cf is vocab-sized — qterms broadcasts INTO it, never the
-    // reverse), and the 1-row total token count. The post-join frame
+    // reverse). The post-join frame
     // is query-bounded (≤ |queries|·|query terms| rows), so collect it
     // ONCE: both consumers (the scoring broadcast and m_q) would
     // otherwise each re-execute the vocab-sized postings aggregation
@@ -593,13 +507,12 @@ object Retrieval {
     val qcfRows = qcfAgg.collect()
     val qcf = tf.sparkSession.createDataFrame(
       java.util.Arrays.asList(qcfRows: _*), qcfAgg.schema)
-    val stats = ctot
     // m_q: the query's in-collection distinct-term count (drives the
     // absent-term constant; bounded by query length)
     val mq = qcf.groupBy(col("qid")).agg(count(lit(1)).as("m"))
     val matched = tf
       .join(broadcast(qcf), Seq("term"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(broadcast(ctot))
       .select(col("qid"), col("doc_id"), col("dl"),
         expr(s"""CAST(floor(ln(1.0d + tf / ($mu *
                 |  (CAST(cf AS DOUBLE) / CAST(ctot AS DOUBLE))))

@@ -882,45 +882,12 @@ object Similarity {
           |  transform(cent_scores, (s, i) -> struct(-s AS ns, i AS idx))),
           |  1, $nProbe).idx""".stripMargin)).as("cluster_id"))
 
-  /** Materialize an IVF index as a BUCKETED table on `cluster_id` —
-    * the ANN counterpart of [[Dedup.writeBandIndex]], and what "the
-    * lists are storage partitions" means concretely at 100 TB: the
-    * (vec_id, embedding, cluster_id) rows are hash-clustered into
-    * bucket files at write time, so a LARGE query batch (too big to
-    * broadcast) probes the index with a join in which ONLY the probe
-    * side shuffles — the billion-vector side is read already
-    * clustered on the join key (zero index-side exchange,
-    * plan-asserted in `BucketingSpec`). Appending new vectors lands
-    * in the same bucket scheme without rewriting the index. */
-  def writeIvfIndex(embeddings: DataFrame, tableName: String,
-      nList: Int = 16, dim: Int = 64, buckets: Int = 8): Unit =
-    graft.sources.Tables.writeBucketed(ivfAssign(embeddings, nList, dim),
-      tableName, "cluster_id", buckets)
-
-  /** [[knnIvf]] probing a pre-materialized bucketed index — the
-    * day-to-day production shape (index built once, query batches
-    * arrive forever). Deliberately NOT broadcasting the probe side:
-    * this is the large-batch path where the probe rows themselves are
-    * fact-scaled; the bucketed index keeps its half of the join
-    * exchange-free and the batch pays the only shuffle. Results are
-    * identical to [[knnIvf]] at equal parameters (same deterministic
-    * assignment, same exact re-rank). */
-  def knnIvfIndexed(spark: SparkSession, tableName: String,
-      queries: DataFrame, k: Int = 10, nList: Int = 16, nProbe: Int = 4,
-      dim: Int = 64): DataFrame = {
-    val assigned = spark.table(tableName)
-    val probes = probeRows(withScores(queries, nList, dim), nProbe)
-    ivfProbeJoin(assigned, probes, k, broadcastProbes = false)
-  }
-
-  /** Shared IVF tail: equi-join probes to assigned lists, score
-    * exactly, keep top k. `broadcastProbes` is the small-batch hint;
-    * the indexed path disables it (see [[knnIvfIndexed]]). */
+  /** Shared IVF tail: equi-join the broadcast probes to assigned lists,
+    * score exactly, keep top k. */
   private def ivfProbeJoin(assigned: DataFrame, probes: DataFrame,
-      k: Int, broadcastProbes: Boolean = true): DataFrame = {
+      k: Int): DataFrame = {
     val candidates = assigned
-      .join(if (broadcastProbes) broadcast(probes) else probes,
-        Seq("cluster_id"))
+      .join(broadcast(probes), Seq("cluster_id"))
       .where(col("vec_id") =!= col("query_id"))
     val scored = candidates.select(col("query_id"), col("vec_id").as("neighbor_id"),
       (expr("vec_dot(q_emb, embedding)") /
@@ -1595,7 +1562,7 @@ object Similarity {
     * shape): [[ivfAssign]]'s lists prune the search to nProbe clusters
     * per query, then PQ codes score only the survivors by ADC. The
     * probe is the same equi-join on `cluster_id` as [[knnIvf]] (at
-    * scale: a bucket-pruned scan of a [[writeIvfIndex]]-style table
+    * scale: a cluster-pruned scan of an IVF list table
     * that stores CODES instead of vectors — 16× less storage AND a
     * fraction of it read per query). Two stacked approximations →
     * rows-only; fidelity reported by [[knnIvfPqRecall]]. */
@@ -1923,9 +1890,10 @@ object Similarity {
   /** The `embedding_pca` query face: per-row coordinates in the PINNED
     * Hadamard basis ([[pinnedBasis]]), quantized for stable output —
     * hash-exact against the DuckDB signed-fold replay. The TRAINED
-    * eigenbasis face is [[embeddingPcaTrained]] (rows-only: no SQL
-    * engine fits eigenvectors); `PcaSpec` holds its math to account
-    * and [[knnPcaRecall]] measures it as data. */
+    * eigenbasis is [[pcaFit]] + [[pcaProject]] (rows-only: no SQL
+    * engine fits eigenvectors), served through [[knnPcaTrained]];
+    * `PcaSpec` holds its math to account and [[knnPcaRecall]]
+    * measures it as data. */
   def embeddingPca(embeddings: DataFrame, k: Int = 4,
       dim: Int = 64): DataFrame = {
     graft.functions.Registry.ensure(embeddings.sparkSession)
@@ -1935,17 +1903,6 @@ object Similarity {
         expr(s"CAST(CAST(vec_dot(embedding, ${floatArrayLit(b)}) " +
           s"AS DECIMAL(20,8)) AS DOUBLE)").as(s"pc$c")
       }.toSeq: _*)
-      .orderBy("vec_id")
-  }
-
-  /** [[embeddingPca]]'s trained twin: top-`k` eigencomponents fitted on
-    * the corpus ([[pcaFit]]), per-row projections quantized. */
-  def embeddingPcaTrained(embeddings: DataFrame, k: Int = 4): DataFrame = {
-    val model = pcaFit(embeddings, k)
-    val proj = pcaProject(embeddings, model)
-    proj.select(col("vec_id") +:
-      (0 until k).map(c => expr(
-        s"CAST(CAST(pc$c AS DECIMAL(20,8)) AS DOUBLE)").as(s"pc$c")): _*)
       .orderBy("vec_id")
   }
 

@@ -2140,18 +2140,9 @@ object TextAnalysis {
     * Output: (doc_id, n_scored, n_hit3, n_hit2, n_hit1, nll_sum),
     * docs with <3 tokens absent. */
   def lmTrigramScore(train: DataFrame, score: DataFrame): DataFrame = {
-    val (c1, c2, c3, n) = trigramCounts(train)
-    trigramScoreTail(c1, c2, c3, n, score)
-  }
-
-  private def toks(df: DataFrame) =
-    df.select(col("doc_id"), split(col("text"), " ").as("t"))
-
-  /** The stupid-backoff model state: (c1, c2, c3, n_tok) count tables
-    * over `train` — vocabulary-bounded aggregations, the only thing a
-    * materialized LM index needs to persist. */
-  private def trigramCounts(train: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    def toks(df: DataFrame) =
+      df.select(col("doc_id"), split(col("text"), " ").as("t"))
+    // the model: vocabulary-bounded count tables over `train`
     val trainToks = toks(train)
     val c1 = trainToks.select(explode(col("t")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1"))
@@ -2168,40 +2159,8 @@ object TextAnalysis {
       .groupBy(col("g.a").as("a"), col("g.b").as("b"), col("g.c").as("c"))
       .agg(count(lit(1)).as("c3"))
     val n = trainToks.agg(sum(size(col("t"))).as("n_tok"))
-    (c1, c2, c3, n)
-  }
-
-  /** Materialize the trigram-LM count tables as BUCKETED parquet
-    * tables (`{t}_c1` by w, `{t}_c2` by (a,b), `{t}_c3` by (a,b,c),
-    * `{t}_stats` 1 row) — the [[Retrieval.writeBm25Index]] pattern:
-    * train ONCE, then every scoring batch probes the stored clustering
-    * with zero model-side exchange instead of re-aggregating the
-    * trusted corpus per call. */
-  def writeTrigramLm(train: DataFrame, tableName: String,
-      buckets: Int = 8): Unit = {
-    val (c1, c2, c3, n) = trigramCounts(train)
-    graft.sources.Tables.writeBucketed(c1, s"${tableName}_c1", "w", buckets)
-    graft.sources.Tables.writeBucketed(c2, s"${tableName}_c2", "a", buckets, "b")
-    graft.sources.Tables.writeBucketed(c3, s"${tableName}_c3", "a", buckets, "b", "c")
-    n.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tableName}_stats")
-  }
-
-  /** [[lmTrigramScore]] over a pre-built [[writeTrigramLm]] model:
-    * identical output to the one-shot form at equal inputs, but the
-    * count-table side of every probe join reads the bucket clustering
-    * written at train time — at 100 TB the crawl stream shuffles to
-    * the model's layout, never the reverse. */
-  def lmTrigramScoreIndexed(spark: org.apache.spark.sql.SparkSession,
-      tableName: String, score: DataFrame): DataFrame =
-    trigramScoreTail(spark.table(s"${tableName}_c1"),
-      spark.table(s"${tableName}_c2"), spark.table(s"${tableName}_c3"),
-      spark.table(s"${tableName}_stats"), score)
-
-  /** Shared scoring tail: tier lookups joined onto the instance
-    * stream, per-instance quantized −ln S, per-doc fold. */
-  private def trigramScoreTail(c1: DataFrame, c2: DataFrame,
-      c3: DataFrame, n: DataFrame, score: DataFrame): DataFrame = {
+    // tier lookups joined onto the instance stream, per-instance
+    // quantized −ln S, per-doc fold
     val inst = toks(score).where(size(col("t")) >= 3)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(t) - 3), " +
@@ -2236,10 +2195,6 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  /** Oracle for [[lmTrigramScore]] with the catalog's train/score
-    * split (train = every source but `scoreSource`, score =
-    * `scoreSource`). Same tiers, same integer products, same
-    * DECIMAL(18,9) per-instance quantization. */
   /** CCNet's final output shape (Wenzek et al., arXiv 1911.00359 §4.3):
     * bucket the scored corpus into head/middle/tail TERTILES of
     * per-document LM perplexity — head feeds the highest-quality mix,
@@ -2287,6 +2242,10 @@ object TextAnalysis {
        |    ELSE 'tail' END AS ppl_bucket
        |FROM b ORDER BY doc_id""".stripMargin
 
+  /** Oracle for [[lmTrigramScore]] with the catalog's train/score
+    * split (train = every source but `scoreSource`, score =
+    * `scoreSource`). Same tiers, same integer products, same
+    * DECIMAL(18,9) per-instance quantization. */
   def lmTrigramScoreSql(scoreSource: String = "src0"): String =
     s"""WITH tr AS (SELECT string_split(text, ' ') AS t FROM documents
        |            WHERE source <> '$scoreSource'),

@@ -158,8 +158,7 @@ object Unigram {
     * semantic hash — same source ⇒ same key within a session; the
     * cached value is the model (≤ targetVocab pairs), not data. At
     * scale the same sharing is a materialized vocab table the encode
-    * join reads (the `writeBm25Index`/`bm25SearchIndexed` pattern) —
-    * this memo is the single-session equivalent. */
+    * join reads — this memo is the single-session equivalent. */
   private val trained =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Seq[(String, Double)]]()
   private def trainCached(documents: DataFrame,

@@ -17,11 +17,14 @@ import graft.streaming.{MetricsStore, StreamingMetrics}
   * micro-batches; while it runs, the five endpoints are live, e.g.
   * `curl localhost:<port>/metrics/timeseries/visits?lastMinutes=3`.
   *
-  * With a third `host:port` argument the in-memory store is swapped
-  * for a live Redis(-compatible) server: the pipeline writes it
-  * worker-side over RESP and the dashboard reads it back — the
-  * reference deployment, verbatim (the variantsOverlapApprox panel
-  * then serves empty: theta sketches are engine-held state).
+  * The pipeline is one streaming query on either store. With a third
+  * `host:port` argument the in-memory store is swapped for a live
+  * Redis(-compatible) server: the pipeline writes it worker-side over
+  * RESP and the dashboard reads it back — the reference deployment,
+  * verbatim (the variantsOverlapApprox panel then serves empty: theta
+  * sketches are engine-held state). In-memory, the driver merges the
+  * writes, and a second query keeps the theta sketches that panel
+  * serves.
   */
 object DashboardMain {
   def main(args: Array[String]): Unit = {

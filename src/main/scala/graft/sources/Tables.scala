@@ -13,10 +13,6 @@ import graft.LogEvent
   * scale the same call works on a partitioned directory tree unchanged.
   */
 object Tables {
-  val All: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -87,40 +83,6 @@ object Tables {
   private[graft] def underSplit(df: DataFrame): Boolean =
     df.rdd.getNumPartitions <
       df.sparkSession.sparkContext.defaultParallelism / 2
-
-  /** Write a frame as a bucketed+sorted parquet table: rows are
-    * hash-partitioned into `buckets` files per partition by `bucketCol`
-    * at WRITE time, so two tables bucketed the same way join with NO
-    * exchange and no sort — the storage-side co-location the 100 TB
-    * fact-fact joins need (Spark requires a catalog table for bucket
-    * metadata, hence `saveAsTable`). */
-  def writeBucketed(df: DataFrame, tableName: String, bucketCol: String,
-      buckets: Int, moreCols: String*): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, bucketCol, moreCols: _*)
-      .sortBy(bucketCol, moreCols: _*)
-      .saveAsTable(tableName)
-
-  /** CSV source with an explicit schema (never inferred — a schema
-    * inference pass reads the data twice and breaks on 100 TB). Same
-    * malformed-row drop semantics as the JSON parse path: PERMISSIVE
-    * parse, then non-null filter on required columns. */
-  def readCsv(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType,
-      header: Boolean = true): DataFrame =
-    spark.read
-      .option("header", header.toString)
-      .option("mode", "PERMISSIVE")
-      .schema(schema)
-      .csv(path)
-
-  /** JSON-lines source with an explicit schema (same rationale). */
-  def readJsonLines(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read
-      .option("mode", "PERMISSIVE")
-      .schema(schema)
-      .json(path)
 
   /** P1 — parse a raw JSON click-stream (`Dataset[String]`-shaped
     * DataFrame with a `value` column) into typed LogEvent rows,

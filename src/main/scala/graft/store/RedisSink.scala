@@ -196,15 +196,23 @@ class RedisMetricsSink(host: String, port: Int)
     }
   /** Pairwise set intersection the reference's way: SINTERSTORE into a
     * scratch key, SCARD it, DEL it
-    * (TimeseriesMetricsController.java:109-136). */
+    * (TimeseriesMetricsController.java:109-136) — every pair's three
+    * commands in ONE pipelined round trip after the KEYS call. */
   def overlap(prefix: String): Seq[(String, String, Long)] = {
     val fams = keysByPrefix(prefix).sorted
-    for { a <- fams; b <- fams if a < b } yield {
-      val tmp = s"graft_overlap_tmp:$a:$b"
-      run("SINTERSTORE", tmp, a, b)
-      val n = scard(tmp)
-      run("DEL", tmp)
-      (a.stripPrefix(prefix), b.stripPrefix(prefix), n)
+    val pairs = for { a <- fams; b <- fams if a < b } yield (a, b)
+    if (pairs.isEmpty) Nil
+    else {
+      val cmds = pairs.flatMap { case (a, b) =>
+        val tmp = s"graft_overlap_tmp:$a:$b"
+        Seq(Seq("SINTERSTORE", tmp, a, b), Seq("SCARD", tmp), Seq("DEL", tmp))
+      }
+      val replies = this.synchronized(client.pipeline(cmds))
+      replies.collectFirst { case RespReply.Err(m) => throw new IOException(s"redis error: $m") }
+      pairs.zip(replies.grouped(3).toSeq).map {
+        case ((a, b), Seq(_, RespReply.Num(n), _)) => (a.stripPrefix(prefix), b.stripPrefix(prefix), n)
+        case (_, other) => throw new IOException(s"unexpected SCARD reply: ${other(1)}")
+      }
     }
   }
 

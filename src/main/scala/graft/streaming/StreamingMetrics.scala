@@ -22,9 +22,8 @@ import graft.operators.Windows
   *  - `sadd`   ↔ `Method.SADD` (exact member sets; idempotent)
   *  - `pfadd`  ↔ `Method.PFADD` (members folded into a sketch by the
   *    store; a partition-capable store receives them worker-side)
-  *  - `put`    — an upsert of a materialized aggregate: a store without
-  *    a partition writer gets the per-minute HLL count from Spark's own
-  *    update-mode `approx_count_distinct` state this way.
+  *  - `put`    — a last-write-wins upsert of a materialized value
+  *    (Redis SET); the pipeline itself issues none.
   *
   * Implementations must be Serializable: the sink is captured by
   * `foreachBatch` closures (driver-side execution, but Spark
@@ -37,8 +36,7 @@ import graft.operators.Windows
 trait KeyValueMetricsSink extends Serializable {
   /** Commutative counter merge (Redis INCRBY). */
   def incrBy(key: String, n: Long): Unit
-  /** Last-write-wins upsert of a materialized aggregate (the PFCOUNT
-    * of Spark's own merged HLL state). */
+  /** Last-write-wins upsert of a materialized value (Redis SET). */
   def put(key: String, v: Long): Unit
   /** Idempotent member-set union (Redis SADD). */
   def sadd(key: String, members: Iterable[String]): Unit
@@ -108,19 +106,20 @@ trait PartitionMetricsWriter {
   def close(): Unit
 }
 
-/** The streaming metrics store — the engine's stand-in for the
-  * reference's Redis instance. Keys follow the reference's key language
-  * `{family}_{dims}_{minute}` (MetricsCalculationPipeline.java:198-243);
-  * merge operations are commutative/idempotent counterparts of
-  * INCRBY / SADD, applied once per micro-batch (so, unlike the
-  * reference's at-least-once INCRBY, counts are exactly-once —
-  * SURVEY.md §7.3 notes this as a deliberate improvement).
+/** The in-memory metrics store — the engine's stand-in for the
+  * reference's Redis instance, and the test double of
+  * [[graft.store.RedisMetricsSink]]. Keys follow the reference's key
+  * language `{family}_{dims}_{minute}`
+  * (MetricsCalculationPipeline.java:198-243); merge operations are
+  * commutative/idempotent counterparts of INCRBY / SADD / PFADD, applied
+  * once per micro-batch (so, unlike the reference's at-least-once
+  * INCRBY, counts are exactly-once — SURVEY.md §7.3 notes this as a
+  * deliberate improvement).
   *
-  * In production this would be an external KV store written from
-  * `foreachBatch`; a TrieMap keeps the engine self-contained and the
-  * merge semantics identical. The write face is [[KeyValueMetricsSink]]
-  * — swap in a Redis-backed implementation and the pipeline is the
-  * reference's, verbatim.
+  * [[StreamingMetrics.startPipeline]] runs the same one query against
+  * this store as against Redis: without a partition writer, the
+  * fan-out's SADD and PFADD members come back to the driver and land
+  * in the same [[writeBatchOnce]] call as the visit counts.
   */
 class MetricsStore extends KeyValueMetricsSink with MetricsReader {
   val counters = TrieMap.empty[String, Long]
@@ -133,7 +132,7 @@ class MetricsStore extends KeyValueMetricsSink with MetricsReader {
   def incrBy(key: String, n: Long): Unit =
     counters.updateWith(key) { case prev => Some(prev.getOrElse(0L) + n) }
 
-  /** Upsert analog for state emitted by update-mode aggregates. */
+  /** SET analog: last-write-wins upsert of a counter value. */
   def put(key: String, v: Long): Unit = counters.put(key, v)
 
   /** SADD analog (MetricsCalculationPipeline.java:105-129). */
@@ -145,10 +144,8 @@ class MetricsStore extends KeyValueMetricsSink with MetricsReader {
 
   def counter(key: String): Long = counters.getOrElse(key, 0L)
   def scard(key: String): Long = sets.get(key).map(_.size.toLong).getOrElse(0L)
-  /** PFCOUNT face: members folded via [[pfadd]] win; otherwise the
-    * materialized estimate the HLL-aggregate branch `put`s. */
-  def hllCount(key: String): Long =
-    hlls.get(key).map(_.size.toLong).getOrElse(counter(key))
+  /** PFCOUNT face over the members folded in via [[pfadd]]. */
+  def hllCount(key: String): Long = hlls.get(key).map(_.size.toLong).getOrElse(0L)
 
   /** Serialized theta sketches per key — the sketch flavor of the set
     * family: at 100 TB the serving store cannot hold raw uid sets, and
@@ -212,15 +209,11 @@ class MetricsStore extends KeyValueMetricsSink with MetricsReader {
   * stream, read and parsed once per micro-batch and multiplexed into its
   * metric branches, as the reference's one Dataflow job multiplexes it.
   *
-  * Architecture mapping:
-  *  - the stateless branches (visits counter, per-dimension member sets
-  *    and, on a partition-capable store, the PFADD members) are ONE
-  *    streaming query whose micro-batch is a single pass over its
-  *    partitions: one Spark job, no shuffle ([[startPipeline]]);
-  *  - on a driver-merged store the approx branch uses
-  *    `approx_count_distinct` (HLL++) in an update-mode aggregate —
-  *    Spark's native PFADD/PFCOUNT, and the pipeline's only stateful
-  *    query.
+  * Architecture mapping: every branch (visits counter, per-dimension
+  * member sets, the `hll_dthr` PFADD members) is stateless, so the
+  * pipeline is ONE streaming query whose micro-batch is a single pass
+  * over its partitions — one Spark job, no shuffle, no state store —
+  * on every store ([[startPipeline]]).
   *
   * Beyond the pipeline, an algebraic batch metric (counts and exact
   * decimal sums over a bounded grain) has no streaming twin: its
@@ -228,22 +221,16 @@ class MetricsStore extends KeyValueMetricsSink with MetricsReader {
   * the batch readout, run by [[startReadout]]. The starters left here
   * are the served ones and the state folds that are not algebraic.
   *
-  * No watermark by default: the reference accepts late data forever
-  * (no Beam windowing/triggers — SURVEY.md §2.3), and every merge is
-  * order-insensitive, so a late event folds into its original minute.
-  * Pass `watermark = Some("10 minutes")` for bounded state (documented
-  * deviation).
+  * The pipeline has no watermark: the reference accepts late data
+  * forever (no Beam windowing/triggers — SURVEY.md §2.3), every merge
+  * is order-insensitive, so a late event folds into its original
+  * minute, and with no aggregate there is no state to bound.
   */
 object StreamingMetrics {
-
-  private def minuteKey(prefix: String) =
-    concat_ws("_", lit(prefix), Windows.minuteKey(col(LogEvent.Ts)))
 
   /** Name of the fused stateless query: its checkpoint subdirectory
     * under `checkpointRoot` and its INCRBY ledger id. */
   val FanOutQuery = "metrics_fanout"
-  /** Name of the update-mode HLL query of driver-merged stores. */
-  val HllQuery = "hll_users_minute"
   /** Checkpoint subdirectories of the earlier one-query-per-branch
     * layout, which the fused query cannot resume. */
   private val LegacyBranches =
@@ -284,16 +271,20 @@ object StreamingMetrics {
     def result: Map[String, Set[String]] = byKey.iterator.map { case (k, s) => k -> s.toSet }.toMap
   }
 
+  /** One partition task's share of a micro-batch: its per-minute visit
+    * counts, and the SADD and PFADD member sets it did not ship itself. */
+  private final case class Share(visits: Map[String, Long],
+      sadds: Map[String, Set[String]], pfadds: Map[String, Set[String]])
+
   /** The fan-out pass over one partition of a micro-batch (rows: minute,
     * uid, variant, experiment id). Every row bumps its minute's visit
-    * count and adds its members to the SADD families' sets, and with a
-    * partition writer also to the PFADD family's. With a writer the sets
-    * ship from this task (no member reaches the driver) and only the
-    * visit counts return; without one the SADD sets return too. SADD and
-    * PFADD are idempotent, so a member sent by several tasks or flushes
-    * needs no global `distinct`. */
-  private def fanOutPartition(rows: Iterator[Row], factory: Option[PartitionWriterFactory])
-      : (Map[String, Long], Map[String, Set[String]]) = {
+    * count and adds its members to the SADD families' sets and the PFADD
+    * family's. With a partition writer the sets ship from this task (no
+    * member reaches the driver) and only the visit counts return;
+    * without one the sets return too. SADD and PFADD are idempotent, so
+    * a member sent by several tasks or flushes needs no global
+    * `distinct`. */
+  private def fanOutPartition(rows: Iterator[Row], factory: Option[PartitionWriterFactory]): Share = {
     val writer = factory.map(_.open())
     try {
       val minutes = mutable.HashMap.empty[String, MinuteSlot]
@@ -308,40 +299,37 @@ object StreamingMetrics {
         sets.add(slot.users, uid)
         sets.add(variants.getOrElseUpdate(r.getString(2), storeKey("set_var", r.getString(2))), uid)
         sets.add(slot.experiments, r.getString(3))
-        if (writer.isDefined) hlls.add(slot.hll, uid)
+        hlls.add(slot.hll, uid)
       }
       sets.drain(); hlls.drain()
-      (minutes.valuesIterator.map(s => s.visits -> s.count).toMap, sets.result)
+      Share(minutes.valuesIterator.map(s => s.visits -> s.count).toMap, sets.result, hlls.result)
     } finally writer.foreach(_.close())
   }
 
-  /** The reference's fan-out (P2–P8) and its store merges. The
-    * stateless branches — INCRBY visit counters, SADD `set_dthr` /
-    * `set_var` / `set_experiments` and, on a partition-capable store,
-    * PFADD `hll_dthr` — run as ONE streaming query, [[FanOutQuery]], that
-    * reads and parses each event once. Its micro-batch is one Spark job:
-    * each partition task makes a single pass ([[fanOutPartition]]),
-    * ships its SADD/PFADD members worker→store through
-    * `store.partitionWriter` (the reference's RedisIO shape,
-    * MetricsCalculationPipeline.java:54-57) and returns its per-minute
-    * visit counts, which the driver sums and applies through
-    * `writeBatchOnce` under the (FanOutQuery, batchId) ledger — so a
-    * re-delivered micro-batch is skipped, not double-counted. A store
-    * without a partition writer gets its member sets from the same pass
-    * and merges them in that one `writeBatchOnce` call; its HLL branch
-    * is Spark's update-mode `approx_count_distinct` aggregate,
-    * [[HllQuery]], the only second query.
+  /** The reference's fan-out (P2–P8) and its store merges: INCRBY visit
+    * counters, SADD `set_dthr` / `set_var` / `set_experiments` and PFADD
+    * `hll_dthr`, all as ONE streaming query, [[FanOutQuery]], that reads
+    * and parses each event once and keeps no state. Its micro-batch is
+    * one Spark job: each partition task makes a single pass
+    * ([[fanOutPartition]]) and returns its per-minute visit counts,
+    * which the driver sums and applies through `writeBatchOnce` under
+    * the (FanOutQuery, batchId) ledger — so a re-delivered micro-batch
+    * is skipped, not double-counted. The SADD/PFADD members ship
+    * worker→store through `store.partitionWriter` when the store has
+    * one (the reference's RedisIO shape,
+    * MetricsCalculationPipeline.java:54-57); otherwise they return with
+    * the visit counts and go into that same `writeBatchOnce` call.
     *
-    * Returns the started queries; callers own their lifecycle. With
-    * `checkpointRoot` each query checkpoints under `checkpointRoot/<name>`
-    * — the restartable production form: an abrupt kill re-delivers at
-    * most the in-flight batch, which the ledger (INCRBY) and idempotence
-    * (SADD, PFADD, puts) absorb. A `checkpointRoot` written by the
-    * earlier one-query-per-branch layout (`visits_counter`,
-    * `set_users_minute`, … subdirectories) cannot be resumed and is
-    * refused. Kept: the served pipeline, which `DashboardMain` runs. */
+    * Returns the one started query (as a `Seq`); callers own its
+    * lifecycle. With `checkpointRoot` it checkpoints under
+    * `checkpointRoot/`[[FanOutQuery]] — the restartable production form:
+    * an abrupt kill re-delivers at most the in-flight batch, which the
+    * ledger (INCRBY) and idempotence (SADD, PFADD) absorb. A
+    * `checkpointRoot` written by the earlier one-query-per-branch layout
+    * (`visits_counter`, `set_users_minute`, … subdirectories) cannot be
+    * resumed and is refused. Kept: the served pipeline, which
+    * `DashboardMain` runs. */
   def startPipeline(events: Dataset[LogEvent], store: KeyValueMetricsSink,
-      watermark: Option[String] = None,
       checkpointRoot: Option[String] = None): Seq[StreamingQuery] = {
     checkpointRoot.foreach { r =>
       val root = new org.apache.hadoop.fs.Path(r)
@@ -353,37 +341,22 @@ object StreamingMetrics {
           s"the earlier one-query-per-branch pipeline, which the fused '$FanOutQuery' " +
           "query cannot resume; start it on a fresh checkpoint root")
     }
-    def withCk[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T],
-        name: String): org.apache.spark.sql.streaming.DataStreamWriter[T] =
-      checkpointRoot.fold(w)(r => w.option("checkpointLocation", s"$r/$name"))
-    val ev0 = events.toDF()
-      .withColumnRenamed("experimentId", LogEvent.ExperimentId)
-    val ev = watermark.fold(ev0)(w => ev0.withWatermark(LogEvent.Ts, w))
     val factory = store.partitionWriter
-
-    val fanOut = withCk(ev
+    val fanOut = events.toDF()
       .select(Windows.minuteKey(col(LogEvent.Ts)), col(LogEvent.Uid),
-        col(LogEvent.Variant), col(LogEvent.ExperimentId))
+        col(LogEvent.Variant), col("experimentId"))
       .writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val shares = batch.rdd
           .mapPartitions(rows => Iterator.single(fanOutPartition(rows, factory)))
           .collect().toSeq
         val _ = store.writeBatchOnce(FanOutQuery, batchId,
-          incrs = shares.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _).toSeq,
-          sadds = shares.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ ++ _).toSeq)
-      }, FanOutQuery).queryName(FanOutQuery).start()
-
-    val approxUsers = if (factory.isDefined) Nil else Seq(withCk(ev
-      .groupBy(minuteKey("hll_dthr").as("k"))
-      .agg(approx_count_distinct(col(LogEvent.Uid)).as("v"))
-      .writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.writeBatch(puts = batch.collect().toSeq
-          .map(r => r.getString(0) -> r.getLong(1)))
-      }, HllQuery).queryName(HllQuery).start())
-
-    fanOut +: approxUsers
+          incrs = shares.flatMap(_.visits).groupMapReduce(_._1)(_._2)(_ + _).toSeq,
+          sadds = shares.flatMap(_.sadds).groupMapReduce(_._1)(_._2)(_ ++ _).toSeq,
+          pfadds = shares.flatMap(_.pfadds).groupMapReduce(_._1)(_._2)(_ ++ _).toSeq)
+      }
+    Seq(checkpointRoot.fold(fanOut)(r => fanOut.option("checkpointLocation", s"$r/$FanOutQuery"))
+      .queryName(FanOutQuery).start())
   }
 
   /** The streaming face of an algebraic batch metric: `grain` is the

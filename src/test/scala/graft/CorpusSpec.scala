@@ -375,34 +375,6 @@ class CorpusSpec extends AnyFunSuite {
     assert(again.toSeq === got.toSeq)
   }
 
-  test("writeCorpusShards: clustered shard dirs, reproducible manifest, total coverage") {
-    val out = java.nio.file.Files.createTempDirectory("shards_t").toString
-    val m1 = Corpus.writeCorpusShards(docs, out, epoch = 1, shards = 4)
-      .as[(Long, Long, Long, Long)].collect().toList
-    // every document lands in exactly one shard
-    assert(m1.map(_._2).sum === docs.count())
-    assert(m1.map(_._1) === m1.map(_._1).sorted && m1.size <= 4)
-    // the written layout partition-prunes: one shard dir per shard
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("shard=")).map(_.getName).sorted
-    assert(dirs.length === m1.size)
-    // re-running the same epoch reproduces the manifest byte-for-byte
-    val out2 = java.nio.file.Files.createTempDirectory("shards_t2").toString
-    val m2 = Corpus.writeCorpusShards(docs, out2, epoch = 1, shards = 4)
-      .as[(Long, Long, Long, Long)].collect().toList
-    assert(m2 === m1)
-    // a different epoch is a different permutation: some shard's
-    // position-ordered id sequence must change
-    val m3 = Corpus.writeCorpusShards(docs, out2, epoch = 2, shards = 4)
-      .as[(Long, Long, Long, Long)].collect().toList
-    assert(m3.map(_._4) !== m1.map(_._4))
-    // shard content round-trips: the union of shard reads is the corpus
-    val spark2 = spark
-    val back = spark2.read.parquet(out).select("doc_id")
-      .as[Long].collect().sorted.toSeq
-    assert(back === docs.select("doc_id").as[Long].collect().sorted.toSeq)
-  }
-
   test("lengthBatching: bands partition by length, batches cut at size, padding sane") {
     val got = Corpus.lengthBatching(docs, batchSize = 32, bandWidth = 16)
       .as[(Long, Long, Long, Long, Long, Long, Double)].collect()

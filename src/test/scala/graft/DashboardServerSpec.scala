@@ -24,7 +24,7 @@ class DashboardServerSpec extends AnyFunSuite {
     // two closed minutes of state; 10:17 is "now" (stays incomplete)
     store.incrBy("visitCounter_2026_08_12T10_15", 3L)
     store.incrBy("visitCounter_2026_08_12T10_16", 2L)
-    store.put("hll_dthr_2026_08_12T10_15", 2L)
+    store.pfadd("hll_dthr_2026_08_12T10_15", Seq("u1", "u2"))
     store.sadd("set_experiments_2026_08_12T10_16", Seq("e1", "e2"))
     store.sadd("set_var_1", Seq("u1", "u2"))
     store.sadd("set_var_2", Seq("u2", "u3"))

@@ -108,30 +108,4 @@ class MaintenanceSpec extends AnyFunSuite {
       assert(z === want, s"x=$x y=$y")
     }
   }
-
-  test("z-order layout prunes a y-band query that a linear sort cannot") {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    // uniform 256x256 grid; query: all x, narrow y band [40, 55]
-    val grid = spark.range(256L * 256L)
-      .select((col("id") % 256).as("x"), (col("id") / 256).as("y"))
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    Maintenance.zorderWrite(grid, Seq("x", "y"), s"$dir/z", numFiles = 16, bits = 8)
-    grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(s"$dir/linear")
-    def filesHit(path: String): (Long, Long) = {
-      val boxes = spark.read.parquet(path)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("y").as("lo"), max("y").as("hi"))
-      (boxes.where(col("lo") <= 55 && col("hi") >= 40).count(), boxes.count())
-    }
-    val (zHit, zTotal) = filesHit(s"$dir/z")
-    val (linHit, linTotal) = filesHit(s"$dir/linear")
-    assert(zTotal === 16 && linTotal === 16)
-    // x-sorted files each span ALL y -> every file intersects the band
-    assert(linHit === 16L)
-    // z-ordered files are spatial tiles -> only the band's tile row(s)
-    assert(zHit <= 6L, s"z layout hit $zHit of $zTotal files")
-    // layout is a rewrite, not a transform: content identical
-    assert(spark.read.parquet(s"$dir/z").count() === 256L * 256L)
-  }
 }

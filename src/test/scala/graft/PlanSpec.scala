@@ -7,9 +7,8 @@ import graft.operators.{Analytics, Relational, Metrics, Dedup}
 
 /** Plan-shape assertions: the scale properties each operator is
   * designed around (broadcasts of small sides, map-side partial
-  * aggregation, column pruning at the scan, partition pruning in the
-  * metrics store) — so a refactor that silently loses one fails a test,
-  * not a 100 TB run. */
+  * aggregation, column pruning at the scan) — so a refactor that
+  * silently loses one fails a test, not a 100 TB run. */
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.Sf0001
@@ -175,41 +174,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Window"), "native as-of should not use a window operator")
     // both sides exchanged onto the key and sorted — exactly two of each
     assert("Exchange hashpartitioning".r.findAllIn(p).length === 2, p.take(1500))
-  }
-
-  test("metrics store timeseries read partition-prunes to one metric family") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_plan").toString
-    val ev = Tables.logEvents(spark, d)
-    graft.store.MetricsTables.write(graft.store.MetricsTables.materialize(ev), dir)
-    val store = graft.store.MetricsTables.read(spark, dir)
-    val spine = Metrics.timesSpine(ev).select(org.apache.spark.sql.functions.col("minute_key"))
-    val p = plan(graft.store.MetricsTables.timeseries(store, "visitCounter", spine))
-    val scanLine = p.linesIterator
-      .find(l => l.contains("FileScan parquet") && l.contains(dir))
-      .getOrElse("")
-    assert(scanLine.nonEmpty, s"no store scan found in plan:\n${p.take(1200)}")
-    assert("PartitionFilters: \\[[^\\]]*metric".r.findFirstIn(scanLine).isDefined,
-      s"store scan not partition-pruned: $scanLine")
-  }
-
-  test("corpus shard read partition-prunes to one shard (writeCorpusShards layout)") {
-    // writeCorpusShards promises a partition-prunable layout: a
-    // training loader's `WHERE shard = k` must touch ONE shard
-    // directory, not scan the epoch — assert the partition filter
-    // reaches the scan (the metrics-store precedent above)
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards_plan").toString
-    graft.operators.Corpus.writeCorpusShards(
-      Tables.documents(spark, d), dir, epoch = 1, shards = 4).collect()
-    val q = spark.read.parquet(dir)
-      .where(org.apache.spark.sql.functions.col("shard") === 2)
-      .select("doc_id", "pos")
-    val p = plan(q)
-    val scanLine = p.linesIterator
-      .find(l => l.contains("FileScan parquet") && l.contains(dir))
-      .getOrElse("")
-    assert(scanLine.nonEmpty, s"no shard scan found in plan:\n${p.take(1200)}")
-    assert("PartitionFilters: \\[[^\\]]*shard".r.findFirstIn(scanLine).isDefined,
-      s"shard scan not partition-pruned: $scanLine")
   }
 
   test("prefix-filter jaccard: candidates via keyed equi-joins, no nested loop") {

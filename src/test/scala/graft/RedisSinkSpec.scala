@@ -231,6 +231,8 @@ class RedisSinkSpec extends AnyFunSuite {
           java.time.format.DateTimeFormatter.ofPattern("yyyy_MM_dd'T'HH_mm")))
         .view.mapValues(_.map(_.uid).toSet).toMap
       assert(srv.hlls.toMap === expectedHll)
+      // ...which the driver-side path folds in identically
+      assert(srv.hlls.toMap === mem.hlls.toMap)
       // no driver hop: the members arrived over SEVERAL partition-task
       // connections, not one driver-pipelined socket
       assert(srv.connectionsAccepted > 2,

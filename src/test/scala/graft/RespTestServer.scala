@@ -12,7 +12,9 @@ import scala.collection.concurrent.TrieMap
   * [[graft.store.RespClient]] on purpose: a shared codec would let a
   * symmetric encode/decode bug pass both sides — this way the spec
   * exercises the actual public wire format. Thread-per-connection;
-  * state in concurrent maps.
+  * state in concurrent maps. Like Redis, it sets TCP_NODELAY on every
+  * connection and writes the replies to a pipelined batch together:
+  * they are flushed once the input holds no further command.
   *
   * The HLL fake is an exact set per key (PFCOUNT = true cardinality):
   * the engine only relies on PFADD being a mergeable, idempotent
@@ -42,6 +44,7 @@ final class RespTestServer {
   private val acceptor = new Thread(() => {
     try while (!server.isClosed) {
       val sock = server.accept()
+      sock.setTcpNoDelay(true)
       connectionsAccepted += 1
       val t = new Thread(() => serve(sock))
       t.setDaemon(true); t.start()
@@ -144,7 +147,7 @@ final class RespTestServer {
       in.read() // \n
       sb.toString
     }
-    def reply(s: String): Unit = { out.write(s.getBytes(UTF_8)); out.flush() }
+    def reply(s: String): Unit = out.write(s.getBytes(UTF_8))
     // a MULTI in progress on THIS connection, or null
     var txn: scala.collection.mutable.ArrayBuffer[Seq[String]] = null
     try {
@@ -173,6 +176,7 @@ final class RespTestServer {
               // simulated server crash before commit: the queued
               // transaction evaporates with the connection
               txn = null
+              out.flush()
               sock.close()
               return
             } else {
@@ -185,6 +189,8 @@ final class RespTestServer {
             reply("+QUEUED\r\n")
           case _ => reply(applyCmd(args))
         }
+        // the batch's replies go out together once its last command is in
+        if (in.available() == 0) out.flush()
         l = line()
       }
     } catch {

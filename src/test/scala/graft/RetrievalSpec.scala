@@ -105,33 +105,6 @@ class RetrievalSpec extends AnyFunSuite {
     assert(rrf.exists(r => r._2 != r._4))
   }
 
-  test("bm25 indexed: identical output to one-shot; df aggregate rides the bucket clustering") {
-    import org.apache.spark.sql.functions._
-    val docs = Tables.documents(spark, TestSpark.Sf0001)
-    Retrieval.writeBm25Index(docs, "bm25_t", buckets = 8)
-    try {
-      val oneShot = Retrieval.bm25Search(docs)
-        .as[(String, Long, Long, Double)].collect().toSeq
-      val indexed = Retrieval.bm25SearchIndexed(spark, "bm25_t")
-        .as[(String, Long, Long, Double)].collect().toSeq
-      assert(oneShot === indexed)
-      // the term-keyed df aggregate over the postings table must not
-      // shuffle: the table is bucket-clustered on term at write time
-      val dfc = spark.table("bm25_t_postings")
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      assert(dfc.count() > 0)
-      val plan = dfc.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("SelectedBucketsCount"),
-        "postings scan not bucket-aware: " + plan.take(500))
-      assert(!plan.replace("BroadcastExchange", "BX").contains("Exchange"),
-        s"df aggregate shuffled a bucketed table:\n${plan.take(1200)}")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bm25_t_postings")
-      spark.sql("DROP TABLE IF EXISTS bm25_t_doclen")
-    }
-  }
-
   test("proximity search: min gap computed over ALL occurrence pairs, window excludes, rank by gap") {
     val d = Seq(
       (1L, "hash x x join"),                 // gap 3
@@ -148,22 +121,6 @@ class RetrievalSpec extends AnyFunSuite {
       ("p", 1L, 2L, 1L),
       ("p", 2L, 3L, 2L),
       ("p", 3L, 1L, 3L)))
-  }
-
-  test("ql dirichlet indexed: one bm25 index serves both rankers, identical output") {
-    val docs = Tables.documents(spark, TestSpark.Sf0001)
-    Retrieval.writeBm25Index(docs, "ql_t", buckets = 8)
-    try {
-      val oneShot = Retrieval.qlDirichletSearch(docs)
-        .as[(String, Long, Long, Double)].collect().toSeq
-      val indexed = Retrieval.qlDirichletSearchIndexed(spark, "ql_t")
-        .as[(String, Long, Long, Double)].collect().toSeq
-      assert(oneShot === indexed)
-      assert(oneShot.nonEmpty)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS ql_t_postings")
-      spark.sql("DROP TABLE IF EXISTS ql_t_doclen")
-    }
   }
 
   test("ql dirichlet: rare-term match outranks common-term match; tf and brevity help") {

@@ -1,41 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.TextAnalysis
 
 class SourcesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private val evSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType)))
-
-  test("csv round-trip with explicit schema preserves rows and types") {
-    val events = Tables.events(spark, TestSpark.Sf0001)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    events.write.mode("overwrite").option("header", "true").csv(dir)
-    val back = Tables.readCsv(spark, dir, evSchema)
-    assert(back.count() === events.count())
-    assert(back.schema === evSchema)
-    val s1 = events.agg(sum("user_id")).head().getLong(0)
-    val s2 = back.agg(sum("user_id")).head().getLong(0)
-    assert(s1 === s2)
-  }
-
-  test("json-lines round-trip with explicit schema preserves rows") {
-    val events = Tables.events(spark, TestSpark.Sf0001)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
-    events.write.mode("overwrite").json(dir)
-    val back = Tables.readJsonLines(spark, dir, evSchema)
-    assert(back.count() === events.count())
-  }
 
   test("orc round-trip preserves rows, schema, and values") {
     val events = Tables.events(spark, TestSpark.Sf0001)

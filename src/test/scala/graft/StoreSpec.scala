@@ -1,73 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.store.MetricsTables
-import graft.operators.{Metrics, Windows}
+import graft.operators.Metrics
 
-/** Materialized metrics store: write partitioned by family, read back
-  * with partition pruning, serve the dashboard shapes. */
+/** Exact distinct counts behind the `set_dthr` store family. */
 class StoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("store round-trip: families partition-pruned, values match direct aggregates") {
-    val ev = Tables.logEvents(spark, TestSpark.Sf0001)
-    val dir = java.nio.file.Files.createTempDirectory("graft_store").toString
-    MetricsTables.write(MetricsTables.materialize(ev), dir)
-    val store = MetricsTables.read(spark, dir)
-
-    // partition layout: one directory per metric family
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
-    assert(dirs.exists(_.startsWith("metric=visitCounter")))
-
-    // values match the direct aggregate
-    val direct = Metrics.visitsPerMinute(ev).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val fromStore = store.where(col("metric") === "visitCounter")
-      .select(col("window_minute"), col("value")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fromStore === direct)
-
-    // partition pruning reaches the scan
-    val plan = store.where(col("metric") === "visitCounter")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(metric"),
-      s"no partition filter in:\n$plan")
-
-    // Q1 shape over the store: spine + zero-fill
-    val spine = Windows.timeSpine(ev, col("timestamp"), 10)
-      .select(date_format(col("minute_start"), Windows.MinuteKeyFormat)
-        .as("minute_key"))
-    val series = MetricsTables.timeseries(store, "visitCounter", spine)
-      .collect()
-    assert(series.length === 10)
-  }
-
-  test("sketch-backed store: folding deltas is value-identical to a full rebuild") {
-    val ev = Tables.logEvents(spark, TestSpark.Sf0001)
-    val h1 = ev.where(pmod(xxhash64(col("uid")), lit(2)) === 0)
-    val h2 = ev.where(pmod(xxhash64(col("uid")), lit(2)) === 1)
-    def values(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("metric"), col("dim"), col("window_minute"), col("value"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
-      .toMap
-    // v1 snapshot from the first half, then fold the second half in —
-    // counters add (INCRBY), sketches union (PFMERGE, register-max ⇒
-    // estimate-identical to one-shot aggregation)
-    val folded = values(
-      MetricsTables.update(MetricsTables.materialize(h1), h2))
-    val full = values(MetricsTables.materialize(ev))
-    assert(folded === full)
-    // sketch families carry real HLL state; counters carry none
-    val bySketch = MetricsTables.materialize(ev)
-      .groupBy(col("metric"), col("sketch").isNull.as("noSketch"))
-      .count().collect().map(r => r.getString(0) -> r.getBoolean(1)).toSet
-    assert(bySketch.contains("visitCounter" -> true))
-    assert(bySketch.contains("users" -> false))
-  }
 
   test("salted exact distinct equals plain exact distinct") {
     val ev = Tables.logEvents(spark, TestSpark.Sf0001)

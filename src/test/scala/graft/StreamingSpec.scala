@@ -42,7 +42,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(store.scard("set_dthr_2026_08_12T10_15") === 2L)
       assert(store.scard("set_var_1") === 1L)
       assert(store.scard("set_var_2") === 3L)
-      assert(store.counter("hll_dthr_2026_08_12T10_15") === 2L)
+      assert(store.hllCount("hll_dthr_2026_08_12T10_15") === 2L)
 
       // Q4 read shape over the store: variant overlap via set intersection
       assert(store.overlap("set_var_") === Seq(("1", "2", 1L)))
@@ -69,6 +69,9 @@ class StreamingSpec extends AnyFunSuite {
       def sadd(key: String, members: Iterable[String]): Unit = {
         calls.add(("SADD", key, members.size.toLong)); ()
       }
+      override def pfadd(key: String, members: Iterable[String]): Unit = {
+        calls.add(("PFADD", key, members.size.toLong)); ()
+      }
     }
     val input = MemoryStream[LogEvent]
     val sink = new RecordingSink
@@ -86,24 +89,24 @@ class StreamingSpec extends AnyFunSuite {
       val saddKeys = byVerb("SADD").map(_._2).toSet
       assert(saddKeys === Set("set_dthr_2026_08_12T10_15",
         "set_var_1", "set_var_2", "set_experiments_2026_08_12T10_15"))
-      // the HLL rollup arrives as a materialized upsert
-      assert(byVerb("SET") === Seq(("SET", "hll_dthr_2026_08_12T10_15", 2L)))
+      // the HLL family's members arrive via PFADD; nothing is upserted
+      assert(byVerb("PFADD") === Seq(("PFADD", "hll_dthr_2026_08_12T10_15", 2L)))
+      assert(!byVerb.contains("SET"))
     } finally queries.foreach(_.stop())
   }
 
-  test("in-memory store: the fused fan-out query plus the stateful HLL query, " +
-    "one ledgered store write per micro-batch") {
+  test("in-memory store: one fan-out query, one ledgered store write per micro-batch") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    // records each ledgered write: the whole batch's INCRBYs and SADDs
-    // must arrive in ONE call, keyed by the fused query's name
+    // records each ledgered write: the whole batch's INCRBYs, SADDs and
+    // PFADDs must arrive in ONE call, keyed by the fused query's name
     class LedgerSink extends MetricsStore {
-      val onceCalls = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Int, Int)]
+      val onceCalls = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Int, Int, Int)]
       override def writeBatchOnce(queryId: String, batchId: Long,
           incrs: Seq[(String, Long)], puts: Seq[(String, Long)],
           sadds: Seq[(String, Iterable[String])],
           pfadds: Seq[(String, Iterable[String])]): Boolean = {
-        onceCalls.add((queryId, batchId, incrs.size, sadds.size))
+        onceCalls.add((queryId, batchId, incrs.size, sadds.size, pfadds.size))
         super.writeBatchOnce(queryId, batchId, incrs, puts, sadds, pfadds)
       }
     }
@@ -111,7 +114,7 @@ class StreamingSpec extends AnyFunSuite {
     val store = new LedgerSink
     val queries = StreamingMetrics.startPipeline(input.toDS(), store)
     try {
-      assert(queries.map(_.name) === Seq(StreamingMetrics.FanOutQuery, StreamingMetrics.HllQuery))
+      assert(queries.map(_.name) === Seq(StreamingMetrics.FanOutQuery))
       input.addData(
         ev("u1", "e1", "1", "2026-08-12 10:15:03"),
         ev("u2", "e1", "2", "2026-08-12 10:15:30"),
@@ -119,15 +122,17 @@ class StreamingSpec extends AnyFunSuite {
         ev("u3", null, "1", "2026-08-12 10:16:09"))
       queries.foreach(_.processAllAvailable())
       import scala.jdk.CollectionConverters._
-      // 2 minutes → 2 INCRBYs; SADD keys: 2 set_dthr + 2 set_var + 2 set_experiments
-      assert(store.onceCalls.asScala.toSeq === Seq((StreamingMetrics.FanOutQuery, 0L, 2, 6)))
+      // 2 minutes → 2 INCRBYs; SADD keys: 2 set_dthr + 2 set_var + 2
+      // set_experiments; PFADD keys: 2 hll_dthr
+      assert(store.onceCalls.asScala.toSeq === Seq((StreamingMetrics.FanOutQuery, 0L, 2, 6, 2)))
       assert(store.counter("visitCounter_2026_08_12T10_16") === 2L)
       // members from different partitions union into one set
       assert(store.sets("set_dthr_2026_08_12T10_16") === Set("u1", "u3"))
       assert(store.sets("set_var_1") === Set("u1", "u3"))
       // a null member has nothing to add: the key holds only real members
       assert(store.sets("set_experiments_2026_08_12T10_16") === Set("e2"))
-      assert(store.counter("hll_dthr_2026_08_12T10_16") === 2L)
+      assert(store.hllCount("hll_dthr_2026_08_12T10_15") === 2L)
+      assert(store.hllCount("hll_dthr_2026_08_12T10_16") === 2L)
     } finally queries.foreach(_.stop())
   }
 
@@ -143,24 +148,6 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("visits_counter"))
     assert(spark.streams.active.forall(_.name != StreamingMetrics.FanOutQuery))
-  }
-
-  test("watermarked variant (documented deviation) still folds in-window late data") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[LogEvent]
-    val store = new MetricsStore
-    val queries = StreamingMetrics.startPipeline(input.toDS(), store,
-      watermark = Some("10 minutes"))
-    try {
-      input.addData(ev("u1", "e1", "1", "2026-08-12 10:16:00"))
-      queries.foreach(_.processAllAvailable())
-      // late by 1 minute — inside the 10-minute watermark → accepted
-      input.addData(ev("u2", "e1", "1", "2026-08-12 10:15:00"))
-      queries.foreach(_.processAllAvailable())
-      assert(store.counter("visitCounter_2026_08_12T10_15") === 1L)
-      assert(store.counter("visitCounter_2026_08_12T10_16") === 1L)
-    } finally queries.foreach(_.stop())
   }
 
   test("streaming theta sketches serve exact overlap in the raw-hash regime") {
@@ -223,39 +210,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally queries.foreach(_.stop())
   }
 
-  test("streamed MLM examples equal the batch construction under any batch slicing") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val docsData = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta " * 4),
-      (2L, "one two three four five six seven eight nine ten " * 3),
-      (3L, "red orange yellow green blue indigo violet " * 5))
-      .map { case (id, t) => (id, t.trim) }
-    val input = MemoryStream[(Long, String)]
-    val q = graft.operators.Corpus
-      .mlmMaskingStream(input.toDS().toDF("doc_id", "text"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("mlm_stream_t").start()
-    try {
-      // slice the corpus across two micro-batches
-      input.addData(docsData(0))
-      q.processAllAvailable()
-      input.addData(docsData(1), docsData(2))
-      q.processAllAvailable()
-      val streamed = spark.table("mlm_stream_t")
-        .as[(Long, Long, Long, Long, Long, Long, String, String)]
-        .collect().toSet
-      val batch = graft.operators.Corpus
-        .mlmMasking(docsData.toDF("doc_id", "text"))
-        .as[(Long, Long, Long, Long, Long, Long, String, String)]
-        .collect().toSet
-      // content-hash determinism: examples are byte-identical however
-      // the stream was sliced
-      assert(streamed === batch)
-      assert(streamed.map(_._1) === Set(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
   test("streamed variant-lift moments equal the one-shot batch aggregate under any slicing") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -294,66 +248,6 @@ class StreamingSpec extends AnyFunSuite {
       // bit-identical to the one-shot aggregate, any slicing
       assert(streamed === batch)
       assert(streamed.map(t => (t._1, t._2)).size === 6)
-    } finally q.stop()
-  }
-
-  test("streamed SFT examples equal the batch construction under any batch slicing") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val docsData = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta " * 4),
-      (2L, "one two three four five six seven eight nine ten " * 3),
-      (3L, "red orange yellow green blue indigo violet " * 5))
-      .map { case (id, t) => (id, t.trim) }
-    val input = MemoryStream[(Long, String)]
-    val q = graft.operators.Corpus
-      .sftExamplesStream(input.toDS().toDF("doc_id", "text"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sft_stream_t").start()
-    try {
-      input.addData(docsData(0))
-      q.processAllAvailable()
-      input.addData(docsData(1), docsData(2))
-      q.processAllAvailable()
-      val streamed = spark.table("sft_stream_t")
-        .as[(Long, Long, Long, Long, String, String)].collect().toSet
-      val batch = graft.operators.Corpus
-        .sftExamples(docsData.toDF("doc_id", "text"))
-        .as[(Long, Long, Long, Long, String, String)].collect().toSet
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
-      // mask arithmetic: template adds exactly 2 untrained tokens
-      streamed.foreach { case (_, np, nc, nt, _, _) =>
-        assert(nt === np + nc + 2)
-      }
-    } finally q.stop()
-  }
-
-  test("streamed contrastive views equal the batch construction under any batch slicing") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val docsData = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta " * 4),
-      (2L, "one two three four five six seven eight nine ten " * 3),
-      (3L, "red orange yellow green blue indigo violet " * 5))
-      .map { case (id, t) => (id, t.trim) }
-    val input = MemoryStream[(Long, String)]
-    val q = graft.operators.Corpus
-      .contrastiveViewsStream(input.toDS().toDF("doc_id", "text"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cv_stream_t").start()
-    try {
-      input.addData(docsData(0))
-      q.processAllAvailable()
-      input.addData(docsData(1), docsData(2))
-      q.processAllAvailable()
-      val streamed = spark.table("cv_stream_t")
-        .as[(Long, Long, Long, Long, Long, String, String)].collect().toSet
-      val batch = graft.operators.Corpus
-        .contrastiveViews(docsData.toDF("doc_id", "text"))
-        .as[(Long, Long, Long, Long, Long, String, String)].collect().toSet
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
     } finally q.stop()
   }
 
@@ -1230,13 +1124,9 @@ class StreamingSpec extends AnyFunSuite {
   test("soak: O(100) micro-batches through the checkpointed 5-branch fan-out " +
     "with an abrupt mid-run kill/restart — store ≡ batch twin") {
     import spark.implicits._
-    // file source, not MemoryStream: on the in-memory store the fan-out
-    // is TWO independently checkpointed queries over one source (the
-    // fused stateless query and the update-mode HLL aggregate), and
-    // MemoryStream keeps a single global commit pointer (restarting
-    // queries at diverged offsets trips its out-of-order commit check)
-    // — a real source (files, Kafka, Pub/Sub) has per-consumer progress,
-    // which is exactly what each query's checkpoint records
+    // file source, not MemoryStream: a real source (files, Kafka,
+    // Pub/Sub) has per-consumer progress, which is exactly what the
+    // query's checkpoint records and the restart resumes from
     val srcDir = java.nio.file.Files.createTempDirectory("graft_soak_src")
     val root = java.nio.file.Files.createTempDirectory("graft_soak_ck").toString
     val store = new MetricsStore
@@ -1255,7 +1145,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     def fileEvents = {
       // maxFilesPerTrigger=1 pins one file per micro-batch, so 50
-      // slices drive ~50 batches PER query (~100 across the fan-out)
+      // slices drive ~50 micro-batches
       val raw = spark.readStream.option("maxFilesPerTrigger", 1)
         .text(srcDir.toString)
       graft.sources.Tables.parseJsonEvents(raw)
@@ -1266,35 +1156,30 @@ class StreamingSpec extends AnyFunSuite {
       checkpointRoot = Some(root))
     val nSlices = 50
     var queries = start()
-    // measured bounded-state evidence (SCALE.md §9): snapshot every
-    // stateful operator's store size at fixed points in the run —
-    // the only in-memory-store stateful branch is the update-mode HLL
-    // aggregate, whose state rows must track the MINUTE-KEY DOMAIN,
-    // never the number of events or micro-batches
-    val stateSnaps =
-      scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long)]()
-    def snapState(slice: Int): Unit = queries.foreach { q =>
-      Option(q.lastProgress).foreach(_.stateOperators.foreach { so =>
-        stateSnaps += ((slice, q.name, so.numRowsTotal, so.memoryUsedBytes))
-      })
-    }
+    // bounded state, measured: the stateful operators of every
+    // micro-batch of the run — the pipeline must have none, so its
+    // state cannot grow with the stream
+    val stateOps = scala.collection.mutable.ArrayBuffer[Int]()
+    def snapState(): Unit = queries.foreach(_.recentProgress.foreach { p =>
+      stateOps += p.stateOperators.length
+    })
     try {
       (0 until 20).foreach { b =>
         writeSlice(b); queries.foreach(_.processAllAvailable())
-        if (b == 9 || b == 19) snapState(b + 1)
       }
+      snapState()
       // abrupt kill: slices 20-24 land but are NOT drained before
       // stop — whatever batch was in flight is redelivered on restart,
-      // and the ledger (INCRBY) / idempotence (SADD, upsert) must
+      // and the ledger (INCRBY) / idempotence (SADD, PFADD) must
       // absorb it without double-counting
       (20 until 25).foreach(writeSlice)
       queries.foreach(_.stop())
       queries = start()
       (25 until nSlices).foreach { b =>
         writeSlice(b); queries.foreach(_.processAllAvailable())
-        if (b == 34 || b == nSlices - 1) snapState(b + 1)
       }
       queries.foreach(_.processAllAvailable())
+      snapState()
     } finally queries.foreach(q => if (q.isActive) q.stop())
     // batch twin over the same 250 events
     case class E(uid: String, exp: String, variant: String, minute: String)
@@ -1308,32 +1193,16 @@ class StreamingSpec extends AnyFunSuite {
         evs.map(_.uid).distinct.size.toLong, s"unique users at $mk")
       assert(store.scard(s"set_experiments_$mk") ===
         evs.map(_.exp).distinct.size.toLong, s"experiments at $mk")
-      // the update-mode approx branch recovered its HLL state across
-      // the kill: estimate within the sketch's error of the exact count
-      val exact = evs.map(_.uid).distinct.size.toDouble
-      val est = store.counter(s"hll_dthr_$mk").toDouble
-      assert(est > exact * 0.8 && est < exact * 1.2,
-        s"HLL estimate $est vs exact $exact at $mk")
+      // PFADD members fold idempotently across the kill; the in-memory
+      // fake counts exactly
+      assert(store.hllCount(s"hll_dthr_$mk") ===
+        evs.map(_.uid).distinct.size.toLong, s"HLL count at $mk")
     }
     all.groupBy(_.variant).foreach { case (v, evs) =>
       assert(store.scard(s"set_var_$v") ===
         evs.map(_.uid).distinct.size.toLong, s"variant $v uniques")
     }
-    // bounded state, measured: print the snapshots for the record
-    // (SCALE.md §9 quotes a run) and pin the claim — final state rows
-    // equal the minute-key domain, so 5x more batches of the same
-    // minutes would add ZERO state rows
-    stateSnaps.foreach { case (s, qn, rows, bytes) =>
-      info(f"SOAK-STATE slice=$s%2d query=$qn rows=$rows bytes=$bytes")
-    }
-    val hll = stateSnaps.filter(_._2 == "hll_users_minute")
-    assert(hll.nonEmpty, "no state snapshots captured for the HLL branch")
-    val minutesSeen = all.map(_.minute).distinct.size.toLong
-    assert(hll.last._3 === minutesSeen,
-      s"HLL state rows ${hll.last._3} != minute domain $minutesSeen — " +
-        "state grew with the stream, not the key domain")
-    // and the in-flight store footprint stays tiny in absolute terms
-    assert(hll.map(_._4).max < (1L << 20),
-      s"HLL state ${hll.map(_._4).max} bytes — over 1 MiB for 13 minutes")
+    assert(stateOps.nonEmpty && stateOps.forall(_ == 0),
+      s"stateful operators per micro-batch: ${stateOps.distinct}")
   }
 }
