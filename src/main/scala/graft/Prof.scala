@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -13,13 +14,19 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   *   sbt "runMain graft.Prof <query> [reps]"
   *
   * Per rep it prints: wall seconds, the DataFrame construction share
-  * of them, and scheduler-side totals from a listener (jobs, stages,
+  * of them, the per-query fixed costs (generated classes compiled,
+  * i.e. code-cache misses, and the jobs run while constructing the
+  * frame), and scheduler-side totals from a listener (jobs, stages,
   * tasks, summed task time, summed shuffle fetch-wait + write time,
   * summed JVM GC time, shuffle bytes); the last rep adds the top
   * stages by task time. Driver-side cost ≈ wall − (task time / cores). */
 object Prof {
+  /** Local property that marks the jobs a query's construction runs. */
+  private val Phase = "graft.prof.phase"
+
   private class Totals extends SparkListener {
     val jobs = new AtomicInteger(0)
+    val buildJobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     val taskMs = new AtomicLong(0L)
@@ -31,8 +38,11 @@ object Prof {
     // per-stage task-time totals (stageId -> (ms, name))
     val perStage =
       new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    override def onJobStart(j: SparkListenerJobStart): Unit =
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
+      if (j.properties != null && j.properties.getProperty(Phase) == "build")
+        buildJobs.incrementAndGet()
+    }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       stages.incrementAndGet()
       val id = s.stageInfo.stageId
@@ -60,7 +70,7 @@ object Prof {
           (a, b) => (a._1 + b._1, if (a._2.nonEmpty) a._2 else b._2))
       }
     }
-    def reset(): Unit = { Seq(jobs, stages, tasks).foreach(_.set(0)); () }
+    def reset(): Unit = { Seq(jobs, buildJobs, stages, tasks).foreach(_.set(0)); () }
     def resetL(): Unit = {
       Seq(taskMs, fetchWaitMs, shuffleWriteMs, gcMs,
         shuffleReadB, shuffleWriteB).foreach(_.set(0L))
@@ -95,11 +105,15 @@ object Prof {
     spark.sparkContext.addSparkListener(tot)
     for (r <- 1 to reps) {
       tot.reset(); tot.resetL()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
+      spark.sparkContext.setLocalProperty(Phase, "build")
+      val df = try fn(spark, sfDir)
+        finally spark.sparkContext.setLocalProperty(Phase, null)
       val tBuild = System.nanoTime()
       df.count()
       val t1 = System.nanoTime()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       spark.catalog.clearCache()
       // listener events drain asynchronously: poll until the task
       // count stops moving (a fixed 300 ms undercounted per-rep totals
@@ -114,6 +128,7 @@ object Prof {
       val cores = cpus.toInt
       val taskS = tot.taskMs.get() / 1e3
       println(f"PROF $name rep=$r wall=$wall%.3f build=$build%.3f " +
+        f"compiles=$compiles buildJobs=${tot.buildJobs.get()} " +
         f"jobs=${tot.jobs.get()} stages=${tot.stages.get()} tasks=${tot.tasks.get()} " +
         f"taskTime=${taskS}%.2fs (/${cores} cores = ${taskS / cores}%.3fs) " +
         f"gc=${tot.gcMs.get() / 1e3}%.2fs fetchWait=${tot.fetchWaitMs.get() / 1e3}%.2fs " +

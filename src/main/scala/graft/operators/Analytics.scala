@@ -213,9 +213,10 @@ object Analytics {
     * k−1's window: lazily each construction job would re-execute every
     * predecessor window, measured QUADRATIC blowup on dpo_pairs
     * 5.1 → 9.9 s before the flag; the checkpoint materializes each
-    * link once) and for upstreams too expensive to re-derive. */
+    * link once) and for upstreams too expensive to re-derive. The mode
+    * has no default: every caller states which trade it takes. */
   def rankByRange(df: DataFrame, sortCols: Seq[String],
-      partitions: Int = 32, eager: Boolean = false): (DataFrame, Long) = {
+      partitions: Int = 32, eager: Boolean): (DataFrame, Long) = {
     if (eager || !df.queryExecution.analyzed.deterministic)
       return rankByRangeCheckpointed(df, sortCols, partitions)
     val cols = sortCols.map(col)

@@ -1607,7 +1607,8 @@ object Corpus {
       .where(size(col("lines")) >= 1)
       .select(col("doc_id").as("tgt_doc"),
         element_at(col("lines"), 1).as("b_rand"))
-    val (firstRanked, nFirst) = Analytics.rankByRange(first, Seq("tgt_doc"))
+    val (firstRanked, nFirst) = Analytics.rankByRange(first, Seq("tgt_doc"),
+      eager = false)
     val firstIdx = firstRanked.select(col("tgt_doc"), col("b_rand"),
       (col("__rank") - 1L).as("idx"))
     val pairs = withLines

@@ -365,7 +365,8 @@ object Dedup {
     // strictly monotone map of (df, tok), so sorted-id arrays, prefix
     // slices, candidate pairs and intersection SIZES are identical to
     // the string formulation — the output bytes cannot move.
-    val (vocabIds, _) = Analytics.rankByRange(dfs, Seq("df", "tok"))
+    val (vocabIds, _) = Analytics.rankByRange(dfs, Seq("df", "tok"),
+      eager = false)
     val ranked = toks
       .join(vocabIds.select(col("tok"), col("__rank").as("tid")), Seq("tok"))
       .groupBy(col("doc_id"))

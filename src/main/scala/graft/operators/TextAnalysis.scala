@@ -1569,7 +1569,8 @@ object TextAnalysis {
     // rank-identical (total sort) and range-parallel.
     val (ranked, _) = Analytics.rankByRange(
       Analytics.pagerankExact(edges, iters)
-        .withColumn("__negpr", -col("pr_i")), Seq("__negpr", "node"))
+        .withColumn("__negpr", -col("pr_i")), Seq("__negpr", "node"),
+      eager = false)
     ranked
       .select(col("node").as("word"), col("__rank").as("pr_rank"),
         (col("pr_i").cast("double") / lit(Analytics.PrScale.toDouble))
@@ -1653,7 +1654,7 @@ object TextAnalysis {
       .withColumn("__negf", -col("freq"))
       .orderBy(col("__negf"), col("word")).limit(topN)
     val (rankedR, _) = Analytics.rankByRange(top, Seq("__negf", "word"),
-      partitions = 4)
+      partitions = 4, eager = false)
     val ranked = rankedR
       .select(
         expr(

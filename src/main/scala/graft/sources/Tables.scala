@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.Path
 import graft.LogEvent
 
 /** Batch sources: the driver-generated parquet tables plus the
@@ -14,7 +16,56 @@ import graft.LogEvent
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    readParquet(spark, s"$sfDir/$name.parquet")
+
+  /** The session confs that parquet schema inference reads
+    * (`ParquetToSparkSchemaConverter`): two reads of the same files
+    * infer the same schema only under the same values of these. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** (path, inference conf values) → (listing signature, schema). A
+    * rewrite of the path replaces its entry, so the memo holds one
+    * schema per path and conf setting. */
+  private val inferred = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[String]), (Seq[(String, Long, Long)], StructType)]()
+
+  /** `spark.read.parquet(path)` that infers the schema once per listing.
+    * Inference is a Spark job (70–95 ms on the catalog tables, against
+    * ~10 ms for a read that is given its schema), paid on every read of
+    * every query otherwise. The memo is keyed on the path, the session's
+    * inference confs and the listing signature (every file's name,
+    * length and modification time), so a rewritten file is inferred
+    * again. A hit reads with the memoized schema; `DataSource` makes
+    * both schemas nullable, so the relation is the one inference would
+    * give. A path that cannot be listed reads as before, which raises
+    * the same error. */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val signature = try {
+      val p = new Path(path)
+      val it = p.getFileSystem(spark.sessionState.newHadoopConf())
+        .listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: java.io.IOException => None }
+    signature.fold(spark.read.parquet(path)) { sig =>
+      val key = (path, InferenceConfs.map(c => spark.conf.getOption(c).orNull))
+      Option(inferred.get(key)).filter(_._1 == sig) match {
+        case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          inferred.put(key, (sig, df.schema))
+          df
+      }
+    }
+  }
 
   /** The events table stores `ts` as parquet TIMESTAMP(NANOS), which
     * Spark's vectorized reader rejects outright. Read it as a raw
@@ -59,9 +110,9 @@ object Tables {
     * JSON extraction — the driver's events table is one small parquet
     * file (one input split), so without it the per-row JSON work runs
     * on a single task. The repartition is CONDITIONED on the scan
-    * actually arriving under-split (fewer partitions than half the
-    * core count): on a real cluster the scan arrives pre-split and the
-    * fan-out self-disables instead of shuffling the whole table.
+    * actually arriving under-split ([[underSplit]]): on a real cluster
+    * the scan arrives pre-split and the fan-out self-disables instead
+    * of shuffling the whole table.
     */
   def logEvents(spark: SparkSession, sfDir: String,
       fanOut: Boolean = false): DataFrame = {
@@ -76,13 +127,20 @@ object Tables {
   }
 
   /** True when `df`'s planned scan arrives on fewer partitions than
-    * half the cores — the fan-out predicate of [[logEvents]] and
-    * `SparkEntry.par`: repartitioning pays only for under-split local
-    * fixtures, never for a pre-split cluster scan. `.rdd` plans the
-    * frame (file listing) but runs no job. */
+    * half the cores (at least 2) — the fan-out predicate of
+    * [[logEvents]] and `SparkEntry.par`: repartitioning pays only for
+    * under-split local fixtures, never for a pre-split cluster scan.
+    * `.rdd` runs no job (a read's schema-inference job, if any, ran
+    * when the frame was read), but it plans the frame and compiles its
+    * whole-stage code on the driver (37–44 ms per call on the catalog
+    * tables), so it is asked only when the answer can matter: on one
+    * core nothing fans out. */
   private[graft] def underSplit(df: DataFrame): Boolean =
-    df.rdd.getNumPartitions <
-      df.sparkSession.sparkContext.defaultParallelism / 2
+    underSplit(df.sparkSession.sparkContext.defaultParallelism,
+      df.rdd.getNumPartitions)
+
+  private[graft] def underSplit(cores: Int, splits: => Int): Boolean =
+    cores >= 2 && splits < math.max(2, cores / 2)
 
   /** P1 — parse a raw JSON click-stream (`Dataset[String]`-shaped
     * DataFrame with a `value` column) into typed LogEvent rows,

@@ -154,7 +154,8 @@ class AnalyticsSpec extends AnyFunSuite {
     val expect = df.withColumn("__rank",
         row_number().over(Window.orderBy("grp", "sub", "id")).cast("long"))
       .select("id", "__rank").as[(Long, Long)].collect().toMap
-    val (lazyR, nLazy) = Analytics.rankByRange(df, sortCols, partitions = 8)
+    val (lazyR, nLazy) =
+      Analytics.rankByRange(df, sortCols, partitions = 8, eager = false)
     assert(nLazy === 500L)
     assert(lazyR.select("id", "__rank").as[(Long, Long)].collect().toMap
       === expect)
@@ -172,7 +173,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val withNulls = Seq((Some(2L), 1L), (None, 2L), (Some(1L), 3L))
       .toDF("v", "id")
     val (nr, nn) = Analytics.rankByRange(withNulls, Seq("v", "id"),
-      partitions = 4)
+      partitions = 4, eager = false)
     assert(nn === 3L)
     assert(nr.select("id", "__rank").as[(Long, Long)].collect().toMap
       === Map(2L -> 1L, 3L -> 2L, 1L -> 3L))
@@ -182,7 +183,8 @@ class AnalyticsSpec extends AnyFunSuite {
     // rand() after a shuffle may draw different values each time the
     // lazy rank re-derives df; the guard materializes df once instead
     val df = spark.range(0, 400).repartition(6).withColumn("r", rand())
-    val (ranked, total) = Analytics.rankByRange(df, Seq("r", "id"), partitions = 8)
+    val (ranked, total) =
+      Analytics.rankByRange(df, Seq("r", "id"), partitions = 8, eager = false)
     assert(ranked.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
       "a non-deterministic frame must take the checkpointed path")
     val got = ranked.select("id", "__rank").as[(Long, Long)].collect()

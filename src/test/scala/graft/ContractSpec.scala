@@ -124,6 +124,42 @@ class ContractSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("repeated catalog queries compile their generated code once") {
+    // the ten dashboard-shaped queries perfbench's `catalog` workload
+    // asks round-robin; their ~200 generated classes overflow Spark's
+    // default 100-entry code cache, so at the default every pass
+    // recompiled ~150 of them, pass after pass
+    val catalog = Seq("parse_events_json", "visits_per_minute",
+      "unique_users_per_minute", "variant_overlap", "visits_timeseries",
+      "pricing_summary", "revenue_by_nation", "order_fill_by_priority",
+      "user_sessions", "dedup_minhash_lsh")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
+    val compiles =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def pass(): Long = {
+      val before = compiles.getCount
+      catalog.foreach { q =>
+        SparkEntry.queries(q)(spark, TestSpark.Sf0001)
+          .write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
+      }
+      compiles.getCount - before
+    }
+    // A rebuilt query can still emit a class not seen before: the
+    // optimizer orders some rewrites (distinct-aggregate groups, for
+    // one) by fresh expression ids, so a few stages come in 2+ code
+    // variants, each compiled once. At sf0.001 on 4 cores later passes
+    // compiled 0–8 classes and the 4th was always 0 (4 runs of 10
+    // passes). A quiet pass within 8 is what a cache that holds the
+    // working set gives.
+    val perPass = scala.collection.mutable.ArrayBuffer(pass())
+    while (perPass.length < 8 && (perPass.length < 2 || perPass.last > 0))
+      perPass += pass()
+    assert(compiles.getCount > 0, "the compile counter never moved")
+    assert(perPass.last === 0L,
+      s"compiles per pass $perPass: no pass ran without compiling")
+  }
+
   test("driver-contract lint: oracle keys resolve, names are driver-safe") {
     // every oracle entry must name an implemented query (an orphan
     // oracle silently becomes a missing-dump row in the driver compare)

@@ -41,13 +41,90 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("underSplit: true only when the scan has fewer splits than half the cores") {
-    import spark.implicits._
     val p = spark.sparkContext.defaultParallelism
-    // a single-partition frame is under-split whenever p >= 4
+    // a single-partition frame is under-split whenever p >= 2
     val one = spark.range(100).toDF("id").coalesce(1)
-    assert(graft.sources.Tables.underSplit(one) === (1 < p / 2))
+    assert(Tables.underSplit(one) === (p >= 2))
     // a frame already spread to all cores must NOT trigger the fan-out
     val wide = spark.range(1000).toDF("id").repartition(p)
-    assert(!graft.sources.Tables.underSplit(wide))
+    assert(!Tables.underSplit(wide))
+    // small boxes: 2 and 3 cores fan a single split out, 1 core never
+    // does and never plans the frame to find out
+    assert(Tables.underSplit(2, 1) && Tables.underSplit(3, 1))
+    assert(!Tables.underSplit(2, 2) && !Tables.underSplit(3, 2))
+    assert(!Tables.underSplit(1, sys.error("planned the scan on one core")))
+    // wider boxes keep the half-the-cores threshold
+    assert(Tables.underSplit(4, 1) && !Tables.underSplit(4, 2))
+    assert(Tables.underSplit(32, 15) && !Tables.underSplit(32, 16))
+  }
+
+  /** Spark jobs started on this thread while `body` runs, counted by a
+    * listener; a sentinel job marks the end, since the listener bus
+    * delivers events in order. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"probe-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("graft.probe")))
+          .foreach(t => seen.merge(t, 1, (a: Integer, b: Integer) => a + b))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.probe", tag)
+      val out = body
+      sc.setLocalProperty("graft.probe", tag + "-end")
+      spark.range(1).count()
+      val until = System.nanoTime() + 30000000000L
+      while (!seen.containsKey(tag + "-end") && System.nanoTime() < until)
+        Thread.sleep(10)
+      assert(seen.containsKey(tag + "-end"), "listener bus did not drain")
+      (out, Option(seen.get(tag)).fold(0)(_.intValue))
+    } finally {
+      sc.setLocalProperty("graft.probe", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Tables.table infers a path's schema once: a second read runs no Spark job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_infer").toString
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val (first, firstJobs) = jobsDuring(Tables.table(spark, dir, "t"))
+    assert(firstJobs >= 1, "the first read infers the schema with a job")
+    val (second, secondJobs) = jobsDuring(Tables.table(spark, dir, "t"))
+    assert(secondJobs === 0)
+    assert(second.schema === first.schema)
+    assert(second.collect().toSeq === first.collect().toSeq)
+    // the same path rewritten with another schema is inferred again
+    Seq((3, 1.5, true)).toDF("x", "y", "z")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val (rewritten, rewrittenJobs) = jobsDuring(Tables.table(spark, dir, "t"))
+    assert(rewrittenJobs >= 1)
+    assert(rewritten.schema.fieldNames.toSeq === Seq("x", "y", "z"))
+    assert(rewritten.as[(Int, Double, Boolean)].collect().toSeq ===
+      Seq((3, 1.5, true)))
+  }
+
+  test("Tables.events keeps its microsecond ts on a memoized read") {
+    // reference: the raw column read without the memo and turned into
+    // epoch microseconds on the driver — nanos as a long (floored), or
+    // a naive timestamp read as UTC, whichever this Spark infers
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val want = spark.read.parquet(s"${TestSpark.Sf0001}/events.parquet")
+      .select(col("event_id"), col("ts")).collect()
+      .map(r => r.getLong(0) -> (r.get(1) match {
+        case ns: java.lang.Long => Math.floorDiv(ns.longValue, 1000L)
+        case t: java.time.LocalDateTime =>
+          val i = t.toInstant(java.time.ZoneOffset.UTC)
+          i.getEpochSecond * 1000000L + i.getNano / 1000
+      })).toMap
+    for (_ <- 1 to 2) {
+      val got = Tables.events(spark, TestSpark.Sf0001)
+        .select(col("event_id"), unix_micros(col("ts")))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === want)
+    }
   }
 }
