@@ -1338,10 +1338,7 @@ object Analytics {
     * Past that, coarsen the grain (hour keys divide n_min by 60) or
     * narrow the monitored time range; under ANSI mode an overflow
     * errors rather than wrapping, and DuckDB's silent HUGEINT widening
-    * would otherwise break the hash-exact twin contract. The streaming
-    * monitor ([[graft.streaming.StreamingMetrics.startVisitsCusum]])
-    * has no such bound — its state folds one minute at a time against
-    * a fixed target, never a whole-series prefix. */
+    * would otherwise break the hash-exact twin contract. */
   def visitsCusum(events: DataFrame, alarmMult: Int = 4): DataFrame = {
     val perMin = events
       .groupBy(date_format(date_trunc("minute", col("ts")),
@@ -1461,7 +1458,7 @@ object Analytics {
     * `(experiment_id, variant, n, s1, s2)` (decimal moment sums) to
     * per-arm mean/lift/Welch-t vs the experiment's control arm. Split
     * out so a stream of [[liftArms]] replays the IDENTICAL scalar chain
-    * per micro-batch ([[graft.streaming.StreamingMetrics.startReadout]]):
+    * per micro-batch (`StreamingSpec.startReadout`):
     * decimal sums are algebraic, so the streamed readout after any
     * batch slicing is bit-equal to the batch face over the same events
     * (asserted in `StreamingSpec`). Input is arm-table-sized
@@ -1541,8 +1538,7 @@ object Analytics {
       .orderBy("experiment_id", "variant")
 
   /** [[variantConversion]]'s grain: per-(experiment, variant) count and
-    * conversions `(n, conv)`, conversion = value > `threshold`. The
-    * keyed SPRT monitor reads the same grain ([[sprtFromArms]]). */
+    * conversions `(n, conv)`, conversion = value > `threshold`. */
   private[graft] def conversionArms(events: DataFrame,
       threshold: Double = 100.0): DataFrame =
     armEvents(events)
@@ -1616,7 +1612,7 @@ object Analytics {
     * the whole trajectory is hash-exact. Split into [[sprtMinutes]]
     * (the grain, counts only) and [[sprtFromMinutes]] (the readout), so
     * a stream of the grain replays the identical trajectory per
-    * micro-batch ([[graft.streaming.StreamingMetrics.startReadout]]).
+    * micro-batch (`StreamingSpec.startReadout`).
     *
     * Output per minute: (minute_key, n, conv, n_cum, conv_cum, llr,
     * decision ∈ {accept_h1, accept_h0, continue}). */
@@ -1650,19 +1646,6 @@ object Analytics {
         expr(sprtDecisionExpr(alpha, beta)).as("decision"))
       .orderBy("minute_key")
   }
-
-  /** One Wald monitor per (experiment, variant) arm over
-    * [[conversionArms]]: each arm's totals through the same LLR and
-    * decision chains as [[sprtConversion]]. Output: (experiment_id,
-    * variant, n_cum, conv_cum, llr, decision). */
-  private[graft] def sprtFromArms(arms: DataFrame, p0: Double = 0.10,
-      p1: Double = 0.15, alpha: Double = 0.05,
-      beta: Double = 0.05): DataFrame =
-    arms
-      .select(col("experiment_id"), col("variant"), col("n").as("n_cum"),
-        col("conv").as("conv_cum"))
-      .withColumn("llr", expr(sprtLlrExpr(p0, p1)))
-      .withColumn("decision", expr(sprtDecisionExpr(alpha, beta)))
 
   // the LLR and decision chains, shared verbatim with the oracle and
   // the streaming face; the ln factors quantize to engine-agreeing
@@ -2131,7 +2114,7 @@ object Analytics {
     * table `(experiment_id, variant, n, s1, s2, conv)` to the
     * BH-adjusted battery. Split out (the [[liftFromArms]] pattern) so
     * a stream of [[batteryArms]] replays the IDENTICAL chain
-    * ([[graft.streaming.StreamingMetrics.startReadout]]): the arm sums
+    * (`StreamingSpec.startReadout`): the arm sums
     * are algebraic, so the streamed battery after any micro-batch
     * slicing is bit-equal to the batch face over the same events
     * (asserted in `StreamingSpec`). */
@@ -2484,7 +2467,7 @@ object Analytics {
     * to the (test, experiment_id, variant, stat, p_value) rows. Split
     * out (the [[fdrFromArms]] pattern) so a stream of [[rankGrain]]
     * replays the IDENTICAL chain
-    * ([[graft.streaming.StreamingMetrics.startReadout]]): the counts
+    * (`StreamingSpec.startReadout`): the counts
     * are algebraic, so the streamed battery after any micro-batch
     * slicing is bit-equal to the batch face over the same events. */
   private[graft] def mwuBatteryFromGrain(grain: DataFrame): DataFrame = {
@@ -2638,7 +2621,7 @@ object Analytics {
     * grain `(experiment_id, user_id, variant, pre, n, s)` to the
     * adjusted-mean readout. Split out (the [[mwuFromGrain]] pattern)
     * so a stream of [[cupedUnits]] replays the IDENTICAL chain
-    * ([[graft.streaming.StreamingMetrics.startReadout]]): n and the
+    * (`StreamingSpec.startReadout`): n and the
     * raw-DECIMAL s are algebraic, so the streamed readout after any
     * micro-batch slicing is bit-equal to a batch run at the same
     * period split. A stream declares its split up front — a
@@ -2841,7 +2824,7 @@ object Analytics {
     * tie-group grain `(experiment_id, value, variant, cnt)` to the
     * per-experiment H′ readout. Split out (the [[mwuFromGrain]]
     * pattern) so a stream of [[rankGrain]] replays the IDENTICAL chain
-    * ([[graft.streaming.StreamingMetrics.startReadout]]): the counts
+    * (`StreamingSpec.startReadout`): the counts
     * are algebraic, so the streamed readout after any micro-batch
     * slicing is bit-equal to the batch face over the same events. */
   private[graft] def kruskalFromGrain(grain: DataFrame): DataFrame = {

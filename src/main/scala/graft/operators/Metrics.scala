@@ -332,10 +332,8 @@ object Metrics {
 
   /** Sessionization via Spark's native `session_window` operator — the
     * same semantics as [[userSessions]] (and the same oracle), but
-    * expressed as a session-window aggregate, which also runs
-    * incrementally on a stream with a watermark (see
-    * [[graft.streaming.StreamingMetrics.startSessionization]], which
-    * keeps its own fold over the stream's `uid`/`timestamp` columns).
+    * expressed as a session-window aggregate, which would also run
+    * incrementally on a watermarked stream.
     *
     * Boundary alignment with the lag formulation: [[userSessions]]
     * splits when `floor(epoch(b)) - floor(epoch(a)) > gap`. Events are

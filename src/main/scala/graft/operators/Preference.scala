@@ -271,7 +271,7 @@ object Preference {
     * [[winrateBootstrapCi]]. Decimal sums are exact and associative, so
     * a streaming complete-mode aggregate over any slicing of the events
     * equals this batch grain bit-for-bit, and
-    * [[graft.streaming.StreamingMetrics.startReadout]] over it with
+    * `StreamingSpec.startReadout` over it with
     * [[winrateComps]] then [[winrateFromComps]] reproduces the batch
     * face (the mwu/kruskal grain convention, at the judge grain). */
   private[graft] def winrateUt(events: DataFrame): DataFrame = events

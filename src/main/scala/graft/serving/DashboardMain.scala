@@ -17,14 +17,12 @@ import graft.streaming.{MetricsStore, StreamingMetrics}
   * micro-batches; while it runs, the five endpoints are live, e.g.
   * `curl localhost:<port>/metrics/timeseries/visits?lastMinutes=3`.
   *
-  * The pipeline is one streaming query on either store. With a third
-  * `host:port` argument the in-memory store is swapped for a live
-  * Redis(-compatible) server: the pipeline writes it worker-side over
-  * RESP and the dashboard reads it back — the reference deployment,
-  * verbatim (the variantsOverlapApprox panel then serves empty: theta
-  * sketches are engine-held state). In-memory, the driver merges the
-  * writes, and a second query keeps the theta sketches that panel
-  * serves.
+  * The pipeline is one streaming query, [[StreamingMetrics.startPipeline]],
+  * on either store. With a third `host:port` argument the in-memory
+  * store is swapped for a live Redis(-compatible) server: the pipeline
+  * writes it worker-side over RESP and the dashboard reads it back —
+  * the reference deployment, verbatim. In-memory, the driver merges the
+  * writes.
   */
 object DashboardMain {
   def main(args: Array[String]): Unit = {
@@ -53,13 +51,7 @@ object DashboardMain {
     val memStore = new MetricsStore
     val sink: graft.streaming.KeyValueMetricsSink = redis.getOrElse(memStore)
     val reader: graft.streaming.MetricsReader = redis.getOrElse(memStore)
-    // the reference fan-out + (in-memory mode) the theta-sketch overlap
-    // twin, so the page's variantsOverlapApprox panel is live
-    val queries = StreamingMetrics.startPipeline(events, sink) ++
-      (if (redis.isEmpty)
-        Seq(StreamingMetrics.startVariantSketches(events, memStore,
-          "theta_variants"))
-      else Nil)
+    val queries = StreamingMetrics.startPipeline(events, sink)
     val server = new DashboardServer(reader, port).start()
     println(s"dashboard listening on http://localhost:${server.boundPort}" +
       "/metrics/timeseries/{visits,users,experiments,variantsOverlap,times}")

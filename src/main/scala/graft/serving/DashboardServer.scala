@@ -79,9 +79,16 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
     try os.write(bytes) finally os.close()
   }
 
+  private def notFound(ex: HttpExchange): Unit =
+    respond(ex, s"""{"error":"no such path: ${ex.getRequestURI.getPath}"}""", 404)
+
+  /** A context matches every path it is a string prefix of, so a handler
+    * answers only its exact path: `/variantsOverlapX` is a 404, not an
+    * overlap read. */
   private def route(path: String)(handler: HttpExchange => String): Unit =
     server.createContext(path, (ex: HttpExchange) =>
-      try respond(ex, handler(ex))
+      if (ex.getRequestURI.getPath != path) notFound(ex)
+      else try respond(ex, handler(ex))
       catch {
         case BadRequest(msg) => respond(ex, s"""{"error":"$msg"}""", 400)
         case t: Throwable =>
@@ -99,14 +106,6 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
   }
   route("/metrics/timeseries/variantsOverlap") { _ =>
     store.overlap("set_var_").map { case (a, b, n) =>
-      s"""{"dimensions":["$a","$b"],"metric":$n}"""
-    }.mkString("[", ",", "]")
-  }
-  // scale twin of /variantsOverlap: theta-sketch intersection reads
-  // (the store keeps KB sketches instead of raw uid sets — the only
-  // serving shape that survives 100 TB of distinct users)
-  route("/metrics/timeseries/variantsOverlapApprox") { _ =>
-    store.overlapApprox("theta_var_").map { case (a, b, n) =>
       s"""{"dimensions":["$a","$b"],"metric":$n}"""
     }.mkString("[", ",", "]")
   }
@@ -128,7 +127,7 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
   server.createContext("/", (ex: HttpExchange) =>
     ex.getRequestURI.getPath match {
       case "/" | "/index.html" => respond(ex, indexHtml, 200, "text/html")
-      case p => respond(ex, s"""{"error":"no such path: $p"}""", 404)
+      case _ => notFound(ex)
     })
 
   def start(): DashboardServer = { server.start(); this }

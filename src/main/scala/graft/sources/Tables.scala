@@ -67,11 +67,15 @@ object Tables {
     }
   }
 
-  /** The events table stores `ts` as parquet TIMESTAMP(NANOS), which
-    * Spark's vectorized reader rejects outright. Read it as a raw
-    * nanos long (legacy conf) and floor-truncate to microseconds —
-    * exactly what DuckDB does when it reads the same column, so oracle
-    * comparisons see identical values. */
+  /** The events table's `ts` has one of two parquet layouts, and both
+    * come out as a microsecond TIMESTAMP:
+    *  - TIMESTAMP(NANOS), which pandas writes for `datetime64[ns]` (the
+    *    tables perfbench generates). Spark's reader rejects it outright,
+    *    so it is read as a raw nanos long (legacy conf) and truncated to
+    *    microseconds — what DuckDB does with the same post-epoch
+    *    values, so oracle comparisons see identical ones.
+    *  - TIMESTAMP(MICROS) without the UTC flag (the `sf*` test
+    *    fixtures), which Spark infers as TIMESTAMP_NTZ. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, sfDir, "events")

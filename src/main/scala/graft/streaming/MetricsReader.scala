@@ -26,9 +26,8 @@ trait MetricsReader {
     * (SINTERSTORE+SCARD per unordered pair, controller :109-136);
     * returned dimension names have `prefix` stripped. */
   def overlap(prefix: String): Seq[(String, String, Long)]
-  /** The sketch twin of [[overlap]]: intersection ESTIMATES over
-    * serialized theta sketches — the only serving shape whose state
-    * stays KB-sized at 100 TB of distinct users. Default: none kept. */
+  /** No store overrides this and no endpoint serves it: it remains only
+    * as the hook that perfbench's harness (`TimedStore`) forwards. */
   def overlapApprox(prefix: String): Seq[(String, String, Long)] = Nil
 
   /** Q1–Q3 read shape: the `lastMinutes` closed minutes before

@@ -172,6 +172,13 @@ class ContractSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"driver-unsafe query names: $bad")
   }
 
+  test("the engine ships one streaming query: startPipeline is StreamingMetrics' only starter") {
+    // public methods of the object (default-argument getters carry a '$')
+    val starters = graft.streaming.StreamingMetrics.getClass.getMethods.toSeq
+      .map(_.getName).filter(n => n.startsWith("start") && !n.contains("$")).distinct
+    assert(starters === Seq("startPipeline"))
+  }
+
   test("approximate ANN indexes clear their recall@10 floor") {
     import graft.operators.Similarity
     import graft.sources.Tables

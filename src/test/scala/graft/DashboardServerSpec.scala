@@ -28,13 +28,6 @@ class DashboardServerSpec extends AnyFunSuite {
     store.sadd("set_experiments_2026_08_12T10_16", Seq("e1", "e2"))
     store.sadd("set_var_1", Seq("u1", "u2"))
     store.sadd("set_var_2", Seq("u2", "u3"))
-    def sketchOf(ids: String*): Array[Byte] = {
-      val s = org.apache.datasketches.theta.UpdateSketch.builder().build()
-      ids.foreach(s.update)
-      s.compact().toByteArray
-    }
-    store.putSketch("theta_var_1", sketchOf("u1", "u2"))
-    store.putSketch("theta_var_2", sketchOf("u2", "u3"))
     val clock = () => java.time.LocalDateTime.of(2026, 8, 12, 10, 17, 42)
     val srv = new DashboardServer(store, port = 0, clock = clock).start()
     try {
@@ -59,9 +52,10 @@ class DashboardServerSpec extends AnyFunSuite {
       val times = get(port, "/metrics/timeseries/times")
       assert(times.startsWith("""["2026-08-12T10:16:00Z","2026-08-12T10:15:00Z""""))
       assert(times.split(",").length === 10)
-      // sketch twin of the overlap endpoint: u2 shared
-      assert(get(port, "/metrics/timeseries/variantsOverlapApprox") ===
-        """[{"dimensions":["1","2"],"metric":1}]""")
+      // the five reference endpoints are the whole API: a path that only
+      // extends one (each context matches by string prefix) is a 404
+      val approx = fetch(port, "/metrics/timeseries/variantsOverlapApprox")
+      assert(approx.statusCode === 404, approx.body)
       // malformed query param: a JSON error payload, not a hung socket
       val bad = get(port, "/metrics/timeseries/visits?lastMinutes=abc")
       assert(bad.contains("\"error\""), s"expected error payload, got: $bad")
@@ -86,9 +80,9 @@ class DashboardServerSpec extends AnyFunSuite {
       val page = get(port, "/")
       assert(page.startsWith("<!DOCTYPE html>"))
       Seq("/metrics/timeseries/visits", "/metrics/timeseries/users",
-        "/metrics/timeseries/experiments", "/metrics/timeseries/variantsOverlap",
-        "/metrics/timeseries/variantsOverlapApprox")
+        "/metrics/timeseries/experiments", "/metrics/timeseries/variantsOverlap")
         .foreach(e => assert(page.contains(e), s"page does not poll $e"))
+      assert(!page.contains("variantsOverlapApprox"), "page polls a removed endpoint")
       // self-contained: no external script/style fetch
       assert(!page.contains("src=\"http"), "page must not pull external scripts")
       assert(get(port, "/index.html") === page)
@@ -129,9 +123,8 @@ class DashboardServerSpec extends AnyFunSuite {
         """[{"dimensions":["1","2"],"metric":1}]""")
       val times = get(port, "/metrics/timeseries/times")
       assert(times.startsWith("""["2026-08-12T10:16:00Z","2026-08-12T10:15:00Z""""))
-      // the sketch twin needs engine-held theta sketches — a plain
-      // Redis store keeps none, and the endpoint degrades to empty
-      assert(get(port, "/metrics/timeseries/variantsOverlapApprox") === "[]")
+      // no sixth endpoint on this store either
+      assert(fetch(port, "/metrics/timeseries/variantsOverlapApprox").statusCode === 404)
     } finally { srv.stop(); sink.close(); redis.close() }
   }
 }

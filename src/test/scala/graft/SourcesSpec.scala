@@ -127,4 +127,36 @@ class SourcesSpec extends AnyFunSuite {
       assert(got === want)
     }
   }
+
+  test("Tables.events floors a TIMESTAMP(NANOS) ts to microseconds") {
+    // the layout pandas writes for datetime64[ns] (perfbench's catalog
+    // tables); the sf* fixtures store TIMESTAMP(MICROS) instead
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val base = 1704067200L * 1000000000L // 2024-01-01T00:00:00
+    // sub-microsecond remainders of 0, 1, 999 and 789 ns
+    val nanos = Seq(base, base + 1L, base + 999L, base + 1000L, base + 123456789L)
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    try {
+      val rows = new SimpleGroupFactory(schema)
+      nanos.zipWithIndex.foreach { case (ns, i) =>
+        writer.write(rows.newGroup().append("event_id", i.toLong).append("ts", ns))
+      }
+    } finally writer.close()
+    val events = Tables.events(spark, dir)
+    // the nanos-as-long branch ran: the raw column is a long...
+    assert(Tables.table(spark, dir, "events").schema("ts").dataType ===
+      org.apache.spark.sql.types.LongType)
+    // ...and comes out a microsecond timestamp, remainders floored
+    assert(events.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
+    val got = events.select(col("event_id"), unix_micros(col("ts"))).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === nanos.zipWithIndex.map { case (ns, i) =>
+      i.toLong -> Math.floorDiv(ns, 1000L) }.toMap)
+  }
 }

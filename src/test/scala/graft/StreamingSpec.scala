@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{Analytics, Metrics, Preference}
 import graft.streaming.{MetricsReader, MetricsStore, StreamingMetrics}
 
@@ -11,6 +13,7 @@ import graft.streaming.{MetricsReader, MetricsStore, StreamingMetrics}
   * event folding into an already-seen minute (the reference accepts
   * late data forever — no watermark, order-insensitive merges). */
 class StreamingSpec extends AnyFunSuite {
+  import StreamingSpec._
   private lazy val spark = TestSpark.spark
 
   private def ev(uid: String, exp: String, variant: String, t: String) =
@@ -150,27 +153,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.streams.active.forall(_.name != StreamingMetrics.FanOutQuery))
   }
 
-  test("streaming theta sketches serve exact overlap in the raw-hash regime") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[LogEvent]
-    val store = new MetricsStore
-    val q = StreamingMetrics.startVariantSketches(
-      input.toDS(), store, "theta_var_t")
-    // variant 1: u1 u2 u3 ; variant 2: u2 u3 u4 — overlap 2, split
-    // across two micro-batches so the sketch state must accumulate
-    input.addData(ev("u1", "e1", "1", "2026-08-12 10:15:03"),
-      ev("u2", "e1", "1", "2026-08-12 10:15:10"),
-      ev("u2", "e1", "2", "2026-08-12 10:15:20"))
-    q.processAllAvailable()
-    input.addData(ev("u3", "e1", "1", "2026-08-12 10:16:00"),
-      ev("u3", "e1", "2", "2026-08-12 10:16:05"),
-      ev("u4", "e1", "2", "2026-08-12 10:16:10"))
-    q.processAllAvailable()
-    assert(store.overlapApprox("theta_var_") === Seq(("1", "2", 2L)))
-    q.stop()
-  }
-
   test("writeBatchOnce makes INCRBY effectively-once under batch redelivery") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -219,7 +201,7 @@ class StreamingSpec extends AnyFunSuite {
         (i % 7).toDouble + 0.25, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = StreamingMetrics.startReadout(Analytics.liftArms(
+    val q = startReadout(Analytics.liftArms(
       input.toDS().toDF("event_id", "event_type", "value", "props")),
       "variant_lift_t")(identity)
     try {
@@ -255,7 +237,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[LogEvent]
-    val q = StreamingMetrics.startReadout(Metrics.slidingWindows(input.toDS().toDF()),
+    val q = startReadout(Metrics.slidingWindows(input.toDS().toDF()),
       "sliding_stream_t")(Metrics.slidingFromWindows)
     val events = Seq(ev("u1", "e1", "1", "2026-08-12 10:16:00"),
       ev("u2", "e1", "1", "2026-08-12 10:16:30"))
@@ -281,7 +263,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[LogEvent]
-    val q = StreamingMetrics.startReadout(Metrics.activeUnits(input.toDS().toDF()),
+    val q = startReadout(Metrics.activeUnits(input.toDS().toDF()),
       "rolling_stream_t")(Metrics.activesFromUnits)
     val events = Seq(ev("u1", "e1", "1", "2026-08-12 10:16:00"),
       ev("u1", "e1", "1", "2026-08-12 10:16:30"))
@@ -299,28 +281,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed.toSeq ===
         Metrics.rollingActiveUsers(events.toDS().toDF()).as[(String, Long)].collect().toSeq)
     } finally q.stop()
-  }
-
-  test("streaming sessionization emits closed session windows") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[LogEvent]
-    input.addData(
-      ev("u1", "e1", "1", "2026-08-12 10:00:00"),
-      ev("u1", "e1", "1", "2026-08-12 10:10:00"), // same session (gap 30m)
-      ev("u1", "e1", "1", "2026-08-12 11:30:00"), // new session
-      ev("u2", "e1", "2", "2026-08-12 10:05:00"),
-      // advance the watermark far enough to close every session above
-      ev("wm", "e1", "1", "2026-08-12 23:00:00"))
-    val q = StreamingMetrics.startSessionization(input.toDS(), "sessions_t",
-      gapSeconds = 1800, watermark = "1 minute")
-    q.processAllAvailable()
-    val rows = spark.table("sessions_t").collect()
-      .map(r => (r.getString(0), r.getLong(3)))
-    val u1 = rows.filter(_._1 == "u1").map(_._2).sorted.toSeq
-    assert(u1 === Seq(1L, 2L), rows.mkString("; "))
-    assert(rows.count(_._1 == "u2") === 1)
-    q.stop()
   }
 
   test("checkpointed restart resumes from committed offsets — no double-counting") {
@@ -407,154 +367,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(ckptStore.counter("visitCounter_2026_08_12T10_16") === 1L)
   }
 
-  test("streaming anomaly z ≡ batch visitsZscore on the closed-minute prefix") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    // minutes 10:00-10:16 with deterministic varying counts
-    def count(m: Int) = 3 + (m * 7) % 5
-    val all = (0 until 17).flatMap { m =>
-      (0 until count(m)).map(i =>
-        ev(s"u$i", "e1", "1", f"2026-08-12 10:$m%02d:10"))
-    }
-    val input = MemoryStream[LogEvent]
-    val q = StreamingMetrics.startVisitsAnomaly(input.toDS(), "anomaly_t",
-      watermark = "2 minutes", lookback = 10, minN = 5)
-    try {
-      // three ordered chunks; watermark trails 2 min behind max ts
-      all.grouped(30).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-      val streamed = spark.table("anomaly_t")
-        .as[(String, Long, Option[Double])].collect()
-        .sortBy(_._1)
-      assert(streamed.nonEmpty)
-      // every emitted minute matches the batch operator exactly
-      val batch = graft.operators.Analytics.visitsZscore(
-        all.toDF().withColumnRenamed("timestamp", "ts"),
-        lookback = 10, minN = 5)
-        .as[(String, Long, Option[Double])].collect()
-        .map(r => r._1 -> r).toMap
-      streamed.foreach { case (mk, v, z) =>
-        val (_, bv, bz) = batch(mk)
-        assert(v === bv, mk)
-        assert(z === bz, s"$mk: stream $z vs batch $bz")
-      }
-      // enough history accumulated that some z values are real numbers
-      assert(streamed.count(_._3.isDefined) >= 5)
-    } finally q.stop()
-  }
-
-  test("streaming CUSUM: O(1) state reproduces the recurrence; planted shift alarms across batches") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    // 12 minutes at the target rate (4/min) with a total OUTAGE at
-    // minutes 7-8 (no events at all), then 5 minutes at 12/min
-    def count(m: Int) =
-      if (m == 7 || m == 8) 0 else if (m < 12) 4 else 12
-    val all = (0 until 17).flatMap { m =>
-      (0 until count(m)).map(i =>
-        ev(s"u$i", "e1", "1", f"2026-08-12 10:$m%02d:10"))
-    }
-    val input = MemoryStream[LogEvent]
-    val q = StreamingMetrics.startVisitsCusum(input.toDS(), "cusum_t",
-      targetPerMin = 4, watermark = "2 minutes",
-      slackHalf = 1, alarmVisits = 8)
-    try {
-      all.grouped(25).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-      val streamed = spark.table("cusum_t")
-        .as[(String, Long, Long, Long, Boolean)].collect().sortBy(_._1)
-      assert(streamed.nonEmpty)
-      // the event-less outage minutes were zero-filled into the fold
-      assert(streamed.exists(r => r._1 == "2026_08_12T10_07" && r._2 == 0L),
-        "gap minute missing from the fold")
-      assert(streamed.exists(r => r._1 == "2026_08_12T10_08" && r._2 == 0L))
-      // driver replay of the recurrence over the same minute series
-      var sPos = 0L; var sNeg = 0L
-      val expected = streamed.map(_._2).map { v =>
-        sPos = math.max(0L, sPos + 2 * v - 2 * 4 - 1)
-        sNeg = math.max(0L, sNeg + 2 * 4 - 2 * v - 1)
-        (sPos, sNeg, math.max(sPos, sNeg) > 16)
-      }
-      streamed.zip(expected).foreach { case ((mk, _, p, n, a), (ep, en, ea)) =>
-        assert(p === ep, mk); assert(n === en, mk); assert(a === ea, mk)
-      }
-      // the on-target head never alarms; the outage accumulates real
-      // S- (2 minutes at v=0: S- = 7 then 14 — shy of the 16 bar by
-      // construction, so the DROP statistic measurably moved); the
-      // shifted tail alarms
-      assert(!streamed.head._5)
-      val at8 = streamed.find(_._1 == "2026_08_12T10_08").get
-      assert(at8._4 === 14L, s"outage S- ${at8._4}")
-      assert(streamed.exists(_._5), "planted shift never alarmed")
-    } finally q.stop()
-  }
-
-  test("keyed streaming CUSUM: independent per-(experiment,variant) monitors, state rows = |keys|") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    // three arms over 14 minutes: (e1,a) stays on target (4/min);
-    // (e1,b) has a 2-minute total outage at minutes 6-7 (ITS gap
-    // minutes must zero-fill without touching siblings; S- reaches 14
-    // — measurably moved but shy of the 16 bar, the global test's
-    // construction); (e2,a) shifts to 12/min from minute 6 and must
-    // alarm ALONE
-    def cnt(exp: String, vr: String, m: Int): Int = (exp, vr) match {
-      case ("e1", "a") => 4
-      case ("e1", "b") => if (m == 6 || m == 7) 0 else 4
-      case ("e2", "a") => if (m >= 6) 12 else 4
-      case _ => 0
-    }
-    val arms = Seq(("e1", "a"), ("e1", "b"), ("e2", "a"))
-    val all = (0 until 14).flatMap { m =>
-      arms.flatMap { case (exp, vr) =>
-        (0 until cnt(exp, vr, m)).map(i =>
-          ev(s"u$i", exp, vr, f"2026-08-12 10:$m%02d:10"))
-      }
-    }
-    val input = MemoryStream[LogEvent]
-    val q = StreamingMetrics.startKeyedCusum(input.toDS(), "cusum_keyed_t",
-      targetPerMin = 4, watermark = "2 minutes",
-      slackHalf = 1, alarmVisits = 8)
-    try {
-      all.grouped(40).foreach { c => input.addData(c: _*); q.processAllAvailable() }
-      val streamed = spark.table("cusum_keyed_t")
-        .as[(String, String, String, Long, Long, Long, Boolean)]
-        .collect().sortBy(r => (r._1, r._2, r._3))
-      assert(streamed.nonEmpty)
-      // per-key driver replay of the recurrence over each arm's own
-      // minute series — the monitors must not bleed into each other
-      arms.foreach { case (exp, vr) =>
-        val series = streamed.filter(r => r._1 == exp && r._2 == vr)
-        assert(series.nonEmpty, s"no rows for ($exp,$vr)")
-        var sPos = 0L; var sNeg = 0L
-        series.foreach { case (_, _, mk, v, p, n, a) =>
-          sPos = math.max(0L, sPos + 2 * v - 2 * 4 - 1)
-          sNeg = math.max(0L, sNeg + 2 * 4 - 2 * v - 1)
-          assert(p === sPos, s"($exp,$vr) $mk")
-          assert(n === sNeg, s"($exp,$vr) $mk")
-          assert(a === (math.max(sPos, sNeg) > 16), s"($exp,$vr) $mk")
-        }
-      }
-      // (e1,b)'s outage minutes zero-filled under ITS key only
-      assert(streamed.exists(r =>
-        r._1 == "e1" && r._2 == "b" && r._3 == "2026_08_12T10_06" && r._4 == 0L),
-        "keyed gap minute missing")
-      assert(streamed.filter(r => r._3 == "2026_08_12T10_06" && r._4 == 0L)
-        .forall(r => (r._1, r._2) == ("e1", "b")))
-      // the outage moved (e1,b)'s OWN drop statistic to 14 — real,
-      // independent per-key accumulation that stays shy of the bar
-      val bAt7 = streamed.find(r =>
-        r._1 == "e1" && r._2 == "b" && r._3 == "2026_08_12T10_07").get
-      assert(bAt7._6 === 14L, s"outage S- ${bAt7._6}")
-      // alarms are per-key: only the shifted arm fires
-      val alarmed = streamed.filter(_._7).map(r => (r._1, r._2)).toSet
-      assert(alarmed === Set(("e2", "a")), s"alarm keys $alarmed")
-      // O(1) per-key state: the fold operator holds exactly |keys| rows
-      val stateRows = q.lastProgress.stateOperators
-        .filter(_.operatorName.contains("flatMapGroupsWithState"))
-        .map(_.numRowsTotal).sum
-      assert(stateRows === arms.size.toLong, s"state rows $stateRows")
-    } finally q.stop()
-  }
-
   test("streamed Welch-t readout ≡ batch variant_lift bit-exact under uneven slicing") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -563,7 +375,7 @@ class StreamingSpec extends AnyFunSuite {
         (i % 7).toDouble + 0.25, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = StreamingMetrics.startReadout(Analytics.liftArms(
+    val q = startReadout(Analytics.liftArms(
       input.toDS().toDF("event_id", "event_type", "value", "props")),
       "variant_lift_t2")(Analytics.liftFromArms)
     implicit val liftEnc: org.apache.spark.sql.Encoder[(String, String,
@@ -607,7 +419,7 @@ class StreamingSpec extends AnyFunSuite {
         (i % 11).toDouble * 20.0 + 0.25, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = StreamingMetrics.startReadout(Analytics.batteryArms(
+    val q = startReadout(Analytics.batteryArms(
       input.toDS().toDF("event_id", "event_type", "value", "props")),
       "fdr_stream")(Analytics.fdrFromArms(_, 0.05))
     implicit val fdrEnc: org.apache.spark.sql.Encoder[(String, String,
@@ -651,7 +463,7 @@ class StreamingSpec extends AnyFunSuite {
         (i % 7).toDouble * 10.0 + 0.5, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = StreamingMetrics.startReadout(Analytics.rankGrain(
+    val q = startReadout(Analytics.rankGrain(
       input.toDS().toDF("event_id", "event_type", "value", "props")),
       "mwu_stream")(Analytics.mwuFromGrain(_, 0.05))
     implicit val mwuEnc: org.apache.spark.sql.Encoder[(String, String,
@@ -694,7 +506,7 @@ class StreamingSpec extends AnyFunSuite {
         (i % 7).toDouble * 10.0 + 0.5, s"""{"k":"e${i % 2}"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = StreamingMetrics.startReadout(Analytics.rankGrain(
+    val q = startReadout(Analytics.rankGrain(
       input.toDS().toDF("event_id", "event_type", "value", "props")),
       "kruskal_stream")(Analytics.kruskalFromGrain)
     implicit val kwEnc: org.apache.spark.sql.Encoder[(String, Long,
@@ -750,7 +562,7 @@ class StreamingSpec extends AnyFunSuite {
       .groupBy(col("experiment_id"))
       .agg(expr("min(us) + (max(us) - min(us)) div 2").as("mid"))
     val input = MemoryStream[(Long, Long, String, Double, String, Long)]
-    val q = StreamingMetrics.startReadout(Analytics.cupedUnits(
+    val q = startReadout(Analytics.cupedUnits(
       Analytics.cupedBase(withTs(input.toDS().toDF(
         "event_id", "user_id", "event_type", "value", "props", "us"))), splits),
       "cuped_stream")(Analytics.cupedFromG1)
@@ -806,7 +618,7 @@ class StreamingSpec extends AnyFunSuite {
       df.collect().map(_.toSeq).toSet
     for (kernel <- Seq("md5", "xxhash64")) {
       val input = MemoryStream[(String, String, Double, String)]
-      val q = StreamingMetrics.startReadout(Preference.winrateUt(
+      val q = startReadout(Preference.winrateUt(
         input.toDS().toDF("user_id", "event_type", "value", "props")),
         s"winrate_stream_$kernel")(ut =>
           Preference.winrateFromComps(Preference.winrateComps(ut), 48, kernel))
@@ -834,47 +646,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("streamed best-of-n ≡ batch bestOfN bit-exact under uneven slicing") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    // values with deliberate ties (i % 5) so the event_id tie-break
-    // and the margin-0 path both exercise; 3 groups of uneven size
-    val rows = (0 until 45).map { i =>
-      (i.toLong, (i % 3).toLong * 10, (i % 5).toDouble + 0.5)
-    }
-    val input = MemoryStream[(Long, Long, Double)]
-    val q = graft.streaming.StreamingMetrics.startBestOfN(
-      input.toDS().toDF("event_id", "user_id", "value"), "best_of_n_s")
-    implicit val bonEnc: org.apache.spark.sql.Encoder[(Long, Long,
-      Double, Long, Option[Double])] =
-      org.apache.spark.sql.Encoders.product
-    type BonRow = (Long, Long, Double, Long, Option[Double])
-    try {
-      input.addData(rows.take(7))
-      q.processAllAvailable()
-      input.addData(rows.slice(7, 8)) // single-row batch
-      q.processAllAvailable()
-      input.addData(rows.drop(8))
-      q.processAllAvailable()
-      // update-mode memory sink accumulates one row per touched key
-      // per batch; n_candidates grows with every event, so the final
-      // state per key is its max-n row
-      val streamed = spark.table("best_of_n_s").as[BonRow].collect()
-        .groupBy(_._1).map(_._2.maxBy(_._4)).toSet
-      val batch = graft.operators.Preference.bestOfN(
-        rows.toDF("event_id", "user_id", "value"))
-        .as[BonRow].collect().toSet
-      // top-2 maintenance is a semigroup fold: any slicing reproduces
-      // the batch window's selection, count, and margin bit-exactly
-      assert(streamed === batch)
-      // the state operator holds exactly |groups| rows — O(1) per key
-      val stateRows = q.lastProgress.stateOperators
-        .filter(_.operatorName.contains("flatMapGroupsWithState"))
-        .map(_.numRowsTotal).sum
-      assert(stateRows === 3L, s"state rows $stateRows")
-    } finally q.stop()
-  }
-
   test("streamed pass@k ≡ batch passAtK bit-exact under uneven slicing") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -883,7 +654,7 @@ class StreamingSpec extends AnyFunSuite {
       (i.toLong, (i % 5).toLong, if (i % 7 < (i % 5)) 200.0 else 1.0)
     }
     val input = MemoryStream[(Long, Long, Double)]
-    val q = StreamingMetrics.startReadout(Preference.passAtKTasks(
+    val q = startReadout(Preference.passAtKTasks(
       input.toDS().toDF("event_id", "user_id", "value")),
       "pass_at_k_s")(Preference.passAtKFromTasks(_))
     try {
@@ -919,7 +690,7 @@ class StreamingSpec extends AnyFunSuite {
       Long, Long, Double, String)] = org.apache.spark.sql.Encoders.product
     type Traj = (String, Long, Long, Long, Long, Double, String)
     val input = MemoryStream[(Long, String, Double)]
-    val q = StreamingMetrics.startReadout(Analytics.sprtMinutes(
+    val q = startReadout(Analytics.sprtMinutes(
       toEv(input.toDS().toDF("event_id", "s", "value"))),
       "sprt_s")(Analytics.sprtFromMinutes(_))
     try {
@@ -961,9 +732,9 @@ class StreamingSpec extends AnyFunSuite {
       (i.toLong, v, value, s"""{"k":"$e"}""")
     }
     val input = MemoryStream[(Long, String, Double, String)]
-    val q = StreamingMetrics.startReadout(Analytics.conversionArms(
+    val q = startReadout(Analytics.conversionArms(
       input.toDS().toDF("event_id", "event_type", "value", "props")),
-      "sprt_keyed")(Analytics.sprtFromArms(_))
+      "sprt_keyed")(sprtFromArms(_))
     try {
       input.addData(rows.take(77))
       q.processAllAvailable()
@@ -1005,43 +776,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming corpus ingest replayed in order ≡ batch corpus_pipeline counts") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val docs = graft.sources.Tables.documents(spark, TestSpark.Sf0001)
-    val expected = graft.operators.Corpus.corpusPipeline(docs).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(expected.nonEmpty)
-
-    val rows = docs.select("doc_id", "text", "lang")
-      .as[(Long, String, String)].collect().sortBy(_._1)
-    val chunks = rows.grouped((rows.length + 2) / 3).toSeq
-    val input = MemoryStream[(Long, String, String)]
-    val store = new MetricsStore
-    val q = StreamingMetrics.startCorpusIngest(
-      input.toDS().toDF("doc_id", "text", "lang"), store, "corpus_ingest_t")
-    try {
-      chunks.foreach { c => input.addData(c: _*); q.processAllAvailable() }
-      val got = store.counters.toMap
-        .collect { case (k, v) if k.startsWith("corpus_docs:") =>
-          val Array(_, split, lang) = k.split(":"); (split, lang) -> v }
-        .toMap
-      assert(got === expected)
-    } finally q.stop()
-
-    // a re-played duplicate batch adds nothing (fp state + ledger)
-    val input2 = MemoryStream[(Long, String, String)]
-    val store2 = new MetricsStore
-    val q2 = StreamingMetrics.startCorpusIngest(
-      input2.toDS().toDF("doc_id", "text", "lang"), store2, "corpus_ingest_t2")
-    try {
-      input2.addData(chunks.head: _*); q2.processAllAvailable()
-      val snap = store2.counters.toMap
-      input2.addData(chunks.head: _*); q2.processAllAvailable()
-      assert(store2.counters.toMap === snap, "duplicate replay must be a no-op")
-    } finally q2.stop()
-  }
-
   test("streamed pinned-weights scores ≡ batch quality_score_pinned") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -1068,60 +802,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("corpus ingest with the model gate admits exactly the batch " +
-    "predicted=1 set") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    graft.functions.Registry.ensure(spark)
-    val docs = graft.sources.Tables.documents(spark, TestSpark.Sf0001)
-    // batch twin of the gated ingest: heuristic rules, then the pinned
-    // scoring's predicted=1, then keep-min-doc_id per fingerprint
-    val heur = docs
-      .select(col("doc_id"), col("lang"), col("text"),
-        split(col("text"), " ").as("toks"))
-      .where(size(col("toks")) >= 32)
-      .select(col("doc_id"), col("lang"), col("text"),
-        expr("ngram_stats(toks, 3)").as("st"))
-      .where(lit(1.0) - col("st.n_distinct_ngrams").cast("double") /
-        col("st.n_ngrams").cast("double") <= 0.2)
-      .select(col("doc_id"), col("lang"), col("text"))
-    val gated = graft.operators.Classifier.withPinnedScore(heur)
-      .where(col("predicted") === 1L)
-      .select(col("doc_id"), col("lang"), md5(col("text")).as("fp"))
-    val expected = gated
-      .groupBy(col("fp"))
-      .agg(min(struct(col("doc_id"), col("lang"))).as("rep"))
-      .select(col("rep.doc_id"), col("rep.lang"))
-      .withColumn("split",
-        when(graft.operators.Corpus.hashBucket(col("doc_id")) < 10,
-          lit("val")).otherwise(lit("train")))
-      .groupBy("split", "lang").count().collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(expected.nonEmpty)
-    // the model gate must actually gate: fewer docs than heuristics-only
-    val heurOnly = heur.count()
-    assert(expected.values.sum < heurOnly,
-      "pinned gate rejected nothing — test fixture too easy")
-    val rows = docs.select("doc_id", "text", "lang")
-      .as[(Long, String, String)].collect().sortBy(_._1)
-    val input = MemoryStream[(Long, String, String)]
-    val store = new MetricsStore
-    val q = StreamingMetrics.startCorpusIngest(
-      input.toDS().toDF("doc_id", "text", "lang"), store,
-      "corpus_ingest_gated_t", modelGate = true)
-    try {
-      rows.grouped((rows.length + 2) / 3)
-        .foreach { c => input.addData(c: _*); q.processAllAvailable() }
-      val got = store.counters.toMap
-        .collect { case (k, v) if k.startsWith("corpus_docs:") =>
-          val Array(_, split, lang) = k.split(":"); (split, lang) -> v }
-        .toMap
-      assert(got === expected)
-    } finally q.stop()
-  }
-
-  test("soak: O(100) micro-batches through the checkpointed 5-branch fan-out " +
+  test("soak: O(100) micro-batches through the checkpointed fan-out query " +
     "with an abrupt mid-run kill/restart — store ≡ batch twin") {
     import spark.implicits._
     // file source, not MemoryStream: a real source (files, Kafka,
@@ -1205,4 +886,47 @@ class StreamingSpec extends AnyFunSuite {
     assert(stateOps.nonEmpty && stateOps.forall(_ == 0),
       s"stateful operators per micro-batch: ${stateOps.distinct}")
   }
+}
+
+object StreamingSpec {
+
+  /** The streaming face of an algebraic batch metric: `grain` is the
+    * batch operator's own grain aggregate over a stream, which Spark
+    * keeps in complete mode, and every micro-batch applies the batch
+    * `readout` to it and publishes the collected result as the temp
+    * view `view`. The grain is algebraic (counts, exact decimal sums),
+    * so after any micro-batch slicing the view equals the batch face
+    * `readout(grain(events so far))`. The query is named `view`. */
+  def startReadout(grain: DataFrame, view: String)(
+      readout: DataFrame => DataFrame): StreamingQuery = {
+    // foreachBatch hands its frame a per-batch cloned session whose temp
+    // catalog the caller never sees: the view goes on the stream's own
+    val session = grain.sparkSession
+    grain.writeStream.outputMode("complete")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // a readout may read the grain more than once; the cache is
+        // released per batch so a long-running stream never piles them up
+        val g = batch.persist()
+        try {
+          // materialized before it is published: a lazy view over the
+          // batch frame would dangle once its state snapshot is released
+          val out = readout(g)
+          val rows = out.collect()
+          session.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+            .createOrReplaceTempView(view)
+        } finally g.unpersist()
+      }
+      .queryName(view).start()
+  }
+
+  /** One Wald monitor per (experiment, variant) arm over
+    * `Analytics.conversionArms`: each arm's totals through the same LLR
+    * and decision chains as `Analytics.sprtConversion`. Output:
+    * (experiment_id, variant, n_cum, conv_cum, llr, decision). */
+  def sprtFromArms(arms: DataFrame): DataFrame =
+    arms
+      .select(col("experiment_id"), col("variant"), col("n").as("n_cum"),
+        col("conv").as("conv_cum"))
+      .withColumn("llr", expr(Analytics.sprtLlrExpr(0.10, 0.15)))
+      .withColumn("decision", expr(Analytics.sprtDecisionExpr(0.05, 0.05)))
 }
