@@ -86,19 +86,7 @@ object Bench {
     }
     // optional comma-separated subset for local iteration
     // (e.g. SPARK_GRAFT_ONLY=parse_events_json,dedup_minhash_lsh)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // fail fast on unknown names: a typo'd subset would otherwise run
-    // empty/partial and look like success
-    only.map(_ -- SparkEntry.queries.keySet).filter(_.nonEmpty).foreach { bad =>
-      System.err.println(
-        s"BENCH-ABORT unknown SPARK_GRAFT_ONLY names: ${bad.toSeq.sorted.mkString(",")}")
-      spark.stop(); sys.exit(2)
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.onlySelected(spark, "BENCH-ABORT")
     // SORTED execution order, not Map hash order: hash order reshuffles
     // whenever the query set changes, silently moving the run's
     // cold-start costs (first parquet touch, codegen warm) onto

@@ -1,12 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The ONE definition site of the engine's session configuration —
-  * every main (Bench, Verify, Prof, and any future entry point) builds
-  * through here so an engine-contract config can never silently differ
-  * between the bench that times a query and the verify that oracles it
-  * (the r18 verdict flagged the threshold below living in three
-  * copies; a fourth main would have lost it and re-entered the
+/** The ONE session factory: every main (Bench, Verify, Prof, Explain,
+  * DashboardMain), the test session and the benchmark harness build
+  * through [[local]], so an engine-contract config can never silently
+  * differ between the bench that times a query and the verify that
+  * oracles it (the r18 verdict flagged the threshold below living in
+  * three copies; a fourth main would have lost it and re-entered the
   * sort-based fallback).
   *
   * What belongs here: configs that are part of the ENGINE's execution
@@ -22,10 +22,9 @@ import org.apache.spark.sql.SparkSession
   */
 object EngineSession {
   /** Apply the engine-contract configs to a builder. */
-  def withEngineConf(b: SparkSession.Builder): SparkSession.Builder =
+  private def withEngineConf(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       // ObjectHashAggregate falls back to SORT-BASED aggregation at 128
       // distinct keys per task (spark.sql default) — a threshold every
       // k-bounded typed aggregate in this engine (vec_sum k-means
@@ -38,10 +37,9 @@ object EngineSession {
       // production value, not a local-mode tune (at 100 TB the group
       // counts of these aggregates are unchanged; only row counts
       // grow). Unbounded-cardinality object aggregates were removed
-      // structurally instead (see Dedup.cappedShingles). Env-
-      // overridable for A/B.
+      // structurally instead (see Dedup.cappedShingles).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_KEYS", "4096"))
+        "4096")
       // Generated-code cache (static conf; Spark's default is 100
       // entries). Whole-stage codegen compiles one class per stage, and
       // a compile costs milliseconds of driver CPU. Ten dashboard-shaped
@@ -58,9 +56,9 @@ object EngineSession {
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
-  /** The standard local session of the harness mains: `local[cpus]`
-    * master, shuffle partitions = cpus (the driver's scaling contract:
-    * both follow `SPARK_GRAFT_CPUS`), engine conf applied. */
+  /** The engine's local session: `local[cpus]` master, shuffle
+    * partitions = cpus (the driver's scaling contract: both follow
+    * `SPARK_GRAFT_CPUS`), engine conf applied, log level WARN. */
   def local(cpus: String): SparkSession = {
     val s = withEngineConf(SparkSession.builder()
       .master(s"local[$cpus]")

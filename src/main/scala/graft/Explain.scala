@@ -1,16 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan-audit dump: `explain("formatted")` for a representative query
   * set. With `-o <path>` writes a markdown artifact (PLANS.md is the
   * committed copy — the "is this the plan you'd want" evidence the
   * plan-shape tests in PlanSpec assert mechanically). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    // engine-contract configs from the shared factory (timezone, AQE,
-    // aggregate threshold) so dumped plans reflect the bench session
-    val spark = EngineSession.withEngineConf(
-      SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")).getOrCreate()
+    // the shared factory (timezone, AQE, aggregate threshold) so dumped
+    // plans reflect the bench session
+    val spark = EngineSession.local("8")
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     val (outPath, rest) = args.toSeq match {

@@ -49,6 +49,27 @@ object SparkEntry {
       df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
 
+  /** The queries a harness main runs: all of [[queries]], or the
+    * comma-separated subset named in `SPARK_GRAFT_ONLY` (local
+    * iteration; the driver runs unfiltered). Unknown names fail fast,
+    * since a typo'd subset would otherwise run empty or partial and
+    * look like success: `<abortTag> unknown SPARK_GRAFT_ONLY names: …`
+    * goes to stderr, `spark` stops and the JVM exits 2. */
+  def onlySelected(spark: SparkSession, abortTag: String)
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    only.map(_ -- queries.keySet).filter(_.nonEmpty).foreach { bad =>
+      System.err.println(
+        s"$abortTag unknown SPARK_GRAFT_ONLY names: ${bad.toSeq.sorted.mkString(",")}")
+      spark.stop(); sys.exit(2)
+    }
+    only match {
+      case Some(names) => queries.filter(kv => names(kv._1))
+      case None => queries
+    }
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- reference parity: pipeline aggregates (SURVEY.md §2.3) ----

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,8 @@ object Verify {
     // engine-contract configs live in ONE place — graft.EngineSession
     val spark = EngineSession.local(cpus)
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for local iteration (same contract
-    // as Bench); the driver runs unfiltered
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // fail fast on unknown names: a typo'd subset would otherwise run
-    // empty/partial and look like success
-    only.map(_ -- SparkEntry.queries.keySet).filter(_.nonEmpty).foreach { bad =>
-      System.err.println(
-        s"[verify] ABORT unknown SPARK_GRAFT_ONLY names: ${bad.toSeq.sorted.mkString(",")}")
-      spark.stop(); sys.exit(2)
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    // optional SPARK_GRAFT_ONLY subset (same contract as Bench)
+    val selected = SparkEntry.onlySelected(spark, "[verify] ABORT")
     // A query that fails here produces no parquet dump, and the driver's
     // compare then silently drops it from the round's correctness report
     // (it happened: round 9 lost 3 queries to a one-line source change).

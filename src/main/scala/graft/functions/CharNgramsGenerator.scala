@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -63,16 +62,4 @@ case class CharNgrams(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): CharNgrams =
     copy(child = newChild)
-}
-
-object CharNgrams {
-  /** Canonical builder (shared with [[graft.GraftExtensions]]): n must
-    * be a foldable non-null integer literal or analysis fails cleanly. */
-  def builder(exprs: Seq[Expression]): Expression =
-    CharNgrams(exprs(0), FunctionArgs.intLit("char_ngrams", exprs, 1))
-
-  /** Register `char_ngrams` for SQL/expr use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngrams", builder, "built-in")
 }

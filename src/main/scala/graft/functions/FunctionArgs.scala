@@ -7,13 +7,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 /** Shared argument extraction for the function builders that take
   * compile-time integer parameters (k, n, bands, capacity, ...).
   *
-  * Every graft function with a static-int argument routes through
-  * [[intLit]] from BOTH registration surfaces (the per-object
-  * `register(spark)` helpers and [[graft.GraftExtensions]]), so the
-  * two can't drift and a bad call — `char_ngrams(text, NULL)`,
-  * `topk_sketch(c, k_col, 64)` — fails as a clean AnalysisException at
-  * analysis time instead of an NPE/ClassCastException inside the
-  * builder.
+  * Every graft function with a static-int argument reads it through
+  * [[intLit]] in its [[Registry]] builder, so a bad call —
+  * `char_ngrams(text, NULL)`, `topk_sketch(c, k_col, 64)` — fails as a
+  * clean AnalysisException at analysis time instead of an
+  * NPE/ClassCastException inside the builder.
   */
 object FunctionArgs {
 

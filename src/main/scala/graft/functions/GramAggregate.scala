@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -121,9 +120,4 @@ case class GramAgg(
 
 object GramAgg {
   final class Buf(var gram: Array[Double], var dim: Int, var n: Long)
-
-  /** Register `vec_gram(col)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_gram", exprs => GramAgg(exprs(0)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,15 +91,4 @@ object LcsLen {
     }
     prev(m).toLong
   }
-}
-
-object LcsFunctions {
-  /** Canonical builder (shared with [[graft.GraftExtensions]]). */
-  def lcsBuilder(exprs: Seq[Expression]): Expression =
-    LcsLen(exprs(0), exprs(1))
-
-  /** Register `lcs_len` for SQL use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lcs_len", lcsBuilder, "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -151,14 +150,4 @@ case class LogRegGradAgg(
     copy(idxs = newChildren(0), nToks = newChildren(1),
       label = newChildren(2), weights = newChildren(3),
       withLoss = newChildren(4))
-}
-
-object LogRegFunctions {
-  /** Register `logreg_grad(idxs, n_toks, label, weights, with_loss)`
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "logreg_grad",
-      exprs => LogRegGradAgg(exprs(0), exprs(1), exprs(2), exprs(3),
-        exprs(4)), "built-in")
 }

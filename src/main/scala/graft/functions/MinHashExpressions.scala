@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -141,23 +140,5 @@ object MinHashBands {
       b += 1
     }
     new GenericArrayData(out)
-  }
-}
-
-object MinHashFunctions {
-  /** Canonical builders (shared with [[graft.GraftExtensions]]). */
-  def sigBuilder(exprs: Seq[Expression]): Expression =
-    MinHashSig(exprs(0),
-      FunctionArgs.intLit("minhash_sig", exprs, 1),
-      FunctionArgs.intLit("minhash_sig", exprs, 2))
-  def bandsBuilder(exprs: Seq[Expression]): Expression =
-    MinHashBands(exprs(0), FunctionArgs.intLit("minhash_bands", exprs, 1))
-
-  /** Register `minhash_sig` / `minhash_bands` for SQL use (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", sigBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands", bandsBuilder, "built-in")
   }
 }

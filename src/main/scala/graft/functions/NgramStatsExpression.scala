@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -72,13 +71,4 @@ object NgramStats {
     }
     new GenericInternalRow(Array[Any](total.toLong, seen.size.toLong))
   }
-
-  /** Canonical builder (shared with [[graft.GraftExtensions]]). */
-  def builder(exprs: Seq[Expression]): Expression =
-    NgramStats(exprs(0), FunctionArgs.intLit("ngram_stats", exprs, 1))
-
-  /** Register `ngram_stats(col, n)` for SQL use (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_stats", builder, "built-in")
 }

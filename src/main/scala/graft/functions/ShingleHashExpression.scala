@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -105,13 +104,4 @@ object TokenShingleHashes {
     }
     new GenericArrayData(out)
   }
-
-  /** Canonical builder (shared with [[graft.GraftExtensions]]). */
-  def builder(exprs: Seq[Expression]): Expression =
-    TokenShingleHashes(exprs(0),
-      FunctionArgs.intLit("token_shingle_hashes", exprs, 1))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_shingle_hashes", builder, "built-in")
 }

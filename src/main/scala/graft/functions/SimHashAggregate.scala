@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -89,17 +88,6 @@ case class SimHashAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(hashChild = newChildren(0), weightChild = newChildren(1))
-}
-
-object SimHashFunctions {
-  /** Register `simhash_agg` + `simhash64` (idempotent); the analyzer
-    * wraps the AggregateFunction when it appears in an agg position. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_agg", exprs => SimHashAgg(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHashDoc(exprs(0)), "built-in")
-  }
 }
 
 /** Per-row SimHash of a token array: one pass over the token INSTANCES

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -104,17 +103,4 @@ case class TopKSketchAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0))
-}
-
-object TopKSketchFunctions {
-  /** Canonical builder (shared with [[graft.GraftExtensions]]). */
-  def builder(exprs: Seq[Expression]): Expression =
-    TopKSketchAgg(exprs(0),
-      FunctionArgs.intLit("topk_sketch", exprs, 1),
-      FunctionArgs.intLit("topk_sketch", exprs, 2))
-
-  /** Register `topk_sketch(col, k, capacity)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_sketch", builder, "built-in")
 }

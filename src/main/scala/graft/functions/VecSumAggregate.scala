@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -106,9 +105,4 @@ case class VecSumAgg(
 
 object VecSumAgg {
   final class Buf(var sum: Array[Double], var n: Long)
-
-  /** Register `vec_sum(col)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_sum", exprs => VecSumAgg(exprs(0)), "built-in")
 }

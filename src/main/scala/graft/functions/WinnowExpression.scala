@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -100,14 +99,4 @@ object WinnowFingerprints {
     }
     new GenericArrayData(java.util.Arrays.copyOf(minima, out))
   }
-
-  /** Canonical builder (shared with [[graft.GraftExtensions]]). */
-  def builder(exprs: Seq[Expression]): Expression =
-    WinnowFingerprints(exprs(0),
-      FunctionArgs.intLit("winnow_fingerprints", exprs, 1),
-      FunctionArgs.intLit("winnow_fingerprints", exprs, 2))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fingerprints", builder, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -103,13 +102,4 @@ case class ZValue(children: Seq[Expression]) extends Expression {
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(children = newChildren)
-}
-
-object ZValue {
-  /** Canonical builder (shared with [[graft.GraftExtensions]]). */
-  def builder(exprs: Seq[Expression]): Expression = ZValue(exprs)
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zvalue", builder, "built-in")
 }

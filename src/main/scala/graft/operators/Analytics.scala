@@ -541,11 +541,11 @@ object Analytics {
 
   /** Keep-first dedup: the earliest event per (user, minute) — the
     * classic at-least-once ingestion cleanup. Written in the
-    * `row_number() ≤ 1` idiom, which [[graft.plans.TopKRewriteRule]]
-    * rewrites to bounded per-group heaps (k=1: a running min — no
-    * per-group sort, no spill) in sessions with GraftExtensions; in
-    * plain sessions it runs as a standard window. One shuffle on the
-    * dedup key either way. */
+    * `row_number() ≤ 1` idiom, which runs as Spark's `Window` over a
+    * per-group sort, with Spark's `WindowGroupLimit` trimming each
+    * group to one row before and after the one shuffle on the dedup
+    * key. [[graft.plans.TopK.topKPerGroup]] is the explicit
+    * bounded-heap path (k=1: a running min, no sort). */
   def firstEventPerUserMinute(events: DataFrame): DataFrame = {
     val keyed = events.withColumn("minute_key",
       date_format(date_trunc("minute", col("ts")), "yyyy_MM_dd'T'HH_mm"))

@@ -287,9 +287,9 @@ object Corpus {
     * unknown-size source"). The hash order is a uniform shuffle of
     * each source, so the kept set is an unbiased fixed-size sample
     * that is stable under re-runs, resharding, and corpus growth
-    * upstream of the capped source. The `row_number ≤ k` idiom is
-    * exactly what [[graft.plans.TopKRewriteRule]] rewrites to bounded
-    * per-group heaps — no per-source sort at 100 TB. Output carries
+    * upstream of the capped source. The `row_number ≤ k` idiom runs as
+    * Spark's sorted `Window`, with `WindowGroupLimit` trimming each
+    * source to k rows before the shuffle. Output carries
     * `sample_rank` so downstream can tighten the cap without
     * re-ranking. */
   def capPerSource(documents: DataFrame, k: Int = 50): DataFrame = {

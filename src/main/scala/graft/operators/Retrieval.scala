@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   *  - the query set (thousands of terms at most) broadcasts to the
   *    postings scan, so scoring touches only postings whose term
   *    appears in some query — filter-by-join, no full-corpus scoring;
-  *  - per-query top-k is the `row_number ≤ k` idiom that
-  *    [[graft.plans.TopKRewriteRule]] lowers to bounded per-group
-  *    heaps — no per-query global sort at 100 TB.
+  *  - per-query top-k is the `row_number ≤ k` idiom: Spark's sorted
+  *    `Window`, with `WindowGroupLimit` trimming each query to k rows
+  *    before the shuffle — never a global sort.
   *
   * Cross-engine determinism: the only non-IEEE-reproducible step is
   * `ln`, so the idf is quantized to DECIMAL(18,9) once per term; the
@@ -385,8 +385,8 @@ object Retrieval {
     * through one (doc_id, term) equi-join, so each (query, doc) pair
     * is ONE row with two position arrays; the min-gap is an in-row
     * O(tf_a·tf_b) fold, never a row explosion. Per-query top-k is the
-    * `row_number ≤ k` idiom ([[graft.plans.TopKRewriteRule]] lowers it
-    * to bounded heaps). Output: (qid, prox_rank, doc_id, min_gap). */
+    * `row_number ≤ k` idiom (Spark's sorted `Window`, `WindowGroupLimit`
+    * trims before the shuffle). Output: (qid, prox_rank, doc_id, min_gap). */
   def proximitySearch(documents: DataFrame,
       queries: Seq[(String, String, String)] = ProximityQueries,
       window: Int = 8, k: Int = 10): DataFrame = {

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
 
 /** Similarity search over the `embeddings` table (`embedding:
   * array<float>`, 64-dim).

@@ -719,9 +719,9 @@ object TextAnalysis {
     *     degrades to a shuffle join (same term-hash both sides, no
     *     extra exchange of tf beyond the one it already pays) when it
     *     is not;
-    *  4. per-doc top-k: written as the row_number ≤ k idiom, which
-    *     [[graft.plans.TopKRewriteRule]] rewrites to bounded heaps (no
-    *     partition sort at scale).
+    *  4. per-doc top-k: the row_number ≤ k idiom, run as Spark's sorted
+    *     `Window` with `WindowGroupLimit` trimming each doc to k rows
+    *     before the shuffle ([[graft.plans.TopK]] is the no-sort heap).
     *
     * The ranking key is the score quantized to DECIMAL(20,10) — ties
     * (same tf, same df) are exact in both engines, and a 1-ulp `ln`

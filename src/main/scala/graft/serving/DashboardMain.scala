@@ -1,6 +1,5 @@
 package graft.serving
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.LogEvent
 import graft.sources.{Loggen, Tables}
@@ -34,12 +33,7 @@ object DashboardMain {
     }
     val eventsPerSec = 200
 
-    val spark = graft.EngineSession.withEngineConf(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-dashboard")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.EngineSession.local("4")
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every declared driver-contract query must execute on the smallest
@@ -170,6 +171,72 @@ class ContractSpec extends AnyFunSuite {
     val bad = (SparkEntry.queries.keySet ++ SparkEntry.oracleSql.keySet)
       .filterNot(_.matches("[a-z0-9_]+"))
     assert(bad.isEmpty, s"driver-unsafe query names: $bad")
+  }
+
+  test("Registry.ensure registers every function of its table, each callable from SQL") {
+    import graft.functions.Registry
+    Registry.ensure(spark)
+    val names = Registry.table.map(_._1)
+    assert(names.distinct === names, "a name in the table twice shadows a builder")
+    val missing = names.filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"not registered: $missing")
+    def one(sql: String) = spark.sql(sql).collect()(0)
+    assert(one(
+      """SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
+        |               array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d"""
+        .stripMargin).getDouble(0) === 11.0)
+    assert(one("SELECT size(minhash_sig(split('a b c d e', ' '), 4, 64)) AS n")
+      .getInt(0) === 64)
+    assert(one("SELECT size(winnow_fingerprints('abcdefghijklmnop', 8, 4)) AS n")
+      .getInt(0) >= 1)
+    // poly_hash62 reference values: the portable definition is pinned —
+    // h131("ab") = (97*131+98) = 12805, h137("ab") = (97*137+98) = 13387
+    assert(one("SELECT poly_hash62('ab') AS h").getLong(0)
+      === (12805L | (13387L << 31)))
+    // the per-row kernel agrees with the aggregate formulation
+    val pair = one(
+      """SELECT simhash64(array('a', 'b')) AS d,
+        |  (SELECT simhash_agg(poly_hash62(t), 1L) FROM VALUES ('a'), ('b') AS v(t)) AS a"""
+        .stripMargin)
+    assert(pair.getLong(1) !== 0L)
+    assert(pair.getLong(0) === pair.getLong(1))
+    assert(one(
+      "SELECT map_keys(topk_sketch(t, 1, 8))[0] AS top FROM VALUES ('a'), ('b'), ('a') AS v(t)")
+      .getString(0) === "a")
+    val ng = one("SELECT ngram_stats(split('a b a b a b', ' '), 3) AS st").getStruct(0)
+    assert((ng.getLong(0), ng.getLong(1)) === (4L, 2L))
+    val vs = one(
+      """SELECT vec_sum(v) AS s FROM VALUES
+        |  (array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))),
+        |  (array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS t(v)""".stripMargin)
+      .getStruct(0)
+    assert(vs.getSeq[Double](0) === Seq(4.0, 6.0))
+    assert(vs.getLong(1) === 2L)
+  }
+
+  test("one way into a session: only EngineSession builds one, and nothing injects Catalyst extensions") {
+    // src/main with comments blanked out (string literals kept), the way
+    // tools/unreached.py reads it, so a doc that names an API is no use
+    val tq = "\"\"\""
+    val token = (tq + """[\s\S]*?""" + tq +
+      """|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'|//[^\n]*|/\*[\s\S]*?\*/""").r
+    def code(f: java.nio.file.Path): String = token.replaceAllIn(
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8"), m =>
+        scala.util.matching.Regex.quoteReplacement(
+          if (m.matched.head == '"' || m.matched.head == '\'') m.matched
+          else m.matched.replaceAll("[^\n]", " ")))
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val src = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => root.relativize(f).toString -> code(f)).toMap
+      finally walk.close()
+    }
+    assert(src.size > 50, s"scanned only ${src.keys} under ${root.toAbsolutePath}")
+    def naming(s: String) = src.collect { case (f, t) if t.contains(s) => f }.toSet
+    assert(naming("SparkSession.builder") === Set("graft/EngineSession.scala"))
+    assert(naming("SparkSessionExtensions").isEmpty)
+    assert(naming("Rule[LogicalPlan]").isEmpty)
   }
 
   test("the engine ships one streaming query: startPipeline is StreamingMetrics' only starter") {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Result-cardinality probe (test scope): count a catalog query's
   * output rows at several data dirs in one session — the evidence tool
@@ -11,10 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object CountRows {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = EngineSession.local("32")
     spark.sparkContext.setLogLevel("ERROR")
     val name = args(0)
     require(SparkEntry.queries.contains(name), s"unknown query $name")

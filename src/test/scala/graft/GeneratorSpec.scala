@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.CharNgrams
+import graft.functions.Registry
 
 /** The custom char_ngrams Generator: fan-out semantics, edge rows,
   * code-point handling, and equivalence with the array formulation. */
@@ -11,7 +11,7 @@ class GeneratorSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def grams(text: String, n: Int): Seq[String] = {
-    CharNgrams.register(spark)
+    Registry.ensure(spark)
     Seq(Option(text)).toDF("text")
       .select(expr(s"char_ngrams(text, $n)").as("gram"))
       .as[String].collect().toSeq
@@ -34,7 +34,7 @@ class GeneratorSpec extends AnyFunSuite {
   }
 
   test("matches the explode(array) formulation on real docs") {
-    CharNgrams.register(spark)
+    Registry.ensure(spark)
     val docs = graft.sources.Tables.documents(spark, TestSpark.Sf0001)
       .limit(50).cache()
     val viaGen = docs
@@ -51,7 +51,7 @@ class GeneratorSpec extends AnyFunSuite {
   }
 
   test("rejects non-string input and bad n at analysis time") {
-    CharNgrams.register(spark)
+    Registry.ensure(spark)
     intercept[Exception] {
       Seq(1).toDF("x").selectExpr("char_ngrams(x, 2)").collect()
     }

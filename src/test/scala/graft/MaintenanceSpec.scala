@@ -70,7 +70,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("zvalue interleaves bits round-robin and propagates nulls") {
-    graft.functions.ZValue.register(spark)
+    graft.functions.Registry.ensure(spark)
     import org.apache.spark.sql.functions.expr
     // x = 0b1010, y = 0b0101 interleave (x bit i -> out 2i, y -> 2i+1):
     // x sets out bits {2,6}, y sets {1,5} -> 01100110 = 0x66; swapping
@@ -93,7 +93,7 @@ class MaintenanceSpec extends AnyFunSuite {
   }
 
   test("zvalue matches a random-input reference through codegen") {
-    graft.functions.ZValue.register(spark)
+    graft.functions.Registry.ensure(spark)
     import org.apache.spark.sql.functions.expr
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(200)((rnd.nextLong().abs & 0xffffL,

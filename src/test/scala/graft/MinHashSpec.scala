@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.{MinHashFunctions, MinHashSig, MinHashBands}
+import graft.functions.{MinHashBands, MinHashSig, Registry}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -65,7 +65,7 @@ class MinHashSpec extends AnyFunSuite {
     // CODEGEN_ONLY makes a codegen failure an error instead of a silent
     // interpreted fallback — this is the proof doGenCode compiles
     import spark.implicits._
-    MinHashFunctions.register(spark)
+    Registry.ensure(spark)
     val df = Seq(
       (1L, "a b c d e f g h"),
       (2L, "a b c d e f g h"),

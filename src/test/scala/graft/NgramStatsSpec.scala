@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.NgramStats
+import graft.functions.{NgramStats, Registry}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,7 +27,7 @@ class NgramStatsSpec extends AnyFunSuite {
 
   test("agrees with the higher-order-function formulation on real docs") {
     val docs = graft.sources.Tables.documents(spark, TestSpark.Sf0001).limit(50)
-    NgramStats.register(spark)
+    Registry.ensure(spark)
     val kernel = docs
       .select(col("doc_id"), expr("ngram_stats(split(text, ' '), 3)").as("st"))
       .select(col("doc_id"), col("st.n_ngrams"), col("st.n_distinct_ngrams"))
@@ -55,7 +55,7 @@ class NgramStatsSpec extends AnyFunSuite {
 
   test("generated code path agrees with eval (no silent codegen fallback)") {
     import spark.implicits._
-    NgramStats.register(spark)
+    Registry.ensure(spark)
     val df = Seq((1L, "a b a b a b"), (2L, "p q r s t"))
       .toDF("id", "text")
       .select(col("id"), expr("ngram_stats(split(text, ' '), 3)").as("st"))

@@ -109,9 +109,8 @@ class PcaSpec extends AnyFunSuite {
     // the property that makes the PCA fit incremental at 100 TB: per-
     // shard triangles merge by addition, so a new shard never rescans
     // the corpus
-    import graft.functions.GramAgg
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
-    GramAgg.register(spark)
+    graft.functions.Registry.ensure(spark)
     def gram(df: org.apache.spark.sql.DataFrame): (Array[Double], Long) = {
       val r = df.agg(expr("vec_gram(embedding)").as("g")).head().getStruct(0)
       (r.getSeq[Double](0).toArray, r.getLong(1))

@@ -26,7 +26,7 @@ class TopKSketchSpec extends AnyFunSuite {
     // update-mode streaming aggregate: incremental batches must agree
     // with the one-shot batch result in the exact (no-eviction) regime
     implicit val sq = spark.sqlContext
-    graft.functions.TopKSketchFunctions.register(spark)
+    graft.functions.Registry.ensure(spark)
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
     val q = input.toDS().toDF("tok")
       .agg(expr("topk_sketch(tok, 3, 64)").as("m"))
@@ -44,7 +44,7 @@ class TopKSketchSpec extends AnyFunSuite {
 
   test("under eviction pressure the heavy hitter survives and is never undercounted") {
     // 500x "hot" among 100 distinct cold tokens, capacity 16
-    graft.functions.TopKSketchFunctions.register(spark)
+    graft.functions.Registry.ensure(spark)
     val words = (Seq.fill(500)("hot") ++ (1 to 300).map(i => s"cold${i % 100}"))
     val df = spark.createDataset(scala.util.Random.shuffle(words)).toDF("tok")
       .repartition(4)
