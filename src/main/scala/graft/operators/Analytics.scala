@@ -1722,18 +1722,15 @@ object Analytics {
     * replicate (replicate, n_eff, mean_value) — the replicate
     * DISTRIBUTION, from which any CI quantile follows; the full-data
     * mean rides along for centering. */
-  def valueBootstrapCi(events: DataFrame, replicates: Int = 32,
-      kernel: String = "md5"): DataFrame = {
+  def valueBootstrapCi(events: DataFrame,
+      replicates: Int = 32): DataFrame = {
     val mult = PoissonMult
     events
       .select(col("event_id"), col("value"))
       .where(col("value").isNotNull)
       .select(col("event_id"), col("value"),
         explode(array((0 until replicates).map(lit): _*)).as("replicate"))
-      // raw typed key: the md5 branch re-wraps it in CAST(... AS
-      // STRING) (draws stay bit-identical to the oracle), while
-      // xxhash64 hashes the typed column directly — no string render
-      .withColumn("u", expr(bootstrapU(kernel, "event_id", "replicate")))
+      .withColumn("u", expr(bootstrapU("event_id", "replicate")))
       .withColumn("m", expr(mult))
       .groupBy(col("replicate"))
       .agg(sum(col("m")).cast("long").as("n_eff"),
@@ -1745,39 +1742,18 @@ object Analytics {
       .orderBy("replicate")
   }
 
-  /** The bootstrap draw u ∈ (0, 1] over the given key columns —
-    * kernel-selectable because the draws DOMINATE the bootstrap's
-    * cost at scale (§7.11: ~470M md5 evaluations at the win-rate
-    * face's 100× point):
-    *
-    *  - `"md5"` (default, the catalog faces): dyadic uniform from the
-    *    md5 prefix of the ':'-joined string key — the ORACLE-PARITY
-    *    kernel (DuckDB ships md5; every draw is bit-identical across
-    *    engines, so the resample CIs hash-match).
-    *  - `"xxhash64"`: Spark-native codegen'd 64-bit hash taken
-    *    DIRECTLY over the typed key columns — no string rendering, no
-    *    digest; the flag-gated scale kernel for production runs with
-    *    no cross-engine twin (measured §7.13). Statistically
-    *    equivalent (either kernel is a deterministic stand-in for
-    *    iid uniforms feeding the same Poisson inverse-CDF), but the
-    *    draws differ, so CIs differ within bootstrap noise — never
-    *    flip the kernel under a pinned face.
-    *
-    * Both map to (hash mod 2³²  + 1) / 2³², so u = 0 is unreachable
-    * and u = 1 folds into the CDF's ELSE arm in both kernels. */
-  private[graft] def bootstrapU(kernel: String,
-      keys: String*): String = kernel match {
-    case "md5" =>
-      s"""(CAST(conv(substring(md5(${keys.map(k =>
-        s"CAST($k AS STRING)").mkString(" || ':' || ")}),
-        |  1, 8), 16, 10) AS BIGINT) + 1)
-        |/ CAST(4294967296 AS DOUBLE)""".stripMargin
-    case "xxhash64" =>
-      s"""(pmod(xxhash64(${keys.mkString(", ")}), 4294967296L) + 1)
-        |/ CAST(4294967296 AS DOUBLE)""".stripMargin
-    case other => throw new IllegalArgumentException(
-      s"unknown bootstrap kernel '$other' (md5 | xxhash64)")
-  }
+  /** The bootstrap draw u ∈ (0, 1] over the given key columns: a
+    * dyadic uniform (md5 prefix mod 2³² + 1) / 2³² of the ':'-joined
+    * string key. DuckDB ships md5, so every draw is bit-identical
+    * across engines and the resample CIs hash-match their oracles.
+    * u = 0 is unreachable and u = 1 folds into the CDF's ELSE arm.
+    * SCALE.md §7.13 measured a codegen'd xxhash64 draw as a scale
+    * alternative; it had no oracle twin and won no catalog face. */
+  private[graft] def bootstrapU(keys: String*): String =
+    s"""(CAST(conv(substring(md5(${keys.map(k =>
+      s"CAST($k AS STRING)").mkString(" || ':' || ")}),
+      |  1, 8), 16, 10) AS BIGINT) + 1)
+      |/ CAST(4294967296 AS DOUBLE)""".stripMargin
 
   /** Poisson(1) inverse CDF over a dyadic uniform column `u`, at
     * cumulative breakpoints e⁻¹·Σ 1/k! (k = 0..5; P(X > 5) ≈ 6e-4

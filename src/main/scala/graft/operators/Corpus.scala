@@ -175,37 +175,30 @@ object Corpus {
       |FROM per CROSS JOIN tot
       |ORDER BY source""".stripMargin
 
+  // share^0.25, spelled identically in both engines
+  private val TemperaturePow = "sqrt(sqrt(natural_share))"
+
   /** Language temperature resampling (the mT5/XLM-R multilingual
     * mixing pass): per-language sampling probability
-    * `p_l ∝ share_l^α` with `α < 1` flattening the natural language
+    * `p_l ∝ share_l^α` at `α = 0.25`, flattening the natural language
     * distribution so low-resource languages are upsampled — published
     * per language with the natural share and the effective
     * `boost = p_l / share_l` the training sampler must apply.
     *
-    * `α` is restricted to the DYADIC grid {0.25, 0.5, 0.75}
-    * (`alphaQuarters`/4) so the power is a composition of IEEE
-    * correctly-rounded `sqrt`s (`x^0.25 = sqrt(sqrt(x))`,
-    * `x^0.75 = sqrt(x)·sqrt(sqrt(x))` — one exact multiply of two
-    * correctly-rounded values) — bit-identical cross-engine, where
-    * libm `pow` tails differ (the [[mixtureWeights]] scaladoc's
-    * promised extension). Masses are then floor-quantized to integer
-    * nanos and summed as BIGINT (exact), and each published
-    * probability is one final int→double division.
+    * `α = 0.25` makes the power a composition of two IEEE
+    * correctly-rounded `sqrt`s (`x^0.25 = sqrt(sqrt(x))`) —
+    * bit-identical cross-engine, where libm `pow` tails differ (the
+    * [[mixtureWeights]] scaladoc's promised extension). Masses are
+    * then floor-quantized to integer nanos and summed as BIGINT
+    * (exact), and each published probability is one final int→double
+    * division.
     *
     * Scale shape: ONE corpus scan into a lang-keyed aggregate
     * (output rows = languages, inherently bounded), a 1-row broadcast
     * total, and a window sum over the lang-bounded frame — no
     * corpus-sized state anywhere. Output: `(lang, n_docs, n_tokens,
     * natural_share, sample_prob, boost)`. */
-  def langTemperatureMix(documents: DataFrame,
-      alphaQuarters: Int = 1): DataFrame = {
-    require(alphaQuarters >= 1 && alphaQuarters <= 3,
-      s"alphaQuarters must be 1..3 (α = 0.25/0.5/0.75), got $alphaQuarters")
-    val pw = alphaQuarters match {
-      case 1 => "sqrt(sqrt(natural_share))"
-      case 2 => "sqrt(natural_share)"
-      case 3 => "sqrt(natural_share) * sqrt(sqrt(natural_share))"
-    }
+  def langTemperatureMix(documents: DataFrame): DataFrame = {
     val per = documents
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
@@ -215,7 +208,7 @@ object Corpus {
       .withColumn("natural_share",
         expr("CAST(n_tokens AS DOUBLE) / CAST(tot AS DOUBLE)"))
       .withColumn("w",
-        expr(s"CAST(floor($pw * 1000000000.0d + 0.5d) AS BIGINT)"))
+        expr(s"CAST(floor($TemperaturePow * 1000000000.0d + 0.5d) AS BIGINT)"))
       // full-frame window sum: the frame is lang-bounded (≤ a few
       // hundred rows at any corpus size), the EWMA single-task
       // precedent — NOT corpus-proportional
@@ -231,12 +224,7 @@ object Corpus {
 
   /** DuckDB replay of [[langTemperatureMix]]: same sqrt-composition
     * power, same integer-nanos quantization and BIGINT sum. */
-  def langTemperatureMixSql(alphaQuarters: Int = 1): String = {
-    val pw = alphaQuarters match {
-      case 1 => "sqrt(sqrt(natural_share))"
-      case 2 => "sqrt(natural_share)"
-      case 3 => "sqrt(natural_share) * sqrt(sqrt(natural_share))"
-    }
+  def langTemperatureMixSql(): String =
     s"""WITH per AS (
        |  SELECT lang, count(*)::BIGINT AS n_docs,
        |    sum(len(string_split(text, ' ')))::BIGINT AS n_tokens
@@ -247,7 +235,7 @@ object Corpus {
        |    CAST(n_tokens AS DOUBLE) / CAST(tot AS DOUBLE) AS natural_share
        |  FROM per CROSS JOIN tot),
        |w AS (
-       |  SELECT *, CAST(floor($pw * 1000000000.0 + 0.5) AS BIGINT) AS w
+       |  SELECT *, CAST(floor($TemperaturePow * 1000000000.0 + 0.5) AS BIGINT) AS w
        |  FROM sh),
        |f AS (
        |  SELECT lang, n_docs, n_tokens, natural_share,
@@ -257,7 +245,6 @@ object Corpus {
        |SELECT lang, n_docs, n_tokens, natural_share, sample_prob,
        |  sample_prob / natural_share AS boost
        |FROM f ORDER BY lang""".stripMargin
-  }
 
   def mixtureSample(documents: DataFrame, rates: Map[String, Int],
       defaultPct: Int = 100): DataFrame =

@@ -246,25 +246,20 @@ object Preference {
     * pair with NO surviving replicate still surfaces (left join from
     * the point estimate) with NULL ci bounds and significant=false.
     *
-    * `kernel` picks the draw ([[Analytics.bootstrapU]]): `"md5"`
-    * (default, the catalog face) is the oracle-parity kernel;
-    * `"xxhash64"` is the flag-gated scale kernel — the draws are the
-    * dominant cost at the 100× point (§7.11) and the codegen'd typed
-    * hash skips the string render + digest (measured §7.13). Point
-    * estimates are kernel-independent; CIs differ within bootstrap
-    * noise.
+    * The draws are [[Analytics.bootstrapU]]'s md5 uniforms, so the
+    * CIs hash-match the DuckDB oracle.
     *
     * Output: (experiment_id, item_a, item_b, n_comparisons, wins_a,
     * win_rate, ci_lo, ci_hi, significant) ordered by the three keys. */
   def winrateBootstrapCi(events: DataFrame,
-      replicates: Int = 200, kernel: String = "md5"): DataFrame = {
+      replicates: Int = 200): DataFrame = {
     val comps = winrateComps(winrateUt(events))
       // judge-bounded frame read twice (point estimate + the ×B
       // bootstrap) — the cache boundary keeps it ONE events scan and
       // one array expansion (the btStrength convention; released by
       // the ContextCleaner when the caller drops the frame)
       .persist()
-    winrateFromComps(comps, replicates, kernel)
+    winrateFromComps(comps, replicates)
   }
 
   /** The (experiment, user, item) exact-DECIMAL value-total grain of
@@ -303,7 +298,7 @@ object Preference {
     * drift between the two. Caller owns comps' caching (it is read
     * twice: point estimate and the ×B resample). */
   private[graft] def winrateFromComps(comps: DataFrame,
-      replicates: Int, kernel: String): DataFrame = {
+      replicates: Int): DataFrame = {
     require(replicates >= 40,
       s"need >= 40 replicates for 2.5% order statistics, got $replicates")
     val point = comps
@@ -315,7 +310,7 @@ object Preference {
       .select(col("experiment_id"), col("user_id"), col("item_a"),
         col("item_b"), col("win_a"),
         explode(expr(s"sequence(0, ${replicates - 1})")).as("replicate"))
-      .withColumn("u", expr(Analytics.bootstrapU(kernel,
+      .withColumn("u", expr(Analytics.bootstrapU(
         "experiment_id", "user_id", "item_a", "item_b", "replicate")))
       .withColumn("m", expr(Analytics.PoissonMult))
       .groupBy(col("experiment_id"), col("item_a"), col("item_b"),

@@ -1707,8 +1707,8 @@ object Similarity {
     * lost — rows-only query, recall measured against [[knnBruteForce]]
     * in tests.
     *
-    * MULTI-PROBE: each query probes its own bucket plus every 1-bit
-    * neighbor bucket per table (`multiProbe = 1`; 0 disables). A true
+    * MULTI-PROBE: each query always probes its own bucket plus every
+    * 1-bit neighbor bucket per table, as its SQL twin does. A true
     * neighbor lands in an adjacent bucket whenever exactly one
     * hyperplane splits the pair — by far the most likely miss — so
     * probing the nBits neighbors recovers most of it for a
@@ -1717,18 +1717,16 @@ object Similarity {
     * trade: same recall lift as ~5× more tables at a fraction of the
     * index size (Lv et al., "Multi-Probe LSH", VLDB'07). */
   def knnLsh(embeddings: DataFrame, k: Int = 10, queryMod: Int = 100,
-      nBits: Int = 6, nTables: Int = 4, multiProbe: Int = 1): DataFrame = {
+      nBits: Int = 6, nTables: Int = 4): DataFrame = {
     // both the query side and the candidate side consume the keyed
     // frame — persist the 32-projection hashing pass
     val keyed = lshKeys(embeddings, nBits, nTables)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val qExact = keyed
+    val queries = keyed
       .where(pmod(col("vec_id"), lit(queryMod)) === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("table_id").as("q_table"), col("bucket").as("q_bucket"))
-    val queries =
-      if (multiProbe <= 0) qExact
-      else qExact.select(col("query_id"), col("q_emb"), col("q_table"),
+      .select(col("query_id"), col("q_emb"), col("q_table"),
         explode(array(col("q_bucket") +: (0 until nBits).map(j =>
           col("q_bucket").bitwiseXOR(lit(1L << j))): _*)).as("q_bucket"))
     val candidates = keyed
@@ -2168,53 +2166,20 @@ object Similarity {
     * own convergence result says 2–3 rounds capture most of the
     * recall at this k.
     *
-    * `rho` < 1 enables Dong et al.'s §3.2 SAMPLED local join —
-    * keep ⌈ρ·2k⌉ adjacency entries per shared neighbor (fresh
-    * deterministic draw each round), shrinking candidate volume by
-    * ρ². **Measured negative result at THIS configuration** (k = 10,
-    * rounds = 2, SCALE.md §7.11): recall@10 falls 0.90 → 0.26 at
-    * ρ = 0.5 (0.32 even with a third round), because at fixed small
-    * rounds the descent's reach grows like (ρ·2k)^r — the paper's
-    * "minor loss" holds only for until-convergence runs where extra
-    * rounds repay the thinning, by which point ρ²·rounds ≥ the full
-    * join's work here. The flag stays for the regime it serves
-    * (large k, many rounds); the catalog face runs ρ = 1. The
-    * lossless alternative (skip old×old pairs — provably never
-    * re-enter a tightening top-k) prunes nothing at rounds = 2
-    * either: round-0 → 1 churn is near-total and only 30 % of edges
-    * are still new by round 2 (measured, §7.11).
-    *
-    * `churnExit` > 0 enables the paper's §2.3 termination criterion:
-    * stop when the fraction of edges that changed this round falls
-    * below ε — the measured-and-safe lever the rejected ρ-sampling
-    * wasn't, because it only skips rounds AFTER the graph stopped
-    * moving (recall is already banked) instead of thinning the reach
-    * of every round. Matters at rounds > 2, where deep descent
-    * otherwise pays full-join rounds that re-propose a settled
-    * graph; at the default rounds = 2 the exit can fire at most once
-    * and the catalog face keeps ε = 0 (fixed rounds, band-stable).
-    * Measured rounds-to-converge at sf0.01/sf0.1: SCALE.md §7.12.
-    *
-    * DEFAULT DECISION (r18, closing the §7.12 measurement): ε = 0
-    * stays the default. The measured trade — ε = 0.05 saves 33–40 %
-    * of rounds at 96–99 % of plateau recall — only pays at
-    * rounds ≥ 4, a depth no catalog face runs (the face's rounds = 2
-    * budget is already below every measured convergence point), while
-    * a data-dependent round count would make the face's wall-clock
-    * band bimodal and useless for cross-round regression diffing.
-    * Production deep descents (rounds ≥ 4) should set ε = 0.05; the
-    * catalog keeps the fixed-rounds plan byte-identical to the
-    * pinned band.
+    * Every round runs the FULL local join over fixed `rounds`: no
+    * sampled join and no early exit. SCALE.md §7.11 measured Dong et
+    * al.'s §3.2 ρ-sampled join at this configuration (k = 10,
+    * rounds = 2): recall@10 fell 0.90 → 0.26 at ρ = 0.5, because at
+    * fixed small rounds the descent's reach grows like (ρ·2k)^r.
+    * §7.12 measured the §2.3 churn exit: it saves rounds only at
+    * rounds ≥ 4, a depth no catalog face runs, and a data-dependent
+    * round count would make the face's timing bimodal.
     *
     * Output: (node_id, neighbor_id, rank) for every node, ordered by
     * (node_id, rank) — the [[knnBruteForce]] shape over all nodes. */
   def nnDescentGraph(embeddings: DataFrame, k: Int = 10,
-      rounds: Int = 2, rho: Double = 1.0,
-      churnExit: Double = 0.0): DataFrame = {
+      rounds: Int = 2): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k,rounds >= 1; got $k,$rounds")
-    require(rho > 0.0 && rho <= 1.0, s"need 0 < rho <= 1; got $rho")
-    require(churnExit >= 0.0 && churnExit < 1.0,
-      s"need 0 <= churnExit < 1; got $churnExit")
     graft.functions.Registry.ensure(embeddings.sparkSession)
     // eager: the embedding-carrying rank is materialized once and the
     // `nodes` cache built from it — the configuration the r19 NND
@@ -2259,30 +2224,9 @@ object Similarity {
     // when the caller drops the frame — the btStrength convention);
     // every earlier generation is gone.
     var edges = nndTopK(nndScore(init, nodes), k).persist()
-    var r = 1
-    var converged = false
-    while (r <= rounds && !converged) {
-      val symAll = edges.select(col("a"), col("b"))
+    for (r <- 1 to rounds) {
+      val sym = edges.select(col("a"), col("b"))
         .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      // ρ-sampling (Dong et al. §3.2): keep ⌈ρ·2k⌉ adjacency entries
-      // PER SHARED-NEIGHBOR before the self-join, so the candidate
-      // volume shrinks ρ² while every node stays represented each
-      // round (a global hash-thinning variant measured recall 0.20
-      // vs 0.76 at the fixture — nodes that lose their whole list
-      // for a round propose nothing and never recover at fixed
-      // rounds). The round index seeds the per-node draw so each
-      // round samples a different subset; the window is PARTITIONED
-      // (one hash shuffle on the shared-neighbor key, same exchange
-      // the local join needs anyway).
-      val sym = if (rho >= 1.0) symAll
-        else {
-          val wS = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("a"))
-            .orderBy(expr(s"xxhash64(a, b, ${r}L)"), col("b"))
-          symAll.withColumn("__rs", row_number().over(wS))
-            .where(col("__rs") <= math.ceil(rho * 2 * k).toLong)
-            .drop("__rs")
-        }
       // local join: nodes sharing a current neighbor, each unordered
       // pair proposed once then mirrored.
       val cand = sym.as("x").join(sym.as("y"),
@@ -2335,22 +2279,7 @@ object Similarity {
         if (r < rounds && r >= 2) nndTopK(merged, k).localCheckpoint(true)
         else nndTopK(merged, k).persist()
       if (r < rounds) {
-        val total = next.count()
-        // churn exit (Dong et al. §2.3's termination criterion, made
-        // optional): when the fraction of edges NEW this round drops
-        // below ε, further rounds re-propose what the top-k already
-        // holds — stop descending. The measurement rides the
-        // materialization barrier mid-rounds already pay (one extra
-        // left_anti count against the still-cached predecessor); the
-        // FINAL round stays lazy and unmeasured, preserving the
-        // recall-twin parallelism trade. ε = 0 (default) disables —
-        // fixed rounds, byte-identical plan to the pre-flag face.
-        if (churnExit > 0.0 && total > 0L) {
-          val fresh = next.select(col("a"), col("b"))
-            .join(edges.select(col("a"), col("b")), Seq("a", "b"),
-              "left_anti").count()
-          converged = fresh.toDouble / total.toDouble < churnExit
-        }
+        next.count()
         // explicit release works only for PERSISTED predecessors (the
         // round-1 frame): unpersist() clears CacheManager entries and
         // is a documented no-op on a localCheckpoint'd frame's RDD
@@ -2363,7 +2292,6 @@ object Similarity {
         edges.unpersist()
       }
       edges = next
-      r += 1
     }
     // the returned frame stays LAZY over the final round's cache and
     // the node frame, so a caller's filter (nnDescentRecall keeps 1%
@@ -2373,7 +2301,6 @@ object Similarity {
     // release via the ContextCleaner when the caller drops the frame
     // (the btStrength convention); only SUPERSEDED round frames are
     // unpersisted above.
-    lastDescentRounds.set(r - 1)
     edges
       .join(nodes.select(col("idx").as("a"), col("vec_id").as("node_id")),
         Seq("a"))
@@ -2382,13 +2309,6 @@ object Similarity {
       .select(col("node_id"), col("neighbor_id"), col("rank"))
       .orderBy("node_id", "rank")
   }
-
-  // rounds the last nnDescentGraph call actually DESCENDED (the
-  // churn exit can stop before `rounds`) — a measurement/diagnostic
-  // readout for ContractSpec and the SCALE.md convergence table,
-  // never consulted by any operator
-  private[graft] val lastDescentRounds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
 
   // score (a, b) idx pairs: two idx-keyed joins against the persisted
   // node frame, one codegen'd vec_dot per pair
@@ -2414,13 +2334,11 @@ object Similarity {
     * baseline on the [[knnBruteForce]] query sample — the graph's
     * measured-quality face (one row; ContractSpec floors it). */
   def nnDescentRecall(embeddings: DataFrame, k: Int = 10,
-      rounds: Int = 2, queryMod: Int = 100,
-      rho: Double = 1.0, churnExit: Double = 0.0): DataFrame = {
-    val graph = nnDescentGraph(embeddings, k, rounds, rho, churnExit)
+      rounds: Int = 2, queryMod: Int = 100): DataFrame = {
+    val graph = nnDescentGraph(embeddings, k, rounds)
       .where(pmod(col("node_id"), lit(queryMod)) === 0)
       .select(col("node_id").as("query_id"), col("neighbor_id"))
-    val tag = if (rho >= 1.0) "" else s"_p${math.round(rho * 100)}"
     annRecall(knnBruteForce(embeddings, k, queryMod), graph,
-      s"nnd_k${k}_r$rounds$tag")
+      s"nnd_k${k}_r$rounds")
   }
 }

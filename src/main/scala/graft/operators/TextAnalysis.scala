@@ -1090,17 +1090,19 @@ object TextAnalysis {
     * (1 driver row per merge — legitimate), and rewrite symbol arrays
     * with a greedy left-to-right fold. `localCheckpoint` truncates the
     * per-iteration lineage so plan depth stays O(1), not O(merges).
-    * At 100 TB the word count dominates and parallelizes perfectly;
-    * training is also routinely run on a sample (`samplePct`).
+    * At 100 TB the word count dominates and parallelizes perfectly.
+    * Training always reads the whole corpus: the trained vocabulary
+    * is also [[bpeEncode]]'s segmentation table, so every corpus word
+    * has an entry.
     *
     * Ties break deterministically (higher weight, then lexicographic
     * pair); merges stop early when the best pair drops below
     * `minCount`. Output: (rank, pair_a, pair_b, merged, weight). */
   def bpeTrain(documents: DataFrame, nMerges: Int = 16,
-      minCount: Long = 2, samplePct: Int = 100): DataFrame = {
+      minCount: Long = 2): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    bpeTrainSeg(documents, nMerges, minCount, samplePct)._1
+    bpeTrainSeg(documents, nMerges, minCount)._1
       .toDF("rank", "pair_a", "pair_b", "merged", "weight")
       .orderBy("rank")
   }
@@ -1118,40 +1120,39 @@ object TextAnalysis {
     * (corpus, params) per live context; entries from dead contexts
     * are evicted on the next lookup. */
   private val bpeTrained = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Long, Int), (Seq[(Int, String, String, String, Long)], DataFrame)]()
+    (String, Int, Int, Long), (Seq[(Int, String, String, String, Long)], DataFrame)]()
   private val wpTrained = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Long, Int), (Seq[(Int, String, String, String, Long, Long)], DataFrame)]()
+    (String, Int, Int, Long), (Seq[(Int, String, String, String, Long, Long)], DataFrame)]()
 
-  private def memoKey(documents: DataFrame, nMerges: Int, minCount: Long,
-      samplePct: Int): (String, Int, Int, Long, Int) =
+  private def memoKey(documents: DataFrame, nMerges: Int,
+      minCount: Long): (String, Int, Int, Long) =
     (documents.sparkSession.sparkContext.applicationId,
-      documents.queryExecution.analyzed.semanticHash(), nMerges, minCount,
-      samplePct)
+      documents.queryExecution.analyzed.semanticHash(), nMerges, minCount)
 
   /** Drop memo entries whose owning context is not the live one —
     * their checkpointed blocks are unreachable anyway. */
   private def evictDead[V](m: java.util.concurrent.ConcurrentHashMap[
-      (String, Int, Int, Long, Int), V], live: String): Unit =
+      (String, Int, Int, Long), V], live: String): Unit =
     m.keySet.removeIf(_._1 != live)
 
   /** Shared trainer: returns the merge list AND the post-training
     * word→symbols vocabulary (which IS the segmentation table
     * [[bpeEncode]] joins against — no replay at encode time). */
   private def bpeTrainSeg(documents: DataFrame, nMerges: Int,
-      minCount: Long, samplePct: Int)
+      minCount: Long)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
     evictDead(bpeTrained, documents.sparkSession.sparkContext.applicationId)
     bpeTrained.computeIfAbsent(
-      memoKey(documents, nMerges, minCount, samplePct),
-      _ => bpeTrainSegUncached(documents, nMerges, minCount, samplePct))
+      memoKey(documents, nMerges, minCount),
+      _ => bpeTrainSegUncached(documents, nMerges, minCount))
   }
 
   private def bpeTrainSegUncached(documents: DataFrame, nMerges: Int,
-      minCount: Long, samplePct: Int)
+      minCount: Long)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
     val spark = documents.sparkSession
     import spark.implicits._
-    var vocab = symbolVocab(documents, samplePct)
+    var vocab = symbolVocab(documents)
     def lit1(s: String) = s.replace("\\", "\\\\").replace("'", "\\'")
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var rank = 0
@@ -1186,12 +1187,8 @@ object TextAnalysis {
     * regardless of corpus size; one map-side-combined shuffle), each
     * word split to its character symbols. `localCheckpoint` so every
     * merge round rereads the materialized table, not the corpus. */
-  private def symbolVocab(documents: DataFrame, samplePct: Int): DataFrame = {
-    val sampled =
-      if (samplePct >= 100) documents
-      else documents.where(
-        pmod(xxhash64(col("doc_id")), lit(100)) < samplePct)
-    sampled
+  private def symbolVocab(documents: DataFrame): DataFrame =
+    documents
       .select(explode(split(col("text"), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
@@ -1199,7 +1196,6 @@ object TextAnalysis {
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
           .as("syms"), col("cnt"))
       .localCheckpoint()
-  }
 
   /** Greedy left-to-right merge rewrite shared by the BPE and
     * WordPiece trainers: a fold that merges `[.., a] + b` into
@@ -1235,7 +1231,7 @@ object TextAnalysis {
           .mkString("\nUNION ALL\n")}
        |ORDER BY rank""".stripMargin
 
-  /** DuckDB replay of [[bpeEncode]] (samplePct=100): the round-`n`
+  /** DuckDB replay of [[bpeEncode]]: the round-`n`
     * vocabulary from [[bpeTrainSql]]'s chain IS the word→pieces map;
     * encoding is the same corpus-word join and per-source rollup. */
   def bpeEncodeSql(nMerges: Int = 16, minCount: Long = 2): String = {
@@ -1295,13 +1291,14 @@ object TextAnalysis {
     * equi-join from corpus words to their segmentation — no per-merge
     * work at read time. Output: per-source subword statistics. */
   def bpeEncode(documents: DataFrame, nMerges: Int = 16,
-      minCount: Long = 2, samplePct: Int = 100): DataFrame = {
-    val (_, seg) = bpeTrainSeg(documents, nMerges, minCount, samplePct)
+      minCount: Long = 2): DataFrame = {
+    val (_, seg) = bpeTrainSeg(documents, nMerges, minCount)
     documents
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .where(length(col("w")) > 0)
-      // left join: words outside a sampled training set fall back to
-      // their character segmentation (the untrained encoding)
+      // left join + character fallback: training reads this same
+      // corpus, so on a deterministic input every word has a seg entry
+      // and the fallback does not fire
       .join(seg, Seq("w"), "left")
       .withColumn("syms", coalesce(col("syms"),
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")))
@@ -1343,16 +1340,16 @@ object TextAnalysis {
     * 64-bit operands — so the argmax (score desc, then lexicographic
     * pair) is deterministic and DuckDB-replayable with zero FP.
     * Operand bound: `c_a * c_b < 2^63` holds to ~3·10⁹ symbol
-    * occurrences; past that, train on `samplePct` (the standard
-    * practice the BPE face already documents). Merging stops when the
-    * best pair's raw frequency drops below `minCount`.
+    * occurrences; training reads the whole corpus (as [[bpeTrain]]
+    * does), so a corpus past that bound overflows the score. Merging
+    * stops when the best pair's raw frequency drops below `minCount`.
     *
     * Output: (rank, pair_a, pair_b, merged, weight, score). */
   def wordpieceTrain(documents: DataFrame, nMerges: Int = 16,
-      minCount: Long = 2, samplePct: Int = 100): DataFrame = {
+      minCount: Long = 2): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    wordpieceTrainSeg(documents, nMerges, minCount, samplePct)._1
+    wordpieceTrainSeg(documents, nMerges, minCount)._1
       .toDF("rank", "pair_a", "pair_b", "merged", "weight", "score")
       .orderBy("rank")
   }
@@ -1361,20 +1358,20 @@ object TextAnalysis {
     * segmentation table (the join target of [[wordpieceEncode]]);
     * memoized per session like [[bpeTrainSeg]]. */
   private def wordpieceTrainSeg(documents: DataFrame, nMerges: Int,
-      minCount: Long, samplePct: Int)
+      minCount: Long)
       : (Seq[(Int, String, String, String, Long, Long)], DataFrame) = {
     evictDead(wpTrained, documents.sparkSession.sparkContext.applicationId)
     wpTrained.computeIfAbsent(
-      memoKey(documents, nMerges, minCount, samplePct),
-      _ => wordpieceTrainSegUncached(documents, nMerges, minCount, samplePct))
+      memoKey(documents, nMerges, minCount),
+      _ => wordpieceTrainSegUncached(documents, nMerges, minCount))
   }
 
   private def wordpieceTrainSegUncached(documents: DataFrame, nMerges: Int,
-      minCount: Long, samplePct: Int)
+      minCount: Long)
       : (Seq[(Int, String, String, String, Long, Long)], DataFrame) = {
     val spark = documents.sparkSession
     import spark.implicits._
-    var vocab = symbolVocab(documents, samplePct)
+    var vocab = symbolVocab(documents)
     def lit1(s: String) = s.replace("\\", "\\\\").replace("'", "\\'")
     val merges = Seq.newBuilder[(Int, String, String, String, Long, Long)]
     var rank = 0
@@ -1433,11 +1430,10 @@ object TextAnalysis {
     * is a `##`-continuation, so `n_continuations = n_pieces - n_words`
     * and `pct_continuation` measures how fragmented the tokenizer
     * leaves the corpus (the BERT-vocab quality headline next to
-    * fertility). Words outside a sampled training set fall back to
-    * character segmentation. */
+    * fertility). */
   def wordpieceEncode(documents: DataFrame, nMerges: Int = 16,
-      minCount: Long = 2, samplePct: Int = 100): DataFrame = {
-    val (_, seg) = wordpieceTrainSeg(documents, nMerges, minCount, samplePct)
+      minCount: Long = 2): DataFrame = {
+    val (_, seg) = wordpieceTrainSeg(documents, nMerges, minCount)
     documents
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .where(length(col("w")) > 0)
@@ -1459,7 +1455,7 @@ object TextAnalysis {
       .orderBy("source")
   }
 
-  /** DuckDB replay of [[wordpieceEncode]] (samplePct=100): round-`n`
+  /** DuckDB replay of [[wordpieceEncode]]: round-`n`
     * vocabulary as the word→pieces map, same join and rollup. */
   def wordpieceEncodeSql(nMerges: Int = 16, minCount: Long = 2): String = {
     val u = ""

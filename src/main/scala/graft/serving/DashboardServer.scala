@@ -31,7 +31,9 @@ import graft.streaming.MetricsReader
   * `timePatternForLastMinutes`; `lastMinutes` defaults to 10. JSON is
   * rendered by hand — the payloads are flat arrays of
   * `{"timestamp": …, "metric": …}` / `{"dimensions": […], "metric": …}`
-  * objects, so no serializer dependency is warranted.
+  * objects, so no serializer dependency is warranted. Every string that
+  * comes from outside the program (a request path, a variant name from
+  * the event stream) is written through [[DashboardServer.jsonString]].
   *
   * Built on the JDK's `com.sun.net.httpserver` (zero added
   * dependencies); `clock` is injectable so tests pin "now" — the
@@ -79,8 +81,11 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
     try os.write(bytes) finally os.close()
   }
 
+  private def error(msg: String): String =
+    s"""{"error":${DashboardServer.jsonString(msg)}}"""
+
   private def notFound(ex: HttpExchange): Unit =
-    respond(ex, s"""{"error":"no such path: ${ex.getRequestURI.getPath}"}""", 404)
+    respond(ex, error(s"no such path: ${ex.getRequestURI.getPath}"), 404)
 
   /** A context matches every path it is a string prefix of, so a handler
     * answers only its exact path: `/variantsOverlapX` is a 404, not an
@@ -90,9 +95,8 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
       if (ex.getRequestURI.getPath != path) notFound(ex)
       else try respond(ex, handler(ex))
       catch {
-        case BadRequest(msg) => respond(ex, s"""{"error":"$msg"}""", 400)
-        case t: Throwable =>
-          respond(ex, s"""{"error":"${t.getClass.getSimpleName}"}""", 500)
+        case BadRequest(msg) => respond(ex, error(msg), 400)
+        case t: Throwable => respond(ex, error(t.getClass.getSimpleName), 500)
       })
 
   route("/metrics/timeseries/visits") { ex =>
@@ -106,7 +110,8 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
   }
   route("/metrics/timeseries/variantsOverlap") { _ =>
     store.overlap("set_var_").map { case (a, b, n) =>
-      s"""{"dimensions":["$a","$b"],"metric":$n}"""
+      val dims = Seq(a, b).map(DashboardServer.jsonString).mkString(",")
+      s"""{"dimensions":[$dims],"metric":$n}"""
     }.mkString("[", ",", "]")
   }
   route("/metrics/timeseries/times") { ex =>
@@ -139,6 +144,19 @@ class DashboardServer(store: MetricsReader, port: Int = 0,
 object DashboardServer {
   /** Upper bound of `lastMinutes`: one day of minutes. */
   val MaxLastMinutes = 1440
+
+  /** `s` as a JSON string literal: quotes, backslashes and control
+    * characters escaped (RFC 8259 §7). */
+  private[serving] def jsonString(s: String): String = {
+    val b = new StringBuilder(s.length + 2).append('"')
+    s.foreach {
+      case '"' => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
 
   /** Turns on TCP_NODELAY for the JDK HTTP server's connections, unless
     * `sun.net.httpserver.nodelay` is already set. Without it, Nagle's

@@ -288,27 +288,17 @@ class ContractSpec extends AnyFunSuite {
     val nnd = Similarity.nnDescentRecall(emb).collect()(0)
     assert(nnd.getAs[Double]("recall_at_k") >= 0.60,
       s"nnd graph recall@10 ${nnd.getAs[Double]("recall_at_k")} below floor")
-    // churn exit (Dong et al. §2.3): granted a deep rounds budget it
-    // must respect the budget and hold the family's recall floor, and
-    // a disabled exit must spend the full budget (the band-stable
-    // catalog default). WHEN the exit fires is a property of the
-    // FIXTURE's convergence, not of the operator — the measured
-    // round counts live in SCALE.md §7.12 (4/6 at sf0.01, 6/10 at
-    // sf0.1), and NndConvergenceProbe re-measures them; asserting
-    // `roundsRun < 6` here would fail on a regenerated fixture with
-    // no operator bug (r17 advisory). Likewise exit-vs-fixed recall
-    // ordering is convergence-dependent noise at 500 vectors — the
-    // contract is the absolute floor.
-    val nndExit = Similarity
-      .nnDescentRecall(emb, rounds = 6, churnExit = 0.05).collect()(0)
-    val roundsRun = Similarity.lastDescentRounds.get()
-    assert(roundsRun <= 6,
-      s"descent overran its rounds budget: $roundsRun > 6")
-    assert(nndExit.getAs[Double]("recall_at_k") >= 0.60,
-      s"churn-exit recall ${nndExit.getAs[Double]("recall_at_k")} " +
-        "below the family floor 0.60")
-    Similarity.nnDescentGraph(emb, k = 10, rounds = 3).count()
-    assert(Similarity.lastDescentRounds.get() === 3,
-      "disabled exit must run the full fixed budget")
+    // a 3-round descent takes the lineage-truncation branch (round 2
+    // is a localCheckpoint'd mid round) and must still hand back the
+    // graph contract: every node, ranks 1..k, no self edges
+    val deep = Similarity.nnDescentGraph(emb, k = 10, rounds = 3).collect()
+      .groupBy(_.getAs[Long]("node_id"))
+    assert(deep.size.toLong === emb.count(), "3-round graph must cover every node")
+    deep.foreach { case (node, rows) =>
+      assert(rows.map(_.getAs[Long]("rank")).sorted.toList ===
+        (1L to 10L).toList, s"3-round node $node ranks")
+      assert(rows.forall(_.getAs[Long]("neighbor_id") != node),
+        s"3-round self edge at $node")
+    }
   }
 }

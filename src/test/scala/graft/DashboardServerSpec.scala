@@ -127,4 +127,26 @@ class DashboardServerSpec extends AnyFunSuite {
       assert(fetch(port, "/metrics/timeseries/variantsOverlapApprox").statusCode === 404)
     } finally { srv.stop(); sink.close(); redis.close() }
   }
+
+  test("outside strings are JSON-escaped: a decoded 404 path and variant names with quote and backslash") {
+    val store = new MetricsStore
+    // variant names come from the event stream, so they may hold any text
+    store.sadd("set_var_a\"b", Seq("u1", "u2"))
+    store.sadd("set_var_c\\d", Seq("u2"))
+    val srv = new DashboardServer(store, port = 0).start()
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    try {
+      val port = srv.boundPort
+      // URI.getPath decodes %22 and %5C, so the 404 body echoes a raw
+      // quote and backslash
+      val nf = fetch(port, "/x%22y%5Cz")
+      assert(nf.statusCode === 404)
+      assert(json.readTree(nf.body).get("error").asText === "no such path: /x\"y\\z")
+      val ov = json.readTree(get(port, "/metrics/timeseries/variantsOverlap"))
+      assert(ov.size === 1)
+      val dims = ov.get(0).get("dimensions")
+      assert(Set(dims.get(0).asText, dims.get(1).asText) === Set("a\"b", "c\\d"))
+      assert(ov.get(0).get("metric").asLong === 1L)
+    } finally srv.stop()
+  }
 }

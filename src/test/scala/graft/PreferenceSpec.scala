@@ -493,49 +493,6 @@ class PreferenceSpec extends AnyFunSuite {
     assert(!e2.getAs[Boolean]("significant"))
   }
 
-  test("winrateBootstrapCi: the xxhash64 scale kernel agrees with md5 everywhere the statistic is draw-free") {
-    // same fixture as above: e1's all-wins CI is [1,1] REGARDLESS of
-    // the draws, and every point-estimate column is kernel-free —
-    // only e2's CI endpoints may move, and only within the resample
-    // scatter (both must still straddle the 50/50 truth)
-    val rows =
-      (1 to 12).flatMap(u => Seq(
-        (u.toLong, "A", 10.0, """{"k":"e1"}"""),
-        (u.toLong, "B", 5.0, """{"k":"e1"}"""))) ++
-      (1 to 12).flatMap { u =>
-        val (a, b) = if (u % 2 == 0) (10.0, 5.0) else (5.0, 10.0)
-        Seq((u.toLong, "A", a, """{"k":"e2"}"""),
-          (u.toLong, "B", b, """{"k":"e2"}"""))
-      }
-    val df = rows.toDF("user_id", "event_type", "value", "props")
-    val md5 = Preference.winrateBootstrapCi(df).collect()
-    val xx = Preference
-      .winrateBootstrapCi(df, kernel = "xxhash64").collect()
-    assert(xx.length === md5.length)
-    xx.zip(md5).foreach { case (x, m) =>
-      // draw-free columns bit-equal across kernels
-      Seq("experiment_id", "item_a", "item_b").foreach(c =>
-        assert(x.getAs[String](c) === m.getAs[String](c)))
-      Seq("n_comparisons", "wins_a").foreach(c =>
-        assert(x.getAs[Long](c) === m.getAs[Long](c)))
-      assert(x.getAs[Double]("win_rate") === m.getAs[Double]("win_rate"))
-    }
-    val x1 = xx(0); val x2 = xx(1)
-    assert(x1.getAs[Double]("ci_lo") === 1.0)
-    assert(x1.getAs[Double]("ci_hi") === 1.0)
-    assert(x1.getAs[Boolean]("significant"))
-    assert(x2.getAs[Double]("ci_lo") <= 0.5)
-    assert(x2.getAs[Double]("ci_hi") >= 0.5)
-    assert(!x2.getAs[Boolean]("significant"))
-    // determinism: the xxhash64 draws are a pure function of the keys
-    val xx2 = Preference
-      .winrateBootstrapCi(df, kernel = "xxhash64").collect()
-    assert(xx.map(_.toString).toSeq === xx2.map(_.toString).toSeq)
-    intercept[IllegalArgumentException] {
-      Preference.winrateBootstrapCi(df, kernel = "fnv")
-    }
-  }
-
   test("winrateBootstrapCi: significant directions agree with btStrength's ranking on the same judgments") {
     // A ≻ B ≻ C with one fully-reversed judge: 8/9 win rates every
     // pair — significant, and BT (same comparison rule, single

@@ -440,24 +440,4 @@ class SimilaritySpec extends AnyFunSuite {
       .getAs[Double]("recall_at_k")
     assert(r2 >= r1 - 1e-9, s"round 2 recall $r2 below round 1 $r1")
   }
-
-  test("nnDescentGraph: the ρ-sampled local join keeps the graph contract (full cover, k ranks, no self edges)") {
-    // the flag's REGIME is large-k until-convergence builds (its
-    // recall at this k/rounds is the documented §7.11 negative
-    // result); this pins the structural contract so the flag can't
-    // silently break: sampling thins PROPOSALS only, never the
-    // merge with current edges, so coverage and rank shape survive
-    val emb = Tables.embeddings(spark, TestSpark.Sf0001)
-    val k = 10
-    val g = Similarity.nnDescentGraph(emb, k = k, rho = 0.5).collect()
-    val byNode = g.groupBy(_.getAs[Long]("node_id"))
-    assert(byNode.size.toLong === emb.count())
-    byNode.foreach { case (node, rows) =>
-      assert(rows.map(_.getAs[Long]("rank")).sorted.toList ===
-        (1L to k).toList, s"node $node ranks")
-      assert(rows.forall(_.getAs[Long]("neighbor_id") != node))
-    }
-    intercept[IllegalArgumentException](
-      Similarity.nnDescentGraph(emb, rho = 0.0))
-  }
 }

@@ -597,7 +597,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streamed winrate bootstrap CI ≡ batch winrateBootstrapCi bit-exact at BOTH kernels") {
+  test("streamed winrate bootstrap CI ≡ batch winrateBootstrapCi bit-exact") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     // 8 judges × 3 items × 2 experiments; (i % 11) values make the
@@ -616,34 +616,31 @@ class StreamingSpec extends AnyFunSuite {
     // encoder would NPE on the NULL-CI surfacing path if it fired)
     def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
       df.collect().map(_.toSeq).toSet
-    for (kernel <- Seq("md5", "xxhash64")) {
-      val input = MemoryStream[(String, String, Double, String)]
-      val q = startReadout(Preference.winrateUt(
-        input.toDS().toDF("user_id", "event_type", "value", "props")),
-        s"winrate_stream_$kernel")(ut =>
-          Preference.winrateFromComps(Preference.winrateComps(ut), 48, kernel))
-      def batchAt(rs: Seq[(String, String, Double, String)]) = rowSet(
-        graft.operators.Preference.winrateBootstrapCi(
-          toDf(rs), replicates = 48, kernel = kernel))
-      try {
-        input.addData(rows.take(17))
-        q.processAllAvailable()
-        // after EVERY cut the published readout equals the batch face:
-        // the decimal judge grain is exact-associative and the tail is
-        // the SAME code (Preference.winrateFromComps)
-        assert(rowSet(spark.table(s"winrate_stream_$kernel"))
-          === batchAt(rows.take(17)))
-        input.addData(rows.slice(17, 18)) // single-row batch
-        q.processAllAvailable()
-        input.addData(rows.drop(18))
-        q.processAllAvailable()
-        val streamed = rowSet(spark.table(s"winrate_stream_$kernel"))
-        assert(streamed === batchAt(rows))
-        // 3 pairs × 2 experiments, CIs populated, win rates in [0,1]
-        assert(streamed.size === 6)
-        assert(streamed.forall(r => r(6) != null && r(7) != null))
-      } finally q.stop()
-    }
+    val input = MemoryStream[(String, String, Double, String)]
+    val q = startReadout(Preference.winrateUt(
+      input.toDS().toDF("user_id", "event_type", "value", "props")),
+      "winrate_stream")(ut =>
+        Preference.winrateFromComps(Preference.winrateComps(ut), 48))
+    def batchAt(rs: Seq[(String, String, Double, String)]) = rowSet(
+      graft.operators.Preference.winrateBootstrapCi(
+        toDf(rs), replicates = 48))
+    try {
+      input.addData(rows.take(17))
+      q.processAllAvailable()
+      // after EVERY cut the published readout equals the batch face:
+      // the decimal judge grain is exact-associative and the tail is
+      // the SAME code (Preference.winrateFromComps)
+      assert(rowSet(spark.table("winrate_stream")) === batchAt(rows.take(17)))
+      input.addData(rows.slice(17, 18)) // single-row batch
+      q.processAllAvailable()
+      input.addData(rows.drop(18))
+      q.processAllAvailable()
+      val streamed = rowSet(spark.table("winrate_stream"))
+      assert(streamed === batchAt(rows))
+      // 3 pairs × 2 experiments, CIs populated, win rates in [0,1]
+      assert(streamed.size === 6)
+      assert(streamed.forall(r => r(6) != null && r(7) != null))
+    } finally q.stop()
   }
 
   test("streamed pass@k ≡ batch passAtK bit-exact under uneven slicing") {
