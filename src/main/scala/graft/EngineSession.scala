@@ -16,6 +16,16 @@ import org.apache.spark.sql.SparkSession
   * below). A static conf takes effect only on the session that creates
   * the JVM's first context, which is one more reason every entry point
   * builds here.
+  * The streaming checkpoint manager is one of these, because it decides
+  * whether each micro-batch forks processes from the driver. Without
+  * the native libhadoop, Hadoop's local filesystem forks a shell command
+  * for each permission change and link lookup. `jdk.ProcessStart` in a
+  * JFR recording of one perfbench `live` run counted 530 forks (424
+  * `readlink`, 106 `chmod 0644`): 10 per log entry, 20 per micro-batch,
+  * and `walCommit` and `commitOffsets` took 32 ms each of a ~200 ms
+  * cycle. [[graft.streaming.LocalCheckpointFiles]] writes `file:` paths
+  * through java.nio and forks nothing (1–2 ms for each of those
+  * phases); other schemes keep Spark's default manager.
   * What does not: per-tool knobs (master/core count, shuffle
   * partitions, UI) — those stay caller-supplied because the driver
   * varies them (`SPARK_GRAFT_CPUS`) to measure scaling.
@@ -54,6 +64,12 @@ object EngineSession {
       // class. The whole 258-query catalog compiles ~3,900 distinct
       // classes, so a sweep over all of it still evicts.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // The streaming checkpoint manager (why: the scaladoc above).
+      // Rejected: naming Spark's own FileSystemBasedCheckpointFileManager
+      // here. It measured 6.5 ms per log write against the default's
+      // 27 ms, but it still forks two `chmod` per write.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFiles].getName)
       .config("spark.ui.enabled", "false")
 
   /** The engine's local session: `local[cpus]` master, shuffle

@@ -299,7 +299,12 @@ object StreamingMetrics {
     * lifecycle. With `checkpointRoot` it checkpoints under
     * `checkpointRoot/`[[FanOutQuery]] — the restartable production form:
     * an abrupt kill re-delivers at most the in-flight batch, which the
-    * ledger (INCRBY) and idempotence (SADD, PFADD) absorb. A
+    * ledger (INCRBY) and idempotence (SADD, PFADD) absorb. Without it
+    * Spark checkpoints in a temporary directory under `java.io.tmpdir`.
+    * Either way each micro-batch writes one offsets-log entry before it
+    * runs and one commit-log entry after, through the session's
+    * checkpoint manager, [[LocalCheckpointFiles]] (java.nio on a local
+    * path, no process forked; Spark's default manager elsewhere). A
     * `checkpointRoot` written by the earlier one-query-per-branch layout
     * (`visits_counter`, `set_users_minute`, … subdirectories) cannot be
     * resumed and is refused. `DashboardMain` runs it on either store. */

@@ -246,6 +246,52 @@ class ContractSpec extends AnyFunSuite {
     assert(starters === Seq("startPipeline"))
   }
 
+  test("no process forks on the hot path: checkpointed micro-batches and a memoized table read") {
+    // Hadoop's local filesystem without libhadoop forks readlink, chmod
+    // and `ls -ld` per file it creates, renames or stats for permissions;
+    // a JFR recording of this JVM counts every such start
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.sources.Tables
+    import graft.streaming.{MetricsStore, StreamingMetrics}
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[LogEvent]
+    val root = java.nio.file.Files.createTempDirectory("graft_forks")
+    def ev(uid: String, t: String) =
+      LogEvent(uid, "e1", "1", java.sql.Timestamp.valueOf(s"2026-08-12 10:15:$t"))
+    Tables.table(spark, TestSpark.Sf0001, "region") // infers and memoizes
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val qs = StreamingMetrics.startPipeline(input.toDS(), new MetricsStore,
+      checkpointRoot = Some(root.toString))
+    try {
+      rec.start()
+      for (i <- 1 to 3) {
+        input.addData(ev(s"u$i", f"$i%02d"))
+        qs.foreach(_.processAllAvailable())
+      }
+      assert(Tables.table(spark, TestSpark.Sf0001, "region").count() === 5L)
+      rec.stop()
+    } finally qs.foreach(_.stop())
+    val file = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+    try {
+      rec.dump(file)
+      val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+      if (forks.nonEmpty) fail(s"${forks.size} processes started:\n" + forks.map { e =>
+        val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+          .filterNot(f => f.startsWith("java.") || f.startsWith("org.apache.hadoop.util.Shell"))
+        s"  ${e.getString("command")}\n" + frames.take(8).map("    at " + _).mkString("\n")
+      }.mkString("\n"))
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(file)
+    }
+    assert(java.nio.file.Files.exists(
+      root.resolve(StreamingMetrics.FanOutQuery).resolve("commits").resolve("2")))
+  }
+
   test("approximate ANN indexes clear their recall@10 floor") {
     import graft.operators.Similarity
     import graft.sources.Tables

@@ -308,6 +308,40 @@ class StreamingSpec extends AnyFunSuite {
     assert(store.counter("visitCounter_2026_08_12T10_15") === 3L)
   }
 
+  test("a checkpoint root written by Spark's default manager resumes exactly under the engine's") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val engine = spark.conf.get(key)
+    assert(engine === classOf[graft.streaming.LocalCheckpointFiles].getName)
+    val input = MemoryStream[LogEvent]
+    val store = new MetricsStore
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_default")
+    val commits = root.resolve(StreamingMetrics.FanOutQuery).resolve("commits")
+    def run(): Unit = {
+      val qs = StreamingMetrics.startPipeline(input.toDS(), store,
+        checkpointRoot = Some(root.toString))
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    }
+    input.addData(
+      ev("u1", "e1", "1", "2026-08-12 10:15:03"),
+      ev("u2", "e1", "1", "2026-08-12 10:15:40"))
+    spark.conf.set(key, classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileContextBasedCheckpointFileManager].getName)
+    try run() finally spark.conf.set(key, engine)
+    assert(store.counter("visitCounter_2026_08_12T10_15") === 2L)
+    // Hadoop's checksummed local filesystem wrote the first commit
+    assert(java.nio.file.Files.exists(commits.resolve(".0.crc")))
+
+    input.addData(ev("u3", "e1", "1", "2026-08-12 10:15:55"))
+    run()
+    // only the new event is delivered: a replay of batch 0 would read 5
+    assert(store.counter("visitCounter_2026_08_12T10_15") === 3L)
+    // the engine's manager wrote the second commit, with no checksum file
+    assert(java.nio.file.Files.exists(commits.resolve("1")))
+    assert(!java.nio.file.Files.exists(commits.resolve(".1.crc")))
+  }
+
   test("file-source E2E: JSON files drive the full pipeline; checkpointed restart skips processed files") {
     import spark.implicits._
     // the source boundary the sandbox can exercise: the reference reads
